@@ -22,10 +22,10 @@ object Tables {
     * at second/hour/month granularity (never output raw ts, SURVEY §7.4).
     */
   /** Conf key letting Spark 4 read TIMESTAMP(NANOS) parquet as long.
-    * Session builders (Bench/Verify) set it at construction; `load` only
-    * check-before-sets as a fallback for bare test sessions, so it stays
-    * effectively read-only (no repeated conf mutation, no race when
-    * queries share a session).
+    * `graft.Session.local` sets it at construction; `load` only
+    * check-before-sets as a fallback for sessions built elsewhere, so it
+    * stays effectively read-only (no repeated conf mutation, no race
+    * when queries share a session).
     */
   val NanosConf = "spark.sql.legacy.parquet.nanosAsLong"
 

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{array_join, col}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -17,25 +17,25 @@ object Verify {
       d.withColumn(c, array_join(col(c).cast("array<string>"), ","))
     }
 
+  /** The one `oracle_sql.json` writer (Verify, OracleDump, the fuzz
+    * sweeps): a key-sorted JSON object of query name → DuckDB SQL, so two
+    * dumps of the same map are byte-identical. Escaping goes through
+    * Bench.jsonQuote: a tab or CR in hand-written SQL would otherwise
+    * make the oracle compare's json.load fail and silently skip every
+    * correctness check.
+    */
+  def writeOracleSql(path: String, sql: Map[String, String]): Unit =
+    Files.writeString(Paths.get(path), sql.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"${Bench.jsonQuote(k)}: ${Bench.jsonQuote(v)}" }
+      .mkString("{", ",", "}"))
+
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query names (fast local
     // single-query iteration); the driver always passes exactly two
     val Array(sfDir, outDir) = args.take(2)
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = Bench.defaultCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosConf, "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-              graft.Bench.codegenCacheEntries)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // exercise the SQL-function registration path on the live session
-    GraftExtensions.registerAll(spark)
+    val spark = Session.local(Session.defaultCpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -48,13 +48,7 @@ object Verify {
       // queries persist intermediates; don't let 50 queries' caches pile up
       spark.catalog.clearCache()
     }
-    // shared JSON escape (Bench.jsonQuote): a tab or CR in
-    // builder-authored SQL would otherwise make the driver's json.load
-    // fail and silently zero the round's correctness
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${Bench.jsonQuote(k)}: ${Bench.jsonQuote(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(s"$outDir/oracle_sql.json", SparkEntry.oracleSql)
     spark.stop()
   }
 }

@@ -25,12 +25,13 @@ object CoreOps {
     * it is scale-adaptive and never shuffles a large corpus:
     *
     *  1. NARROW-PLAN gate: only scan-rooted frames (project/filter/
-    *     repartition over a file scan or local relation) are eligible.
-    *     Anything with a join/aggregate/window declines — both because
-    *     the helper's purpose is floor-the-SCAN, and because probing
-    *     `.rdd` under AQE on a plan with exchanges would eagerly execute
-    *     those upstream stages in a separate QueryExecution just to read
-    *     a partition count (r11 advisor catch; latent then, closed now).
+    *     non-shuffling coalesce over a file scan or local relation) are
+    *     eligible. Anything that plans an exchange — a join, aggregate,
+    *     window, or a shuffling `repartition` — declines: the helper's
+    *     purpose is floor-the-SCAN, and probing `.rdd` under AQE on a
+    *     plan with exchanges eagerly executes those upstream stages in a
+    *     separate QueryExecution just to read a partition count
+    *     (CoreOpsSpec pins zero probe jobs on a repartitioned frame).
     *  2. BYTE ceiling: the scan leaves' estimated bytes must fit
     *     p·maxPartitionBytes — partition count alone is a size proxy
     *     that a few-split-but-wide frame defeats (31 multi-GB gzip
@@ -39,8 +40,8 @@ object CoreOps {
     *  3. Planned partition count below the session's default
     *     parallelism (any real multi-split table — a 100 TB scan has
     *     ~10⁶ splits — returns UNCHANGED with no exchange in the plan).
-    *     The `.rdd` probe is safe here: gate 1 guarantees the plan has
-    *     no exchanges, so nothing executes.
+    *     The `.rdd` probe only plans here: gate 1 admits no node that
+    *     plans an exchange, so no stage exists for AQE to run.
     *
     * When it fires, the one exchange moves only this small frame's
     * bytes — hash-routed on `keys` when given (no local sort; the
@@ -53,9 +54,9 @@ object CoreOps {
     val p = df.sparkSession.sparkContext.defaultParallelism
     val plan = df.queryExecution.analyzed
     val complex = plan.exists {
-      case _: Project | _: Filter | _: SubqueryAlias | _: Repartition |
-           _: RepartitionByExpression | _: LocalRelation |
+      case _: Project | _: Filter | _: SubqueryAlias | _: LocalRelation |
            _: LogicalRelation => false
+      case r: Repartition => r.shuffle // only coalesce plans no exchange
       case _ => true
     }
     if (complex) return df // gate 1: not scan-rooted — decline

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{Session, SparkEntry}
 
 /** Dump formatted physical plans for the named queries (dev tool for the
   * plan audit: pushdown, pruning, broadcast, codegen spans).
@@ -13,12 +11,7 @@ object Explain {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.defaultCpus)
     names.foreach { name =>
       println(s"\n================ $name ================")
       try println(SparkEntry.queries(name)(spark, dir)

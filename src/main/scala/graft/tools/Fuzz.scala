@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Bench, GraftExtensions, SparkEntry, Tables}
+import graft.{Bench, Session, SparkEntry, Tables, Verify}
 import graft.dedup.DedupOps
 import graft.similarity.SimilarityOps
 
@@ -1595,29 +1595,12 @@ object Fuzz {
       spark.catalog.clearCache()
     }
 
-    val json = oracle.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${Bench.jsonQuote(k)}: ${Bench.jsonQuote(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Verify.writeOracleSql(s"$outDir/oracle_sql.json", oracle)
     Files.writeString(Paths.get(s"$outDir/fuzz_manifest.json"),
       manifest.mkString("[", ",\n", "]"))
     println(s"[fuzz] done: $nOk ok, $nErr spark-side errors, " +
       s"seed=$seed n=$n families=${fams.map(_._1).mkString(",")}")
     (nOk, nErr)
-  }
-
-  private[tools] def buildSession(): SparkSession = {
-    val cpus = Bench.defaultCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosConf, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.registerAll(spark)
-    spark
   }
 
   def main(args: Array[String]): Unit = {
@@ -1627,7 +1610,7 @@ object Fuzz {
     val seed = if (args.length > 3) args(3).toLong else 9L
     val fams = resolveFamilies(args.lift(4).getOrElse("all"))
     require(fams.nonEmpty, s"no matching families in ${args.lift(4)}")
-    val spark = buildSession()
+    val spark = Session.local(Session.defaultCpus)
     val (_, nErr) = runSweep(spark, sfDir, outDir, n, seed, fams)
     spark.stop()
     if (nErr > 0) sys.exit(2)

@@ -1,8 +1,6 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
-import graft.{Bench, SparkEntry}
+import graft.{SparkEntry, Verify}
 
 /** Dump `SparkEntry.oracleSql` as JSON without starting Spark — lets a
   * refactor of the oracle builders be diffed byte-for-byte against the
@@ -11,10 +9,7 @@ import graft.{Bench, SparkEntry}
 object OracleDump {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "target/oracle_dump.json"
-    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${Bench.jsonQuote(k)}: ${Bench.jsonQuote(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(out), json)
+    Verify.writeOracleSql(out, SparkEntry.oracleSql)
     println(s"[oracle-dump] ${SparkEntry.oracleSql.size} queries -> $out")
   }
 }

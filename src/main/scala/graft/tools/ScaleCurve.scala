@@ -6,7 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{SparkEntry, Tables}
+import graft.{Session, SparkEntry, Tables}
 
 /** Empirical scaling curve for the headline dedup/ANN operators (r10
   * verdict task 1 — convert the 100 TB claim from design audit to
@@ -30,7 +30,7 @@ import graft.{SparkEntry, Tables}
   * replicate verbatim: ANN cost is corpus-scan/IO-bound, and identical
   * vectors don't change list balance or probe cost.
   *
-  * Usage (env SPARK_GRAFT_CPUS / SPARK_GRAFT_RUNS as in Bench/TimeQ):
+  * Usage (env SPARK_GRAFT_CPUS / SPARK_GRAFT_RUNS as in Bench/Probe):
   *   runMain graft.tools.ScaleCurve [baseSfDir] [workDir] [scalesCsv] [qCsv]
   * defaults: /root/testdata/sf0.1  target/scale  1,2,4,8  headline-5.
   *
@@ -118,21 +118,7 @@ object ScaleCurve {
     val qs = args.lift(3).map(_.split(",").toSeq).getOrElse(headline)
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
 
-    val cpus = graft.Bench.defaultCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(Tables.NanosConf, "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-              graft.Bench.codegenCacheEntries)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-              "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftExtensions.registerAll(spark)
+    val spark = Session.local(Session.defaultCpus)
 
     @volatile var jobs = 0
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -148,7 +134,7 @@ object ScaleCurve {
     for (q <- qs; s <- scales) {
       val fn = SparkEntry.queries.getOrElse(q, sys.error(s"unknown query $q"))
       val best = (1 to runs).map { _ =>
-        spark.catalog.clearCache()
+        Session.dropCaches(spark)
         val j0 = jobs
         val t0 = System.nanoTime()
         val n = fn(spark, dirs(s)).count()

@@ -43,7 +43,6 @@ class BloomSpec extends SparkSpec {
   }
 
   test("SQL registration matches the Column API bit-for-bit") {
-    GraftExtensions.registerAll(spark)
     val df = (0L until 500L).map(i => i * 0x9e3779b97f4a7c15L).toDF("h")
     df.createOrReplaceTempView("bloom_in")
     val viaSql = spark.sql(
@@ -112,7 +111,6 @@ class BloomSpec extends SparkSpec {
 
   test("sharded filter: no false negatives across shards (incl. negative " +
        "hashes), empty shards safe, SQL ≡ Column API") {
-    GraftExtensions.registerAll(spark)
     val rnd = new scala.util.Random(17)
     // negative longs exercise the pmod shard selector; shards = 7 with
     // hashes drawn so at least one shard stays EMPTY (all ≡ 0 mod 7)

@@ -32,7 +32,6 @@ class CmsSpec extends SparkSpec {
   }
 
   test("SQL registration matches the Column API") {
-    GraftExtensions.registerAll(spark)
     val df = (0L until 300L).map(i => i % 50L).toDF("h")
     df.createOrReplaceTempView("cms_in")
     val viaSql = spark.sql(

@@ -64,7 +64,6 @@ class CompressSpec extends SparkSpec {
   }
 
   test("SQL registration: deflate_len callable after extensions") {
-    GraftExtensions.registerAll(spark)
     spark.sql("SELECT deflate_len('aaaaaaaaaa') AS n").collect()
       .foreach(r => assert(r.getLong(0) > 0))
   }

@@ -25,12 +25,43 @@ class CoreOpsSpec extends SparkSpec {
 
   test("spreadSmallScan is a no-op (no added exchange) at/above parallelism") {
     val p = spark.sparkContext.defaultParallelism
+    // a local relation of 64 rows already plans min(64, p) partitions
     val df = Seq.tabulate(64)(i => (i.toLong, s"v$i")).toDF("id", "v")
-      .repartition(p + 2, col("id"))
+    assert(df.rdd.getNumPartitions >= p)
     val spread = CoreOps.spreadSmallScan(df, col("id"))
     // the SAME plan object comes back: the gate adds nothing at scale
     assert(spread eq df,
       "an already-parallel frame must pass through unchanged")
+  }
+
+  test("spreadSmallScan runs no job on a shuffled small frame") {
+    // the gate-3 `.rdd` probe under AQE executes any exchange below it;
+    // a shuffling repartition must therefore decline at gate 1
+    val small = Seq.tabulate(64)(i => (i.toLong, s"v$i")).toDF("id", "v")
+      .repartition(2)
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(String.valueOf(
+          e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      CoreOps.spreadSmallScan(small, col("id"))
+      // the bus delivers in order: once the sentinel job's start has
+      // arrived, every job the probe started has been counted
+      sc.setJobGroup("sentinel", "listener drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!started.contains("sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(started.contains("sentinel"), "listener bus never drained")
+      started.remove("sentinel")
+      assert(started.isEmpty,
+        s"spreadSmallScan started ${started.size} Spark job(s)")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("dropNulls drops rows with any null (P1)") {

@@ -119,7 +119,6 @@ class DdSpec extends SparkSpec {
   }
 
   test("SQL registry parity: dd_agg/dd_merge/dd_quantile = Column API") {
-    GraftExtensions.registerAll(spark)
     values.toDF("v").createOrReplaceTempView("dd_vals")
     val sql = spark.sql(
       """SELECT dd_quantile(dd_merge(s), 0.95, 0.01) FROM (

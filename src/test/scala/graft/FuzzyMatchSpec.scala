@@ -46,7 +46,6 @@ class FuzzyMatchSpec extends SparkSpec {
     assert(got(2L) === None)
     assert(got(3L) === None)
     // SQL surface
-    GraftExtensions.registerAll(spark)
     val sql = spark.sql(
       "SELECT round(jaro_winkler('martha', 'marhta'), 6)").head.getDouble(0)
     assert(sql === 0.961111)

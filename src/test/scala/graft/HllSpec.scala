@@ -110,7 +110,6 @@ class HllSpec extends SparkSpec {
   }
 
   test("SQL surface: hll_agg / hll_merge / hll_count registered") {
-    GraftExtensions.registerAll(spark)
     spark.range(2500).createOrReplaceTempView("hll_in")
     val est = spark.sql(
       s"SELECT hll_count(hll_agg(xxhash64(id), $P), $P) FROM hll_in")

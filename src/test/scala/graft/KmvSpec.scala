@@ -132,7 +132,6 @@ class KmvSpec extends SparkSpec {
   test("a parquet-persisted sketch table still serves kmv_count/" +
        "kmv_jaccard (containsNull=true round-trip accepted)") {
     import spark.implicits._
-    GraftExtensions.registerAll(spark)
     val path = graft.io.Sinks.scratchRoot + "/kmv_persist_spec"
     graft.io.Sinks.dropTable(spark, path)
     spark.range(500)
@@ -154,7 +153,6 @@ class KmvSpec extends SparkSpec {
   }
 
   test("SQL surface: kmv_* registered and composable") {
-    GraftExtensions.registerAll(spark)
     spark.range(3000).createOrReplaceTempView("kmv_in")
     val est = spark.sql(
       s"SELECT kmv_count(kmv_agg(xxhash64(id), 1024), 1024) FROM kmv_in")

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session per suite (UTC, small shuffle width). */
+/** One shared local session per suite: the `graft.Session` factory's
+  * session at a small width (4 cores, 4 shuffle partitions).
+  */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
@@ -11,13 +13,9 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.local(cpus = 4)
+    // the suites provoke errors on purpose; keep their WARN noise out
+    // of the test log
     s.sparkContext.setLogLevel("ERROR")
     s
   }

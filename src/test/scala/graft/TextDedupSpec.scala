@@ -132,7 +132,6 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("sorted_intersect_count skips null elements instead of crashing") {
-    GraftExtensions.registerAll(spark)
     val c = spark.sql(
       "SELECT sorted_intersect_count(array('a', 'b', NULL), array('a', NULL))")
       .head().getInt(0)

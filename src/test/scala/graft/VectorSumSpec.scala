@@ -37,7 +37,6 @@ class VectorSumSpec extends SparkSpec {
   }
 
   test("SQL registration: vector_sum usable from spark.sql") {
-    GraftExtensions.registerAll(spark)
     Tables.load(spark, sfDir, "embeddings").createOrReplaceTempView("vs_emb")
     val viaSql = spark.sql(
       """SELECT CAST(vec_id % 3 AS INT) AS g, vector_sum(embedding) AS s
