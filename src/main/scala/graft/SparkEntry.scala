@@ -372,7 +372,7 @@ object SparkEntry {
         .withColumn("ship_month", month(col("l_shipdate")))
         .repartition(col("ship_month"))
       Sinks.writePartitioned(li, "ship_month", path)
-      s.read.parquet(path)
+      Tables.read(s, path)
         .filter(col("ship_month") === 3) // prunes to 1/12 of files
         .agg(count(lit(1)).as("n"),
              round(sum(col("l_extendedprice")), 2).as("revenue"))
@@ -387,7 +387,7 @@ object SparkEntry {
       val path = scratch(dir, "sorted_scan")
       val ev = t(s, dir, "events").withColumn("day", dayofmonth(col("ts")))
       Sinks.writeSortedPartitioned(ev, "day", "ts", path)
-      s.read.parquet(path)
+      Tables.read(s, path)
         .filter(col("day").between(5, 10))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("v"))
     }),
@@ -399,7 +399,7 @@ object SparkEntry {
         .select(col("o_orderkey"), col("o_orderstatus"))
       Sinks.replaceLoad(src, path)  // full refresh…
       Sinks.appendLoad(src, path)   // …then one incremental append
-      s.read.parquet(path)
+      Tables.read(s, path)
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"))
     }),
@@ -820,17 +820,17 @@ object SparkEntry {
                coalesce(sum(when(pmod(col(idc), lit(97)) === 0, 1L)
                  .otherwise(0L)), lit(0L)).as("n_forgotten"))
           .withColumn("artifact", lit(name))
-      census("docs", s.read.parquet(docsT), "doc_id")
-        .unionByName(census("emb", s.read.parquet(embT), "vec_id"))
+      census("docs", Tables.read(s, docsT), "doc_id")
+        .unionByName(census("emb", Tables.read(s, embT), "vec_id"))
         .unionByName(census("ivf_lists",
-          s.read.parquet(s"$root/ivf/lists"), "vec_id"))
+          Tables.read(s, s"$root/ivf/lists"), "vec_id"))
         .unionByName(census("mh_sets",
-          s.read.parquet(s"$mhRoot/sets"), "id"))
+          Tables.read(s, s"$mhRoot/sets"), "id"))
         .unionByName(census("mh_buckets",
-          s.read.parquet(s"$mhRoot/buckets"), "id"))
+          Tables.read(s, s"$mhRoot/buckets"), "id"))
         .unionByName(census("bm25_postings",
-          s.read.parquet(s"$bmRoot/postings")
-            .join(s.read.parquet(s"$bmRoot/tombstones")
+          Tables.read(s, s"$bmRoot/postings")
+            .join(Tables.read(s, s"$bmRoot/tombstones")
                     .select(col("doc_id")), Seq("doc_id"), "left_anti"),
           "doc_id"))
         .select(col("artifact"), col("n_rows"), col("id_sum"),
@@ -872,7 +872,7 @@ object SparkEntry {
         docs.filter(pmod(col("doc_id"), lit(3)) === 0),
         "doc_id", "text", s"$path/table", s"$path/mh",
         tau = 0.7, minTokens = 20)
-      s.read.parquet(s"$path/table")
+      Tables.read(s, s"$path/table")
         .groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
     }),
 
@@ -926,7 +926,7 @@ object SparkEntry {
         "doc_id", "text", s"$path/table", s"$path/mh",
         tau = 0.7, minTokens = 20, checkpoint = s"$path/ckpt")
       try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$path/table")
+      Tables.read(s, s"$path/table")
         .groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
     }),
 
@@ -974,7 +974,7 @@ object SparkEntry {
         "doc_id", "text", mhRoot, tau = 0.7, pairsOut,
         checkpoint = s"$root/ckpt")
       try q.processAllAvailable() finally q.stop()
-      s.read.parquet(pairsOut)
+      Tables.read(s, pairsOut)
         .select(col("id_a"), col("id_b"), col("jaccard"))
     }),
 
@@ -1043,6 +1043,8 @@ object SparkEntry {
       o.select(col("o_orderkey"), col("o_totalprice"),
                col("o_orderstatus"))
         .write.mode("overwrite").parquet(s"$path/b=2")
+      // the one read off `Tables.read`: a merged schema needs every
+      // file's footer, which is Spark's inference job by design
       s.read.option("mergeSchema", "true")
         .parquet(s"$path/b=1", s"$path/b=2")
         .agg(count(lit(1)).as("n"),
@@ -1216,7 +1218,7 @@ object SparkEntry {
       Sinks.writePartitioned(
         assigned.join(docs.select(col("doc_id"), col("text")), Seq("doc_id")),
         "shard", path)
-      s.read.parquet(path)
+      Tables.read(s, path)
         // the partition dir reads back as int; the oracle census is long
         .groupBy(col("shard").cast("long").as("shard"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
@@ -2560,7 +2562,7 @@ object SparkEntry {
         .withColumn("c_acctbal", col("c_acctbal") * 2)
       Sinks.mergeByKey(updates, Seq("c_custkey"), path)
       Sinks.mergeByKey(updates, Seq("c_custkey"), path) // idempotent
-      s.read.parquet(path).agg(
+      Tables.read(s, path).agg(
         count(lit(1)).as("n"),
         sum(when(col("c_custkey") % 10 === 0, 1L).otherwise(0L))
           .as("n_updated"),
@@ -2623,7 +2625,7 @@ object SparkEntry {
         t(s, dir, "events").select(col("user_id"), col("event_type"),
                                    col("value")), path)
       Sinks.deleteWhere(s, path, col("user_id") % 7 === 0)
-      s.read.parquet(path).agg(
+      Tables.read(s, path).agg(
         count(lit(1)).as("n"),
         countDistinct(col("user_id")).as("n_users"),
         round(sum(col("value")), 4).as("total_value"))
@@ -2637,7 +2639,7 @@ object SparkEntry {
       t(s, dir, "documents").repartition(64)
         .write.mode("overwrite").parquet(path)
       Sinks.compact(s, path, 4)
-      s.read.parquet(path).agg(
+      Tables.read(s, path).agg(
         count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("total_chars"))
     }),
@@ -2656,7 +2658,7 @@ object SparkEntry {
       val m3 = li.filter(col("ship_month") === 3)
       Sinks.upsertPartition(m3, "ship_month", path)
       Sinks.upsertPartition(m3, "ship_month", path)
-      s.read.parquet(path)
+      Tables.read(s, path)
         .agg(count(lit(1)).as("n"),
              countDistinct(col("ship_month")).as("n_months"))
     }),
@@ -2814,7 +2816,7 @@ object SparkEntry {
       val late = ev.filter(dayofmonth(col("ts")) > 20)
       SketchOps.appendDailyValueSketches(s, path, late, "batch-2")
       SketchOps.appendDailyValueSketches(s, path, late, "batch-2")
-      SketchOps.quantileReport(s.read.parquet(s"$path/data"))
+      SketchOps.quantileReport(Tables.read(s, s"$path/data"))
     }),
 
     // Day-over-day retention from KMV cohort sketches (set-algebra
@@ -2851,7 +2853,7 @@ object SparkEntry {
       val late = ev.filter(dayofmonth(col("ts")) > 20)
       SketchOps.appendDailySketches(s, path, late)
       SketchOps.appendDailySketches(s, path, late) // at-least-once
-      SketchOps.verifiedTimeline(ev, s.read.parquet(path), p = 12)
+      SketchOps.verifiedTimeline(ev, Tables.read(s, path), p = 12)
         .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
                 col("exact_daily"), col("exact_to_date"),
                 col("daily_est_ok"), col("cum_est_ok"))
@@ -2868,7 +2870,7 @@ object SparkEntry {
         t(s, dir, "events").select(col("event_id"), col("user_id"),
                                    col("value")),
         Seq("user_id", "value"), path, 16)
-      s.read.parquet(path).agg(
+      Tables.read(s, path).agg(
         count(lit(1)).as("n"),
         sum(col("user_id")).as("uid_sum"),
         round(sum(col("value")), 4).as("v"))
@@ -2892,7 +2894,7 @@ object SparkEntry {
         t(s, dir, "events").select(col("event_id"), col("user_id"),
                                    col("value")),
         Seq("event_id", "user_id"), path, ndv = 100000L)
-      val back = s.read.parquet(path)
+      val back = Tables.read(s, path)
       back.agg(count(lit(1)).as("n"),
                sum(col("user_id")).as("uid_sum"),
                round(sum(col("value")), 4).as("v"))

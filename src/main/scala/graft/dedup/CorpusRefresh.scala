@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.io.Sinks
 import graft.text.TextOps
 
@@ -86,7 +87,7 @@ object CorpusRefresh {
                 n: Int = 12, k: Int = 64, bands: Int = 16): Unit = {
     val spark = docs.sparkSession
     Sinks.replaceLoad(docs, tableRoot)
-    val wh = spark.read.parquet(tableRoot)
+    val wh = Tables.read(spark, tableRoot)
     inParallel(
       () => MinhashIndex.build(wh, idCol, textCol, indexRoot, n, k, bands),
       () => wh.select(col(idCol).as("id"),
@@ -118,7 +119,7 @@ object CorpusRefresh {
     // standing fps minus the batch's own ids (replay contract (a)):
     // null-fp rows (null text) never equi-match, matching the gate's
     // "novel unless provably seen" direction
-    val standingFps = spark.read.parquet(s"$indexRoot/fps")
+    val standingFps = Tables.read(spark, s"$indexRoot/fps")
       .join(batch.select(col(idCol).as("id")), Seq("id"), "left_anti")
       .select(col("fp")).distinct()
     // pinned: gated feeds the within-batch shingle sets AND the final
@@ -173,7 +174,7 @@ object CorpusRefresh {
     // safe and worthwhile to run concurrently. presentFps is read
     // BEFORE the parallel block so its file listing cannot race the
     // fps append.
-    val presentFps = spark.read.parquet(s"$indexRoot/fps")
+    val presentFps = Tables.read(spark, s"$indexRoot/fps")
       .select(col("id"))
     inParallel(
       () => Sinks.mergeByKey(survivors, Seq(idCol), tableRoot),

@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Persisted near-duplicate SIGNATURE INDEX — the lexical twin of the
   * persisted IVF layout (`SimilarityOps.saveIndex`/`appendIndex`): pay
   * the corpus shingling + MinHash pass ONCE at build time, keep the
@@ -41,7 +43,7 @@ object MinhashIndex {
 
   private[dedup] def readParams(spark: SparkSession,
                                 root: String): (Int, Int, Int) = {
-    val r = spark.read.parquet(s"$root/params").head()
+    val r = Tables.read(spark, s"$root/params").head()
     (r.getAs[Int]("n"), r.getAs[Int]("k"), r.getAs[Int]("bands"))
   }
 
@@ -141,7 +143,7 @@ object MinhashIndex {
                                    root: String, tau: Double,
                                    maxBucket: Long = 0L): DataFrame = {
     val spark = bsets.sparkSession
-    val stored0 = spark.read.parquet(s"$root/buckets")
+    val stored0 = Tables.read(spark, s"$root/buckets")
     val stored =
       if (maxBucket <= 0L) stored0
       else {
@@ -184,12 +186,12 @@ object MinhashIndex {
     val p = new org.apache.hadoop.fs.Path(s"$root/tombstones")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p))
-      Some(spark.read.parquet(p.toString).select(col("id")).distinct())
+      Some(Tables.read(spark, p.toString).select(col("id")).distinct())
     else None
   }
 
   private def liveSets(spark: SparkSession, root: String): DataFrame = {
-    val sets = spark.read.parquet(s"$root/sets")
+    val sets = Tables.read(spark, s"$root/sets")
     tombstonesOf(spark, root)
       .map(t => sets.join(t, Seq("id"), "left_anti"))
       .getOrElse(sets)
@@ -222,13 +224,13 @@ object MinhashIndex {
   def compactIndex(spark: SparkSession, root: String): Unit =
     graft.io.Sinks.stagedReplace(spark, root) { stage =>
       liveSets(spark, root).write.parquet(s"$stage/sets")
-      val buckets = spark.read.parquet(s"$root/buckets")
+      val buckets = Tables.read(spark, s"$root/buckets")
       tombstonesOf(spark, root)
         .map(t => buckets.join(t, Seq("id"), "left_anti"))
         .getOrElse(buckets)
         .repartition(col("band"))
         .write.partitionBy("band").parquet(s"$stage/buckets")
-      spark.read.parquet(s"$root/params")
+      Tables.read(spark, s"$root/params")
         .coalesce(1).write.parquet(s"$stage/params")
       // tombstones intentionally not copied: the new root starts clean
     }
@@ -268,10 +270,10 @@ object MinhashIndex {
     // Interim states are safe either way: a doc with only one side
     // present is simply not probe-visible until the replay completes
     // (candidates need buckets/, verify needs sets/).
-    val existingSets = spark.read.parquet(s"$root/sets").select(col("id"))
+    val existingSets = Tables.read(spark, s"$root/sets").select(col("id"))
     bsets.join(existingSets, Seq("id"), "left_anti")
       .write.mode("append").parquet(s"$root/sets")
-    val existingPostings = spark.read.parquet(s"$root/buckets")
+    val existingPostings = Tables.read(spark, s"$root/buckets")
       .select(col("id")).distinct()
     postings.join(existingPostings, Seq("id"), "left_anti")
       .repartition(col("band"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.Tables
+
 /** The reference's source/sink surface (SURVEY.md §2.1), modeled as
   * parquet/CSV in this env (no Postgres/BigQuery network): write
   * dispositions append/overwrite (S7/S8/S10), single-file CSV handoff
@@ -269,7 +271,7 @@ object Sinks {
       val up = updates
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         .transform(graft.CacheScope.register)
-      val target = spark.read.parquet(path).as("t")
+      val target = Tables.read(spark, path).as("t")
       val upKeys = up.select(keys.map(col): _*).distinct().as("u")
       // null-SAFE key equality: a null-key update row must REPLACE the
       // target's null-key row, not accumulate a duplicate per merge
@@ -295,7 +297,7 @@ object Sinks {
   def deleteWhere(spark: SparkSession, path: String,
                   predicate: org.apache.spark.sql.Column): Unit =
     stageSwap(
-      spark.read.parquet(path).filter(!coalesce(predicate, lit(false))),
+      Tables.read(spark, path).filter(!coalesce(predicate, lit(false))),
       path)
 
   /** Small-file compaction: rewrite a parquet directory into
@@ -309,7 +311,7 @@ object Sinks {
     */
   def compact(spark: SparkSession, path: String, numFiles: Int): Unit = {
     require(numFiles >= 1, s"numFiles must be >= 1 (got $numFiles)")
-    stageSwap(spark.read.parquet(path).repartition(numFiles), path)
+    stageSwap(Tables.read(spark, path).repartition(numFiles), path)
   }
 
   /** `compact` for a PARTITIONED table: rewrite to ONE file per
@@ -322,7 +324,7 @@ object Sinks {
   def compactPartitions(spark: SparkSession, path: String,
                         partCol: String): Unit =
     stagedReplace(spark, path) { stage =>
-      spark.read.parquet(path)
+      Tables.read(spark, path)
         .repartition(col(partCol))
         .write.partitionBy(partCol).parquet(stage)
     }
@@ -404,7 +406,7 @@ object Sinks {
     require(vs.contains(v),
       s"versionedRead: version $v at $root does not exist or was vacuumed" +
         s" (committed: ${vs.mkString(",")})")
-    spark.read.parquet(s"$root/v=$v")
+    Tables.read(spark, s"$root/v=$v")
   }
 
   /** Retention: keep the newest `keep` committed versions, delete the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.functions.DdExpressions.{ddAgg, ddMerge, ddQuantile}
 import graft.functions.HllExpressions.{hllAgg, hllCount, hllMerge}
 import graft.functions.KmvExpressions.{kmvAgg, kmvCount, kmvIntersect, kmvJaccard}
@@ -136,7 +137,7 @@ object SketchOps {
         // affected days only: a tiny driver-side list, folded as isin
         // (partition-prunable if the sketch table is day-partitioned)
         val days = fresh.select(col("day")).collect().map(_.getDate(0))
-        spark.read.parquet(path)
+        Tables.read(spark, path)
           .filter(col("day").isin(days.toIndexedSeq: _*))
           .unionByName(fresh)
           .groupBy(col("day"))
@@ -236,14 +237,14 @@ object SketchOps {
     val exists = fs.exists(new Path(path))
     val applied: Set[String] =
       if (exists)
-        spark.read.parquet(s"$path/_applied")
+        Tables.read(spark, s"$path/_applied")
           .select(col("batch_id")).collect().map(_.getString(0)).toSet
       else Set.empty
     if (applied.contains(batchId)) return // re-delivery: exact no-op
     val fresh = dailyValueSketches(batch, keyCol, tsCol, valueCol, alpha)
     val merged =
       if (!exists) fresh
-      else spark.read.parquet(s"$path/data")
+      else Tables.read(spark, s"$path/data")
         .unionByName(fresh)
         .groupBy(col("day"), col(keyCol))
         .agg(ddMerge(col("sketch")).as("sketch"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Tables
 import graft.functions.VectorExpressions.cosineSim
 
 /** Similarity search over an embedding column (north-star scope).
@@ -1344,8 +1345,8 @@ object SimilarityOps {
     */
   def loadIndex(spark: org.apache.spark.sql.SparkSession,
                 path: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$path/lists"),
-     spark.read.parquet(s"$path/codebook"))
+    (Tables.read(spark, s"$path/lists"),
+     Tables.read(spark, s"$path/codebook"))
 
   /** INCREMENTAL index maintenance: assign a NEW vector batch against
     * the SAVED codebook and append into the existing list directories —
@@ -1373,8 +1374,8 @@ object SimilarityOps {
   def appendIndex(newEmb: DataFrame, idCol: String, vecCol: String,
                   path: String): Unit = {
     val spark = newEmb.sparkSession
-    val cents = spark.read.parquet(s"$path/codebook")
-    val existing = spark.read.parquet(s"$path/lists").select(col(idCol))
+    val cents = Tables.read(spark, s"$path/codebook")
+    val existing = Tables.read(spark, s"$path/lists").select(col(idCol))
     ivfAssignTo(newEmb.join(existing, Seq(idCol), "left_anti"),
                 idCol, vecCol, cents)
       .repartition(col("list_id"))
@@ -1406,7 +1407,7 @@ object SimilarityOps {
               idCol: String, vecCol: String, nlist: Int,
               iters: Int): Unit =
     graft.io.Sinks.stagedReplace(spark, path) { stage =>
-      val emb = spark.read.parquet(s"$path/lists")
+      val emb = Tables.read(spark, s"$path/lists")
         .select(col(idCol), col(vecCol))
       val cents = ivfTrain(emb, idCol, vecCol, nlist, iters)
       saveIndex(ivfAssignTo(emb, idCol, vecCol, cents), cents, stage)
@@ -1435,7 +1436,7 @@ object SimilarityOps {
   def forgetFromIndex(ids: DataFrame, idCol: String,
                       path: String): Unit = {
     val spark = ids.sparkSession
-    val lists = spark.read.parquet(s"$path/lists")
+    val lists = Tables.read(spark, s"$path/lists")
     val affected = lists.join(ids, Seq(idCol), "left_semi")
       .select(col("list_id")).distinct()
       .collect().map(_.getInt(0)).toSet
@@ -1608,16 +1609,16 @@ object SimilarityOps {
     */
   def loadIndexPq(spark: org.apache.spark.sql.SparkSession,
                   path: String): (DataFrame, DataFrame, DataFrame) =
-    (spark.read.parquet(s"$path/lists"),
-     spark.read.parquet(s"$path/codebook"),
-     spark.read.parquet(s"$path/pq_codebook"))
+    (Tables.read(spark, s"$path/lists"),
+     Tables.read(spark, s"$path/codebook"),
+     Tables.read(spark, s"$path/pq_codebook"))
 
   /** The persisted encoding mode of a saved IVF×PQ index; indexes from
     * before the marker (no meta dir) read as raw.
     */
   def indexIsResidual(spark: org.apache.spark.sql.SparkSession,
                       path: String): Boolean =
-    try spark.read.parquet(s"$path/meta").head().getBoolean(0)
+    try Tables.read(spark, s"$path/meta").head().getBoolean(0)
     catch { case _: org.apache.spark.sql.AnalysisException => false }
 
   // ------------------------------------------------------ quality / ops

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Persisted INVERTED INDEX for BM25 serving — the ranked-retrieval
   * member of the persisted-index family (IVF/PQ for vectors,
   * `MinhashIndex` for near-dup signatures): pay the corpus tokenization
@@ -56,7 +58,7 @@ object Bm25Index {
 
   private def readParams(spark: SparkSession, root: String)
       : (Double, Double, Int, String, String) = {
-    val r = spark.read.parquet(s"$root/params").head()
+    val r = Tables.read(spark, s"$root/params").head()
     (r.getAs[Double]("k1"), r.getAs[Double]("b"),
      r.getAs[Int]("buckets"), r.getAs[String]("id_col"),
      r.getAs[String]("text_col"))
@@ -118,7 +120,7 @@ object Bm25Index {
     val fresh =
       if (committed.isEmpty) batch
       else batch.join(
-        spark.read.parquet(s"$root/postings")
+        Tables.read(spark, s"$root/postings")
           .filter(col("epoch").isin(committed.map(Int.box): _*))
           .select(col("doc_id").as(idCol)).distinct(),
         Seq(idCol), "left_anti")
@@ -134,7 +136,7 @@ object Bm25Index {
     val (pn, psum) =
       if (committed.isEmpty) (0d, 0d)
       else {
-        val r = spark.read.parquet(s"$root/stats/epoch=${committed.max}")
+        val r = Tables.read(spark, s"$root/stats/epoch=${committed.max}")
           .head()
         (r.getAs[Double]("n"), r.getAs[Double]("sum_dl"))
       }
@@ -194,7 +196,7 @@ object Bm25Index {
                            root: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(s"$root/tombstones")
     if (fsFor(spark, root).exists(p))
-      Some(spark.read.parquet(p.toString))
+      Some(Tables.read(spark, p.toString))
     else None
   }
 
@@ -219,7 +221,7 @@ object Bm25Index {
     val (_, _, _, idCol, _) = readParams(spark, root)
     val committed = committedEpochs(spark, root)
     if (committed.isEmpty) return
-    val present = spark.read.parquet(s"$root/postings")
+    val present = Tables.read(spark, s"$root/postings")
       .filter(col("epoch").isin(committed.map(Int.box): _*))
       .select(col("doc_id"), col("dl"))
       .join(ids.select(col(idCol).as("doc_id")).distinct(),
@@ -244,7 +246,7 @@ object Bm25Index {
     val committed = committedEpochs(spark, root)
     require(committed.nonEmpty, s"compactIndex: nothing committed at $root")
     graft.io.Sinks.stagedReplace(spark, root) { stage =>
-      val live = spark.read.parquet(s"$root/postings")
+      val live = Tables.read(spark, s"$root/postings")
         .filter(col("epoch").isin(committed.map(Int.box): _*))
       // one pass over the old store: the checkpointed survivors feed
       // the postings write AND the stats fold (cost bounded by live
@@ -263,7 +265,7 @@ object Bm25Index {
              coalesce(sum(col("dl")), lit(0d)).as("sum_dl"))
       s.coalesce(1).write.parquet(s"$stage/stats/epoch=1")
       kept.unpersist(false)
-      spark.read.parquet(s"$root/params")
+      Tables.read(spark, s"$root/params")
         .coalesce(1).write.parquet(s"$stage/params")
       val fs = fsFor(spark, stage)
       fs.mkdirs(new org.apache.hadoop.fs.Path(s"$stage/commits"))
@@ -308,7 +310,7 @@ object Bm25Index {
   private def servedStats(spark: SparkSession, root: String,
                           committed: Seq[Int],
                           tomb: Option[DataFrame]): DataFrame = {
-    val snap = spark.read.parquet(s"$root/stats/epoch=${committed.max}")
+    val snap = Tables.read(spark, s"$root/stats/epoch=${committed.max}")
     tomb
       .map { t =>
         val rm = t.agg(
@@ -364,7 +366,7 @@ object Bm25Index {
       .distinct().as[Int].collect().toSeq
     val tomb = tombstonesOf(spark, root)
     val stats = servedStats(spark, root, committed, tomb)
-    val pruned = spark.read.parquet(s"$root/postings")
+    val pruned = Tables.read(spark, s"$root/postings")
       .filter(col("epoch").isin(committed.map(Int.box): _*) &&
               col("tb").isin(tbs.map(Int.box): _*) &&
               col("term").isin(queryTerms: _*))
@@ -415,7 +417,7 @@ object Bm25Index {
       .distinct().as[Int].collect().toSeq
     val tomb = tombstonesOf(spark, root)
     val stats = servedStats(spark, root, committed, tomb)
-    val pruned = spark.read.parquet(s"$root/postings")
+    val pruned = Tables.read(spark, s"$root/postings")
       .filter(col("epoch").isin(committed.map(Int.box): _*) &&
               col("tb").isin(tbs.map(Int.box): _*))
       .join(broadcast(q.select(col("term")).distinct()), Seq("term"))

@@ -39,29 +39,8 @@ class CoreOpsSpec extends SparkSpec {
     // a shuffling repartition must therefore decline at gate 1
     val small = Seq.tabulate(64)(i => (i.toLong, s"v$i")).toDF("id", "v")
       .repartition(2)
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        started.add(String.valueOf(
-          e.properties.getProperty("spark.jobGroup.id")))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      CoreOps.spreadSmallScan(small, col("id"))
-      // the bus delivers in order: once the sentinel job's start has
-      // arrived, every job the probe started has been counted
-      sc.setJobGroup("sentinel", "listener drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!started.contains("sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(started.contains("sentinel"), "listener bus never drained")
-      started.remove("sentinel")
-      assert(started.isEmpty,
-        s"spreadSmallScan started ${started.size} Spark job(s)")
-    } finally sc.removeSparkListener(listener)
+    val n = jobsStartedBy(CoreOps.spreadSmallScan(small, col("id")))
+    assert(n === 0, s"spreadSmallScan started $n Spark job(s)")
   }
 
   test("dropNulls drops rows with any null (P1)") {
