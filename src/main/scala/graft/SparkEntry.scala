@@ -15,6 +15,7 @@ import graft.pipeline.TaxiPipeline
 import graft.similarity.SimilarityOps
 import graft.streaming.StreamingOps
 import graft.text.{Bm25Index, QualityClassifier, TextOps}
+import graft.tpch.TpchGen
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2 (+ the LLM-pipeline extension ops), each with an ANSI/DuckDB
@@ -69,31 +70,11 @@ object SparkEntry {
       }
     }
 
-  /** Run independent maintenance actions CONCURRENTLY (Spark supports
-    * concurrent jobs from one session; local and cluster schedulers
-    * interleave their stages). A real warehouse's cascade maintenance
-    * parallelizes across independent artifacts — serializing five
-    * independent store builds pays five full driver round-trips of
-    * latency for no ordering benefit. Any failure propagates.
-    */
-  private def inParallel(tasks: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    // settle ALL tasks, then rethrow the first failure: a fail-fast
-    // Future.sequence returns while sibling Spark actions still run —
-    // orphan jobs that keep mutating store directories (and, in a
-    // bench, inflate the NEXT query's timed window)
-    val results = Await.result(
-      Future.sequence(tasks.map(task => Future(scala.util.Try(task())))),
-      Duration.Inf)
-    results.collectFirst { case scala.util.Failure(e) => throw e }: Unit
-  }
-
   // ---------------------------------------------------------------- queries
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    parityQueries ++ extensionQueries ++ graft.tpch.TpchExt.queries
+    parityQueries ++ extensionQueries ++
+      TpchGen.board.map { case (k, q) => k -> q.run }
 
   private def parityQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -111,156 +92,6 @@ object SparkEntry {
       CoreOps.dedupFullRow(
         t(s, dir, "lineitem").select(col("l_returnflag"),
                                      col("l_linestatus")))),
-
-    // The canonical TPC-H Q1 pricing summary — one partial→final
-    // aggregate behind a pushed shipdate filter; the classic
-    // "is this an analytics engine" smoke query
-    "q_tpch_q1" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <=
-                lit(java.sql.Timestamp.valueOf("1998-09-02 00:00:00")))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(round(sum(col("l_quantity")), 4).as("sum_qty"),
-             round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-             round(sum(col("l_extendedprice") *
-                       (lit(1.0) - col("l_discount"))), 2)
-               .as("sum_disc_price"),
-             round(sum(col("l_extendedprice") *
-                       (lit(1.0) - col("l_discount")) *
-                       (lit(1.0) + col("l_tax"))), 2).as("sum_charge"),
-             round(avg(col("l_quantity")), 6).as("avg_qty"),
-             round(avg(col("l_extendedprice")), 6).as("avg_price"),
-             round(avg(col("l_discount")), 6).as("avg_disc"),
-             count(lit(1)).as("count_order"))),
-
-    // TPC-H Q6 forecasting-revenue-change: the pushed-filter scan-agg
-    "q_tpch_q6" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >=
-                  lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00")) &&
-                col("l_shipdate") <
-                  lit(java.sql.Timestamp.valueOf("1998-01-01 00:00:00")) &&
-                col("l_discount").between(0.05, 0.07) &&
-                col("l_quantity") < 24)
-        .agg(round(sum(col("l_extendedprice") * col("l_discount")), 2)
-               .as("revenue"))),
-
-    // TPC-H Q3 shipping priority (adapted to the schema — no
-    // shippriority column): segment dim broadcast, two hash joins,
-    // top-10 by revenue = TakeOrderedAndProject, never a global sort
-    "q_tpch_q3" -> ((s, dir) => {
-      val d = lit(java.sql.Timestamp.valueOf("1998-03-15 00:00:00"))
-      val cust = t(s, dir, "customer")
-        .filter(col("c_mktsegment") === "BUILDING")
-        .select(col("c_custkey"))
-      val ord = t(s, dir, "orders")
-        .filter(col("o_orderdate") < d)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") > d)
-        .select(col("l_orderkey"), col("l_extendedprice"),
-                col("l_discount"))
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"),
-                 date_format(col("o_orderdate"), "yyyy-MM-dd")
-                   .as("o_orderdate"))
-        .agg(round(sum(col("l_extendedprice") *
-                       (lit(1.0) - col("l_discount"))), 2).as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey").asc)
-        .limit(10)
-    }),
-
-    // TPC-H Q5 local-supplier volume: the deepest join in the suite —
-    // six tables; the three dims broadcast (region→nation fold,
-    // supplier), fact-fact orders⋈lineitem shuffles on the orderkey,
-    // the c↔s same-nation constraint rides the join condition
-    "q_tpch_q5" -> ((s, dir) => {
-      val nations = t(s, dir, "nation")
-        .join(t(s, dir, "region").filter(col("r_name") === "ASIA"),
-              col("n_regionkey") === col("r_regionkey"))
-        .select(col("n_nationkey"), col("n_name"))
-      val cust = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey"))
-      val ord = t(s, dir, "orders")
-        .filter(col("o_orderdate") >=
-                  lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")) &&
-                col("o_orderdate") <
-                  lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00")))
-        .select(col("o_orderkey"), col("o_custkey"))
-      val sup = t(s, dir, "supplier")
-        .select(col("s_suppkey"), col("s_nationkey"))
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"),
-                col("l_extendedprice"), col("l_discount"))
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey") &&
-                              col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(nations),
-              col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(round(sum(col("l_extendedprice") *
-                       (lit(1.0) - col("l_discount"))), 2).as("revenue"))
-    }),
-
-    // TPC-H Q18 large-volume customers: group-by-HAVING semi-join —
-    // the heavy-order keys reduce to a small frame that AQE broadcasts
-    // into the fact join; top-100 via TakeOrderedAndProject
-    "q_tpch_q18" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"))
-      val heavy = li.groupBy(col("l_orderkey"))
-        .agg(round(sum(col("l_quantity")), 4).as("total_qty"))
-        .filter(col("total_qty") > 300)
-      t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"),
-                col("o_totalprice"),
-                date_format(col("o_orderdate"), "yyyy-MM-dd")
-                  .as("o_orderdate"))
-        .join(heavy, col("o_orderkey") === col("l_orderkey"))
-        .join(t(s, dir, "customer")
-                .select(col("c_custkey"), col("c_name")),
-              col("o_custkey") === col("c_custkey"))
-        .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
-                col("o_orderdate"),
-                round(col("o_totalprice"), 2).as("o_totalprice"),
-                col("total_qty"))
-        .orderBy(col("o_totalprice").desc, col("o_orderdate").asc,
-                 col("o_orderkey").asc)
-        .limit(100)
-    }),
-
-    // TPC-H Q10 returned-item reporting: lost revenue per customer for
-    // one quarter's 'R' lineitems — two fact joins behind pushed
-    // filters, nation broadcast, top-20 = TakeOrderedAndProject
-    "q_tpch_q10" -> ((s, dir) => {
-      val ord = t(s, dir, "orders")
-        .filter(col("o_orderdate") >=
-                  lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00")) &&
-                col("o_orderdate") <
-                  lit(java.sql.Timestamp.valueOf("1997-04-01 00:00:00")))
-        .select(col("o_orderkey"), col("o_custkey"))
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_returnflag") === "R")
-        .select(col("l_orderkey"), col("l_extendedprice"),
-                col("l_discount"))
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(t(s, dir, "customer")
-                .select(col("c_custkey"), col("c_name"),
-                        col("c_acctbal"), col("c_nationkey"))),
-              col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation")
-                .select(col("n_nationkey"), col("n_name"))),
-              col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"),
-                 round(col("c_acctbal"), 2).as("c_acctbal"),
-                 col("n_name"))
-        .agg(round(sum(col("l_extendedprice") *
-                       (lit(1.0) - col("l_discount"))), 2).as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey").asc)
-        .limit(20)
-    }),
 
     // Year-over-year growth: yearly order volume/revenue with the
     // growth rate vs the previous year — one partial→final yearly
@@ -422,43 +253,15 @@ object SparkEntry {
 
     // Window function with deterministic total order (extension beyond
     // reference parity, oracle-checked as SURVEY §2.7 requires).
-    "q_topk_per_group" -> ((s, dir) => {
-      val w = Window.partitionBy(col("l_returnflag"))
-        .orderBy(col("l_extendedprice").desc, col("l_orderkey").asc,
-                 col("l_linenumber").asc)
-      t(s, dir, "lineitem")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select(col("l_returnflag"), col("rn"), col("l_orderkey"),
-                col("l_linenumber"), col("l_extendedprice"))
-    }),
+    "q_topk_per_group" -> ((s, dir) =>
+      topkGen(t(s, dir, "lineitem"), 3, "l_returnflag", "l_extendedprice")),
 
     // The SAME top-k contract through the bounded-buffer Aggregator (the
     // scale path: ≤k rows per partial buffer, shuffle carries k rows per
     // (map task, group) instead of whole groups). Shares the window
     // query's oracle — two physical strategies, one result.
-    "q_topk_agg" -> ((s, dir) => {
-      import s.implicits._
-      // nullable-score form (topKTriplesOpt): on a column that can hold
-      // nulls the primitive-Double triple NPEs at encode time while the
-      // window strategy serves null rows at the bottom — the nullable
-      // Aggregator keeps the two strategies result-identical on ANY
-      // input (r9); on this null-free fixture the output is unchanged
-      val ds = t(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_extendedprice"),
-                col("l_orderkey"), col("l_linenumber"))
-        .as[(String, Option[Double], Long, Int)]
-      ds.groupByKey(_._1)
-        .mapValues { case (_, price, okey, ln) => (price, okey, ln) }
-        .agg(graft.ops.TopK.topKTriplesOpt(3).toColumn.name("top"))
-        .flatMap { case (flag, top) =>
-          top.zipWithIndex.map { case ((price, okey, ln), i) =>
-            (flag, i + 1, okey, ln, price)
-          }
-        }
-        .toDF("l_returnflag", "rn", "l_orderkey", "l_linenumber",
-              "l_extendedprice")
-    }),
+    "q_topk_agg" -> ((s, dir) =>
+      topkAggGen(t(s, dir, "lineitem"), 3, "l_returnflag")),
 
     // Analytic window functions: per-customer running total + lag/lead
     // neighbours over a deterministic order (§2.7 breadth beyond
@@ -642,17 +445,8 @@ object SparkEntry {
     // its source doc at containment exactly 1.0 AND in the source's
     // near-dup partners; a Jaccard threshold would pair NONE of these
     // (J ≈ |snippet|/|doc| ≈ 0.05).
-    "q_containment_join" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val snips = docs
-        .filter(pmod(col("doc_id"), lit(7)) === 0 &&
-                length(col("text")) >= 250)
-        .select((col("doc_id") + 100000).as("doc_id"),
-                substring(col("text"), 51, 150).as("text"))
-      DedupOps.containmentJoin(
-        DedupOps.hashedSets(snips, "doc_id", "text", n = 12),
-        DedupOps.hashedSets(docs, "doc_id", "text", n = 12), tau = 0.9)
-    }),
+    "q_containment_join" -> ((s, dir) =>
+      containmentGen(t(s, dir, "documents"), 12, 0.9, 7, 51, 150, 250)),
 
     // The containment ACTION: host-corpus + planted snippets; every
     // snippet (contained in its source at C=1.0) and the smaller member
@@ -767,9 +561,9 @@ object SparkEntry {
         .filter(col("vec_id") % 2 === 0)
       val docsT = s"$root/docs"; val embT = s"$root/emb"
       val mhRoot = s"$root/mh"; val bmRoot = s"$root/bm25"
-      // BUILD the five artifacts concurrently (inParallel scaladoc):
-      // each lands in its own directory off the SOURCE frames, so
-      // ordering between them is pure serialization waste.
+      // BUILD the five artifacts concurrently (CorpusRefresh.inParallel
+      // scaladoc): each lands in its own directory off the SOURCE
+      // frames, so ordering between them is pure serialization waste.
       // bm25: one artifact among five — the mod-4 sub-half exercises
       // the cascade without double-tokenizing the fixture. Its census
       // below reads the LIVE logical view (postings minus the
@@ -777,7 +571,7 @@ object SparkEntry {
       // forget returns); the physical-erasure path (compactIndex) is
       // spec-certified in Bm25IndexSpec and costs a full store rewrite
       // the flagship doesn't need to pay per bench run
-      inParallel(
+      CorpusRefresh.inParallel(
         () => docs.write.parquet(docsT),
         () => emb.write.parquet(embT),
         () => MinhashIndex.build(docs, "doc_id", "text", mhRoot,
@@ -794,7 +588,7 @@ object SparkEntry {
       // FORGET everywhere the ids live — five independent stores,
       // concurrently; the signature-index compaction stays ordered
       // after its own forget inside its task
-      inParallel(
+      CorpusRefresh.inParallel(
         () => Sinks.deleteWhere(s, docsT,
                                 pmod(col("doc_id"), lit(97)) === 0),
         () => Sinks.deleteWhere(s, embT,
@@ -2039,41 +1833,13 @@ object SparkEntry {
 
     // SCD Type-2 history: collapse each user's value-tier change stream
     // into validity intervals — per-key windows only, no global sort
-    "q_scd2" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .withColumn("tier", floor(col("value") / 40).cast("int"))
-      graft.ops.Scd2
-        .scd2(ev, Seq("user_id"), Seq("tier"), "ts", "event_id")
-        .select(col("user_id"), col("tier"),
-                unix_millis(col("valid_from")).as("valid_from_ms"),
-                unix_millis(col("valid_to")).as("valid_to_ms"),
-                col("is_current"))
-    }),
+    "q_scd2" -> ((s, dir) => scd2Gen(t(s, dir, "events"), 40)),
 
     // Last-touch attribution: every purchase credits the latest click
     // at-or-before it (per user) — the as-of join composition; channel
     // derived from the click's props, no prior click → 'direct'
-    "q_attribution" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val purchases = ev
-        .filter(col("event_type") === "purchase" &&
-                col("user_id").isNotNull && col("ts").isNotNull)
-        .select(col("event_id"), col("user_id"), col("ts").as("pts"),
-                col("value"))
-      val clicks = ev
-        .filter(col("event_type") === "click" &&
-                col("user_id").isNotNull && col("ts").isNotNull)
-        .select(col("user_id"), col("ts").as("cts"),
-                col("event_id").as("click_id"),
-                concat(lit("ch"),
-                  pmod(get_json_object(col("props"), "$.k").cast("long"),
-                       lit(4)).cast("string")).as("channel"))
-      graft.ops.AsOfJoin
-        .asofJoin(purchases, clicks, "user_id", "pts", "cts", "click_id")
-        .groupBy(coalesce(col("channel"), lit("direct")).as("channel"))
-        .agg(count(lit(1)).as("n_purchases"),
-             round(sum(coalesce(col("value"), lit(0.0))), 4).as("revenue"))
-    }),
+    "q_attribution" -> ((s, dir) =>
+      attributionGen(t(s, dir, "events"), 4)),
 
     // ROLLUP subtotal lattice (grouping-set aggregates come free from
     // Catalyst once exposed; partial aggregation still applies)
@@ -2529,18 +2295,8 @@ object SparkEntry {
     // As-of join: latest order at-or-before each event's timestamp for
     // the event's customer (union-sort-carry composition, linear in
     // |L|+|R|; see graft.ops.AsOfJoin)
-    "q_asof_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("event_id"),
-                ((col("user_id") % 150) + 1).as("cust"),
-                date_trunc("millisecond", col("ts")).as("ets"))
-      val ord = t(s, dir, "orders")
-        .select(col("o_custkey").as("cust"), col("o_orderdate"),
-                col("o_orderkey"))
-      graft.ops.AsOfJoin.asofJoin(ev, ord, "cust", "ets", "o_orderdate",
-                                  "o_orderkey")
-        .select(col("event_id"), col("o_orderkey"))
-    }),
+    "q_asof_join" -> ((s, dir) =>
+      asofGen(t(s, dir, "events"), t(s, dir, "orders"), 150)),
 
     // Range join: event pairs within 60s (binned interval join, linear
     // in n·density vs the naive quadratic theta-join)
@@ -2724,17 +2480,7 @@ object SparkEntry {
     // from ONE aggregate broadcast back, clip in a projection — the
     // per-type census proves which rows moved and where the mass went
     "q_winsorize" -> ((s, dir) =>
-      CoreOps.winsorize(t(s, dir, "events"), "value", "event_type",
-                        0.05, 0.95)
-        .groupBy(col("event_type"))
-        .agg(count(col("value")).as("n_values"),
-             round(min(col("value_lo")), 6).as("lo"),
-             round(min(col("value_hi")), 6).as("hi"),
-             sum(when(col("value") < col("value_lo"), 1L).otherwise(0L))
-               .as("n_clipped_lo"),
-             sum(when(col("value") > col("value_hi"), 1L).otherwise(0L))
-               .as("n_clipped_hi"),
-             round(sum(col("value_w")), 4).as("sum_w"))),
+      winsorizeGen(t(s, dir, "events"), 0.05, 0.95)),
 
     // Declarative data-contract suite (the Deequ staple): five checks
     // — not-null, key uniqueness, range, regex shape, value domain —
@@ -2950,22 +2696,6 @@ object SparkEntry {
     "q_dedup_distinct" ->
       "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
 
-    "q_tpch_q1" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       round(sum(l_quantity), 4) AS sum_qty,
-        |       round(sum(l_extendedprice), 2) AS sum_base_price,
-        |       round(sum(l_extendedprice * (1.0 - l_discount)), 2)
-        |         AS sum_disc_price,
-        |       round(sum(l_extendedprice * (1.0 - l_discount)
-        |                 * (1.0 + l_tax)), 2) AS sum_charge,
-        |       round(avg(l_quantity), 6) AS avg_qty,
-        |       round(avg(l_extendedprice), 6) AS avg_price,
-        |       round(avg(l_discount), 6) AS avg_disc,
-        |       count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY 1, 2""".stripMargin,
-
     "q_yoy_growth" ->
       """WITH yearly AS (
         |  SELECT CAST(date_part('year', o_orderdate) AS INTEGER) AS yr,
@@ -2977,68 +2707,6 @@ object SparkEntry {
         |             nullif(lag(revenue) OVER (ORDER BY yr), 0), 6)
         |         AS growth
         |FROM yearly""".stripMargin,
-
-    "q_tpch_q10" ->
-      """SELECT c_custkey, c_name, round(c_acctbal, 2) AS c_acctbal,
-        |       n_name,
-        |       round(sum(l_extendedprice * (1.0 - l_discount)), 2)
-        |         AS revenue
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1997-04-01 00:00:00'
-        |GROUP BY 1, 2, 3, 4
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-
-    "q_tpch_q18" ->
-      """WITH heavy AS (SELECT l_orderkey,
-        |                      round(sum(l_quantity), 4) AS total_qty
-        |               FROM lineitem GROUP BY 1
-        |               HAVING round(sum(l_quantity), 4) > 300)
-        |SELECT c_name, c_custkey, o_orderkey,
-        |       strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-        |       round(o_totalprice, 2) AS o_totalprice, total_qty
-        |FROM heavy JOIN orders ON o_orderkey = l_orderkey
-        |           JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
-        |LIMIT 100""".stripMargin,
-
-    "q_tpch_q5" ->
-      """SELECT n_name,
-        |       round(sum(l_extendedprice * (1.0 - l_discount)), 2)
-        |         AS revenue
-        |FROM customer, orders, lineitem, supplier, nation, region
-        |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-        |  AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-        |  AND r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY 1""".stripMargin,
-
-    "q_tpch_q6" ->
-      """SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-        |  AND l_discount BETWEEN 0.05 AND 0.07
-        |  AND l_quantity < 24""".stripMargin,
-
-    "q_tpch_q3" ->
-      """SELECT l_orderkey,
-        |       strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-        |       round(sum(l_extendedprice * (1.0 - l_discount)), 2)
-        |         AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-        |  AND l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
-        |GROUP BY 1, 2
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
 
     "q_derive_month" ->
       """SELECT CAST(date_part('month', ts) AS INTEGER) AS pickup_month,
@@ -5259,7 +4927,7 @@ object SparkEntry {
         |       (SELECT count(*) FROM events WHERE event_id = 42)
         |         AS n_probe
         |FROM events""".stripMargin
-  ) ++ graft.tpch.TpchExt.oracles
+  ) ++ TpchGen.board.map { case (k, q) => k -> q.sql }
 
   /** Shared truth for both top-k strategies (window row_number and the
     * bounded-buffer Aggregator): identical rows, identical tie-breaks.
@@ -5748,12 +5416,49 @@ object SparkEntry {
         |             ((1.0+0.01)/(1.0-0.01) + 1.0), 6) AS p99
         |FROM pick""".stripMargin
 
-  /** Parameterized top-k-per-group twin (board: k=3 by l_returnflag on
-    * l_extendedprice; the fuzzer sweeps k/group/order). Tie-break is
+  /** Parameterized top-k per group, Spark side and oracle (board: k=3 by
+    * l_returnflag on l_extendedprice; the fuzzer sweeps k/group/order;
+    * the Spark side is the window strategy). Tie-break is
     * always (l_orderkey, l_linenumber) — the deterministic total order
     * both physical strategies (window and bounded-buffer Aggregator)
     * promise.
     */
+  private[graft] def topkGen(li: DataFrame, k: Int, grp: String,
+                             ord: String): DataFrame = {
+    val w = Window.partitionBy(col(grp))
+      .orderBy(col(ord).desc, col("l_orderkey").asc,
+               col("l_linenumber").asc)
+    li.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select(col(grp), col("rn"), col("l_orderkey"),
+              col("l_linenumber"), col(ord))
+  }
+
+  /** The same top-k contract through the bounded-buffer Aggregator,
+    * ordered by l_extendedprice. Nullable-score form (topKTriplesOpt):
+    * on a column that can hold nulls the primitive-Double triple NPEs at
+    * encode time while the window strategy serves null rows at the
+    * bottom — the nullable Aggregator keeps the two strategies
+    * result-identical on ANY input (r9).
+    */
+  private[graft] def topkAggGen(li: DataFrame, k: Int,
+                                grp: String): DataFrame = {
+    val spark = li.sparkSession
+    import spark.implicits._
+    li.select(col(grp), col("l_extendedprice"), col("l_orderkey"),
+              col("l_linenumber"))
+      .as[(String, Option[Double], Long, Int)]
+      .groupByKey(_._1)
+      .mapValues { case (_, price, okey, ln) => (price, okey, ln) }
+      .agg(graft.ops.TopK.topKTriplesOpt(k).toColumn.name("top"))
+      .flatMap { case (g, top) =>
+        top.zipWithIndex.map { case ((price, okey, ln), i) =>
+          (g, i + 1, okey, ln, price)
+        }
+      }
+      .toDF(grp, "rn", "l_orderkey", "l_linenumber", "l_extendedprice")
+  }
+
   private[graft] def topkOracleGen(k: Int, grp: String, ord: String): String =
     s"""SELECT $grp, rn, l_orderkey, l_linenumber, $ord
        |FROM (
@@ -6117,7 +5822,20 @@ object SparkEntry {
        |FROM names a JOIN names b ON a.name < b.name
        |WHERE levenshtein(a.name, b.name) <= $d""".stripMargin
 
-  /** Parameterized q_winsorize twin (board: 0.05/0.95). */
+  /** Parameterized q_winsorize, Spark side and oracle (board: 0.05/0.95). */
+  private[graft] def winsorizeGen(ev: DataFrame, lo: Double,
+                                  hi: Double): DataFrame =
+    CoreOps.winsorize(ev, "value", "event_type", lo, hi)
+      .groupBy(col("event_type"))
+      .agg(count(col("value")).as("n_values"),
+           round(min(col("value_lo")), 6).as("lo"),
+           round(min(col("value_hi")), 6).as("hi"),
+           sum(when(col("value") < col("value_lo"), 1L).otherwise(0L))
+             .as("n_clipped_lo"),
+           sum(when(col("value") > col("value_hi"), 1L).otherwise(0L))
+             .as("n_clipped_hi"),
+           round(sum(col("value_w")), 4).as("sum_w"))
+
   private[graft] def winsorizeOracleGen(lo: Double, hi: Double): String =
     s"""WITH cuts AS (SELECT event_type,
        |         quantile_cont(value, $lo) AS lo,
@@ -6377,11 +6095,25 @@ object SparkEntry {
       |       CAST(pa0 - diag AS INTEGER) AS start_b, span_len
       |FROM sp WHERE span_len >= $minLen""".stripMargin
 
-  /** Parameterized R-S containment twin (board: 12-grams, τ=0.9,
-    * snippets = chars [start, start+len) of every `mod`-th doc with
-    * len(text) ≥ minTextLen, re-keyed +100000). Containment denominator
-    * is the SNIPPET's gram count (asymmetric, quote-detection shape).
+  /** Parameterized R-S containment join, Spark side and oracle (board:
+    * 12-grams, τ=0.9, snippets = chars [start, start+len) of every
+    * `mod`-th doc with len(text) ≥ minTextLen, re-keyed +100000).
+    * Containment denominator is the SNIPPET's gram count (asymmetric,
+    * quote-detection shape).
     */
+  private[graft] def containmentGen(docs: DataFrame, n: Int, tau: Double,
+                                    mod: Int, start: Int, slen: Int,
+                                    minTextLen: Int): DataFrame = {
+    val snips = docs
+      .filter(pmod(col("doc_id"), lit(mod)) === 0 &&
+              length(col("text")) >= minTextLen)
+      .select((col("doc_id") + 100000).as("doc_id"),
+              substring(col("text"), start, slen).as("text"))
+    DedupOps.containmentJoin(
+      DedupOps.hashedSets(snips, "doc_id", "text", n),
+      DedupOps.hashedSets(docs, "doc_id", "text", n), tau)
+  }
+
   private[graft] def containmentOracleGen(n: Int, tau: Double, mod: Int,
                                           snipStart: Int, snipLen: Int,
                                           minTextLen: Int): String = {
@@ -6617,7 +6349,18 @@ object SparkEntry {
       |FROM census c LEFT JOIN census p ON p.step = c.step - 1""".stripMargin
   }
 
-  /** Parameterized q_scd2 twin (board: tier = floor(value / 40)). */
+  /** Parameterized q_scd2, Spark side and oracle (board: tier =
+    * floor(value / 40)).
+    */
+  private[graft] def scd2Gen(ev: DataFrame, divisor: Int): DataFrame =
+    graft.ops.Scd2
+      .scd2(ev.withColumn("tier", floor(col("value") / divisor).cast("int")),
+            Seq("user_id"), Seq("tier"), "ts", "event_id")
+      .select(col("user_id"), col("tier"),
+              unix_millis(col("valid_from")).as("valid_from_ms"),
+              unix_millis(col("valid_to")).as("valid_to_ms"),
+              col("is_current"))
+
   private[graft] def scd2OracleGen(divisor: Int): String =
     s"""WITH base AS (SELECT user_id,
        |                     CAST(floor(value / $divisor) AS INTEGER)
@@ -6638,7 +6381,31 @@ object SparkEntry {
        |WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)"""
       .stripMargin
 
-  /** Parameterized q_attribution twin (board: channel = props.k mod 4). */
+  /** Parameterized q_attribution, Spark side and oracle (board:
+    * channel = props.k mod 4).
+    */
+  private[graft] def attributionGen(ev: DataFrame,
+                                    channelMod: Int): DataFrame = {
+    val purchases = ev
+      .filter(col("event_type") === "purchase" &&
+              col("user_id").isNotNull && col("ts").isNotNull)
+      .select(col("event_id"), col("user_id"), col("ts").as("pts"),
+              col("value"))
+    val clicks = ev
+      .filter(col("event_type") === "click" &&
+              col("user_id").isNotNull && col("ts").isNotNull)
+      .select(col("user_id"), col("ts").as("cts"),
+              col("event_id").as("click_id"),
+              concat(lit("ch"),
+                pmod(get_json_object(col("props"), "$.k").cast("long"),
+                     lit(channelMod)).cast("string")).as("channel"))
+    graft.ops.AsOfJoin
+      .asofJoin(purchases, clicks, "user_id", "pts", "cts", "click_id")
+      .groupBy(coalesce(col("channel"), lit("direct")).as("channel"))
+      .agg(count(lit(1)).as("n_purchases"),
+           round(sum(coalesce(col("value"), lit(0.0))), 4).as("revenue"))
+  }
+
   private[graft] def attributionOracleGen(channelMod: Int): String =
     s"""WITH p AS (SELECT event_id, user_id, ts AS pts, value FROM events
        |           WHERE event_type = 'purchase'
@@ -6658,7 +6425,23 @@ object SparkEntry {
        |       round(sum(coalesce(value, 0)), 4) AS revenue
        |FROM last_click WHERE rn = 1 GROUP BY 1""".stripMargin
 
-  /** Parameterized q_asof_join twin (board: custkey = user mod 150 + 1). */
+  /** Parameterized q_asof_join, Spark side and oracle (board: custkey =
+    * user mod 150 + 1).
+    */
+  private[graft] def asofGen(events: DataFrame, orders: DataFrame,
+                             userMod: Int): DataFrame = {
+    val ev = events
+      .select(col("event_id"),
+              ((col("user_id") % userMod) + 1).as("cust"),
+              date_trunc("millisecond", col("ts")).as("ets"))
+    val ord = orders
+      .select(col("o_custkey").as("cust"), col("o_orderdate"),
+              col("o_orderkey"))
+    graft.ops.AsOfJoin.asofJoin(ev, ord, "cust", "ets", "o_orderdate",
+                                "o_orderkey")
+      .select(col("event_id"), col("o_orderkey"))
+  }
+
   private[graft] def asofOracleGen(userMod: Int): String =
     s"""WITH ranked AS (
        |  SELECT e.event_id, o.o_orderkey,

@@ -45,20 +45,21 @@ import graft.text.TextOps
   */
 object CorpusRefresh {
 
-  /** Independent store mutations run CONCURRENTLY (Spark schedules
-    * concurrent jobs from one session): the commit phase's three writes
-    * land in disjoint roots, so serializing them pays three driver
-    * round-trips of latency for no ordering benefit. Any failure
-    * propagates.
+  /** Run independent store mutations CONCURRENTLY (Spark schedules
+    * concurrent jobs from one session; local and cluster schedulers
+    * interleave their stages): writes that land in disjoint roots — this
+    * commit phase's three, the board's cascade maintenance builds —
+    * would otherwise pay one driver round-trip of latency each for no
+    * ordering benefit. Any failure propagates.
     */
-  private def inParallel(tasks: (() => Unit)*): Unit = {
+  private[graft] def inParallel(tasks: (() => Unit)*): Unit = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
     // settle ALL tasks, then rethrow the first failure: a fail-fast
-    // Future.sequence returns while sibling store writes still run —
-    // orphan jobs racing the caller's error handling (SparkEntry's
-    // twin carries the same contract)
+    // Future.sequence returns while sibling Spark actions still run —
+    // orphan jobs that keep mutating store directories (and, in a
+    // bench, inflate the NEXT query's timed window)
     val results = Await.result(
       Future.sequence(tasks.map(task => Future(scala.util.Try(task())))),
       Duration.Inf)

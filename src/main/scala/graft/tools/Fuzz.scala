@@ -22,11 +22,12 @@ import graft.similarity.SimilarityOps
   * operator families, runs the Spark side, and emits the driver-compatible
   * layout (`<out>/<name>` parquet + `<out>/oracle_sql.json`) so
   * `tools/local_check.py` hash-compares every configuration exactly the way
-  * the driver's correctness gate does. The paired oracle SQL comes from the
-  * SAME parameterized builders the board uses (`SparkEntry.*OracleGen`,
-  * `tpch.TpchGen`) — one definition, no drift.
+  * the driver's correctness gate does. Where a board query is
+  * parameterized, both sides come from the SAME builders the board pins:
+  * `SparkEntry.*Gen` / `*OracleGen` pairs, and `tpch.TpchGen`, whose
+  * `board` list IS the 22 TPC-H board queries — one definition, no drift.
   *
-  * r10 growth: the 22 TPC-H board queries ride three families
+  * r10 growth: the TPC-H bank rides three families
   * (tpch_a/b/c) drawing the spec's public substitution parameters, five
   * analytic families (scd2 / attribution / funnel / asof / pagerank)
   * ride newly parameterized shared gens, and the orders / customer /
@@ -516,17 +517,9 @@ object Fuzz {
     val pert = r.nextInt(100) < 35
     FuzzCase(f"fz_contain_$i%03d", "containment",
       s"n=$n tau=$tau mod=$mod start=$start slen=$slen pert=$pert",
-      (s, dir) => {
-        val docs = docsOf(s, dir, pert)
-        val snips = docs
-          .filter(pmod(col("doc_id"), lit(mod)) === 0 &&
-                  length(col("text")) >= minTextLen)
-          .select((col("doc_id") + 100000).as("doc_id"),
-                  substring(col("text"), start, slen).as("text"))
-        DedupOps.containmentJoin(
-          DedupOps.hashedSets(snips, "doc_id", "text", n),
-          DedupOps.hashedSets(docs, "doc_id", "text", n), tau)
-      },
+      (s, dir) =>
+        SparkEntry.containmentGen(docsOf(s, dir, pert), n, tau, mod, start,
+                                  slen, minTextLen),
       wrapSql(SparkEntry.containmentOracleGen(n, tau, mod, start, slen,
                                               minTextLen), pert))
   }
@@ -540,16 +533,7 @@ object Fuzz {
     val ord = Seq("l_extendedprice", "l_quantity", "l_discount")(r.nextInt(3))
     val pert = r.nextInt(100) < 35
     FuzzCase(f"fz_topk_$i%03d", "topk", s"k=$k grp=$grp ord=$ord pert=$pert",
-      (s, dir) => {
-        val w = Window.partitionBy(col(grp))
-          .orderBy(col(ord).desc, col("l_orderkey").asc,
-                   col("l_linenumber").asc)
-        lineitemOf(s, dir, pert)
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= k)
-          .select(col(grp), col("rn"), col("l_orderkey"),
-                  col("l_linenumber"), col(ord))
-      },
+      (s, dir) => SparkEntry.topkGen(lineitemOf(s, dir, pert), k, grp, ord),
       wrapLineitemSql(SparkEntry.topkOracleGen(k, grp, ord), pert))
   }
 
@@ -709,23 +693,7 @@ object Fuzz {
     val grp = Seq("l_returnflag", "l_linestatus")(r.nextInt(2))
     val pert = r.nextInt(100) < 35
     FuzzCase(f"fz_topkagg_$i%03d", "topk_agg", s"k=$k grp=$grp pert=$pert",
-      (s, dir) => {
-        import s.implicits._
-        val ds = lineitemOf(s, dir, pert)
-          .select(col(grp), col("l_extendedprice"),
-                  col("l_orderkey"), col("l_linenumber"))
-          .as[(String, Option[Double], Long, Int)]
-        ds.groupByKey(_._1)
-          .mapValues { case (_, price, okey, ln) => (price, okey, ln) }
-          .agg(graft.ops.TopK.topKTriplesOpt(k).toColumn.name("top"))
-          .flatMap { case (flag, top) =>
-            top.zipWithIndex.map { case ((price, okey, ln), j) =>
-              (flag, j + 1, okey, ln, price)
-            }
-          }
-          .toDF(grp, "rn", "l_orderkey", "l_linenumber",
-                "l_extendedprice")
-      },
+      (s, dir) => SparkEntry.topkAggGen(lineitemOf(s, dir, pert), k, grp),
       wrapLineitemSql(SparkEntry.topkOracleGen(k, grp, "l_extendedprice"),
                       pert))
   }
@@ -764,18 +732,7 @@ object Fuzz {
     val hi = (15 + r.nextInt(5)) / 20.0 // 0.75..0.95
     val pert = r.nextInt(100) < 35
     FuzzCase(f"fz_winsor_$i%03d", "winsorize", s"lo=$lo hi=$hi pert=$pert",
-      (s, dir) =>
-        graft.ops.CoreOps.winsorize(eventsOf(s, dir, pert),
-                                    "value", "event_type", lo, hi)
-          .groupBy(col("event_type"))
-          .agg(count(col("value")).as("n_values"),
-               round(min(col("value_lo")), 6).as("lo"),
-               round(min(col("value_hi")), 6).as("hi"),
-               sum(when(col("value") < col("value_lo"), 1L).otherwise(0L))
-                 .as("n_clipped_lo"),
-               sum(when(col("value") > col("value_hi"), 1L).otherwise(0L))
-                 .as("n_clipped_hi"),
-               round(sum(col("value_w")), 4).as("sum_w")),
+      (s, dir) => SparkEntry.winsorizeGen(eventsOf(s, dir, pert), lo, hi),
       wrapEventsSql(SparkEntry.winsorizeOracleGen(lo, hi), pert))
   }
 
@@ -1058,24 +1015,15 @@ object Fuzz {
 
   // ---- analytic-bank families (r9 verdict gap #3) -----------------------
   // Board analytic queries previously pinned at one parameter point;
-  // the oracle gens live in SparkEntry (the board rows now call them at
-  // the pinned params — one definition, no drift).
+  // both sides live in SparkEntry (the board rows call them at the
+  // pinned params — one definition, no drift).
 
   /** SCD2 history build: the tier divisor moves every change boundary. */
   private def genScd2(r: Random, i: Int): FuzzCase = {
     val d = Seq(10, 20, 25, 40, 50, 80)(r.nextInt(6))
     val pert = r.nextInt(100) < 35
     FuzzCase(f"fz_scd2_$i%03d", "scd2", s"div=$d pert=$pert",
-      (s, dir) => {
-        val ev = eventsOf(s, dir, pert)
-          .withColumn("tier", floor(col("value") / d).cast("int"))
-        graft.ops.Scd2
-          .scd2(ev, Seq("user_id"), Seq("tier"), "ts", "event_id")
-          .select(col("user_id"), col("tier"),
-                  unix_millis(col("valid_from")).as("valid_from_ms"),
-                  unix_millis(col("valid_to")).as("valid_to_ms"),
-                  col("is_current"))
-      },
+      (s, dir) => SparkEntry.scd2Gen(eventsOf(s, dir, pert), d),
       wrapEventsSql(SparkEntry.scd2OracleGen(d), pert))
   }
 
@@ -1087,29 +1035,7 @@ object Fuzz {
     val m = 2 + r.nextInt(5) // 2..6
     val pert = r.nextInt(100) < 35
     FuzzCase(f"fz_attr_$i%03d", "attribution", s"mod=$m pert=$pert",
-      (s, dir) => {
-        val ev = eventsOf(s, dir, pert)
-        val purchases = ev
-          .filter(col("event_type") === "purchase" &&
-                  col("user_id").isNotNull && col("ts").isNotNull)
-          .select(col("event_id"), col("user_id"), col("ts").as("pts"),
-                  col("value"))
-        val clicks = ev
-          .filter(col("event_type") === "click" &&
-                  col("user_id").isNotNull && col("ts").isNotNull)
-          .select(col("user_id"), col("ts").as("cts"),
-                  col("event_id").as("click_id"),
-                  concat(lit("ch"),
-                    pmod(get_json_object(col("props"), "$.k").cast("long"),
-                         lit(m)).cast("string")).as("channel"))
-        graft.ops.AsOfJoin
-          .asofJoin(purchases, clicks, "user_id", "pts", "cts",
-                    "click_id")
-          .groupBy(coalesce(col("channel"), lit("direct")).as("channel"))
-          .agg(count(lit(1)).as("n_purchases"),
-               round(sum(coalesce(col("value"), lit(0.0))), 4)
-                 .as("revenue"))
-      },
+      (s, dir) => SparkEntry.attributionGen(eventsOf(s, dir, pert), m),
       wrapEventsSql(SparkEntry.attributionOracleGen(m), pert))
   }
 
@@ -1137,18 +1063,9 @@ object Fuzz {
     val pertE = r.nextInt(100) < 35
     val pertO = r.nextInt(100) < 35
     FuzzCase(f"fz_asof_$i%03d", "asof", s"mod=$m pertE=$pertE pertO=$pertO",
-      (s, dir) => {
-        val ev = eventsOf(s, dir, pertE)
-          .select(col("event_id"),
-                  ((col("user_id") % m) + 1).as("cust"),
-                  date_trunc("millisecond", col("ts")).as("ets"))
-        val ord = ordersOf(s, dir, pertO)
-          .select(col("o_custkey").as("cust"), col("o_orderdate"),
-                  col("o_orderkey"))
-        graft.ops.AsOfJoin.asofJoin(ev, ord, "cust", "ets",
-                                    "o_orderdate", "o_orderkey")
-          .select(col("event_id"), col("o_orderkey"))
-      },
+      (s, dir) =>
+        SparkEntry.asofGen(eventsOf(s, dir, pertE), ordersOf(s, dir, pertO),
+                           m),
       wrapOrdersSql(wrapEventsSql(SparkEntry.asofOracleGen(m), pertE),
                     pertO))
   }
@@ -1308,7 +1225,8 @@ object Fuzz {
   // three families draw the spec's own substitution parameters (dates,
   // discount ±0.01, quantity cuts, brands/types/sizes, segments,
   // nation/region picks — TPC-H v3 §2.4, adapted to the synthetic
-  // domain) and run the paired builders in graft.tpch.TpchGen. Each of
+  // domain) and run the paired builders in graft.tpch.TpchGen, whose
+  // pinned draws are the board entries (`TpchGen.board`). Each of
   // the four mutable-side tables is independently perturbed with
   // crafted degenerate rows at 30% (orphan orders, null dims, boundary
   // balances — see the crafted blocks above); wraps compose, one CTE

@@ -5,42 +5,43 @@ import java.time.LocalDate
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** PARAMETERIZED TPC-H query bank — the fuzz twin of the 22 pinned
-  * board queries (`SparkEntry` q1/q3/q5/q6/q10/q18 + `TpchExt`).
+/** The TPC-H query bank: one parameterized builder per query, and the
+  * 22 board queries as pinned draws of those builders (`board`).
   *
-  * The r9 verdict ranked the TPC-H bank the largest un-fuzzed oracle
-  * surface left: every query pinned at ONE substitution-parameter
-  * point, and the r9 sweep proved point-pinned operators hide seams at
-  * parameter boundaries. The TPC-H spec's own substitution rules
-  * (dates, discount ±0.01, quantity cuts, brands, types, sizes,
-  * segments, nation/region draws — TPC-H v3 §2.4, public) are a
-  * ready-made parameter space; each `qN` here takes those parameters
-  * and returns BOTH sides of the differential check: the Spark builder
-  * (mirroring the board query's physical shape — same broadcasts, same
-  * decorrelations, same one-pass conditional aggregates) and the
-  * DuckDB twin.
+  * Each `qN` takes the TPC-H spec's substitution parameters (dates,
+  * discount ±0.01, quantity cuts, brands, types, sizes, segments,
+  * nation/region draws — TPC-H v3 §2.4, public) and returns BOTH sides
+  * of the differential check: the Spark builder and its DuckDB twin.
+  * `board` pins each query at one parameter point; `SparkEntry.queries`
+  * takes `run` and `SparkEntry.oracleSql` takes `sql` from that list,
+  * the fuzz families (tpch_a/b/c) draw the same builders across the
+  * parameter space, so the query the driver verifies is the one the
+  * fuzzer sweeps.
   *
-  * AGGREGATE PORTABILITY — the one deliberate delta vs the board text:
-  * the board's `round(sum(double), 2)` revenue sums are order-sensitive
-  * in their low bits (the documented `genAgg` double-sum exclusion);
-  * at one pinned point they verify hash-exact, but a fuzzer emitting
-  * hundreds of configurations would hit the 0.005-rounding boundary as
-  * environmental flakes. Here every money aggregate is CENTS-QUANTIZED:
-  * the per-row expression is the query's own (`l_extendedprice *
-  * (1 - l_discount)` etc.), rounded to integer cents PER ROW (exact:
-  * the corpus is 2-decimal by construction, and per-row rounding of a
-  * full-entropy product misses the .5 midpoint with ~1e-12
-  * probability), then summed as BIGINT — exact and order-independent
-  * on both engines. The query LOGIC under fuzz (filters, joins,
-  * decorrelations, group keys, top-k orderings) is the board's;
-  * top-k orderings ride the exact cents column so ties are decided
-  * identically. The board's own rounded-double projections stay pinned
-  * by the driver's 22 oracle rows.
+  * AGGREGATE PORTABILITY: `round(sum(double), 2)` money sums are
+  * order-sensitive in their low bits (the documented `genAgg`
+  * double-sum exclusion) and land on the 0.005-rounding boundary as
+  * environmental flakes across hundreds of configurations. So every
+  * money aggregate is CENTS-QUANTIZED: the per-row expression is the
+  * query's own (`l_extendedprice * (1 - l_discount)` etc.), rounded to
+  * integer cents PER ROW (exact: the corpus is 2-decimal by
+  * construction, and per-row rounding of a full-entropy product misses
+  * the .5 midpoint with ~1e-12 probability), then summed as BIGINT —
+  * exact and order-independent on both engines. Top-k orderings ride
+  * the exact cents column so ties are decided identically. Averages
+  * are of per-row integer quantities (exact sums, one IEEE division on
+  * both engines) and round through `duckR`.
   *
-  * Scale notes carry over from the board builders unchanged: dims
-  * broadcast, correlated subqueries decorrelated to semi/anti/aggregate
-  * joins, scalar subqueries ride one-row broadcast cross joins, no
-  * global sort except under LIMIT.
+  * Scale notes: dims broadcast, correlated subqueries decorrelated to
+  * semi/anti/aggregate joins, scalar subqueries ride one-row broadcast
+  * cross joins, no global sort except under LIMIT
+  * (TakeOrderedAndProject).
+  *
+  * Adapted to the synthetic schema (TESTDATA.md): no
+  * l_commitdate/l_receiptdate → lateness is ship-lag vs o_orderdate; no
+  * partsupp → Q2/Q11/Q16/Q20 take the part↔supplier relation from
+  * lineitem co-occurrence; no c_phone → Q22 groups by c_nationkey; no
+  * o_comment → Q13 excludes one priority in the join condition.
   *
   * Reference for query intent: TPC-H spec (public); the reference
   * repo's DAG has no decision-support queries of its own
@@ -101,7 +102,8 @@ object TpchGen {
   // ---- Q1 pricing summary ---------------------------------------------
 
   /** delta ∈ [60,120] days back from 2001-12-01 (TPC-H rule shape on
-    * this corpus's 1995..2001-11 shipdate span).
+    * this corpus's 1995..2001-11 shipdate span). Price and discount
+    * averages run over per-row integer cents / percent points.
     */
   def q1(load: Loader, deltaDays: Int): Q = {
     val cutoff = LocalDate.of(2001, 12, 1).minusDays(deltaDays.toLong)
@@ -117,6 +119,10 @@ object TpchGen {
                          (lit(1.0) - col("l_discount")) *
                          (lit(1.0) + col("l_tax")))).as("charge_cents"),
                round(avg(col("l_quantity")), 6).as("avg_qty"),
+               round(avg(cents(col("l_extendedprice"))), 6)
+                 .as("avg_price_cents"),
+               round(avg(cents(col("l_discount"))) / 100, 6)
+                 .as("avg_disc"),
                count(lit(1)).as("count_order")),
       s"""SELECT l_returnflag, l_linestatus,
          |       round(sum(l_quantity), 4) AS sum_qty,
@@ -124,6 +130,10 @@ object TpchGen {
          |       ${sumCSql(revSql)} AS disc_cents,
          |       ${sumCSql(s"$revSql * (1.0 + l_tax)")} AS charge_cents,
          |       ${duckR("avg(l_quantity)", 6)} AS avg_qty,
+         |       ${duckR(s"avg(${cSql("l_extendedprice")})", 6)}
+         |         AS avg_price_cents,
+         |       ${duckR(s"avg(${cSql("l_discount")}) / 100.0", 6)}
+         |         AS avg_disc,
          |       count(*) AS count_order
          |FROM lineitem
          |WHERE l_shipdate <= ${tsSql(cutoff)}
@@ -338,13 +348,17 @@ object TpchGen {
 
   // ---- Q8 national market share -----------------------------------------
 
-  /** Share from the two cents sums (exact ints) — the division and the
-    * round-6 are then bit-identical on both engines.
+  /** The spec's draw: the customers' region is the nation's own. */
+  def q8(load: Loader, pType: String, nationKey: Int, startYear: Int): Q =
+    q8(load, pType, nationKey, nationKey % 5, startYear)
+
+  /** Share of `nationKey`'s suppliers in `custRegion`'s purchases, from
+    * the two cents sums (exact ints) — the division and the round-6 are
+    * then bit-identical on both engines.
     */
-  def q8(load: Loader, pType: String, nationKey: Int,
+  def q8(load: Loader, pType: String, nationKey: Int, custRegion: Int,
          startYear: Int): Q = {
-    val regionKey = nationKey % 5
-    val rName = regionNames(regionKey)
+    val rName = regionNames(custRegion)
     val start = LocalDate.of(startYear, 1, 1)
     val end = start.plusYears(2L)
     Q(
@@ -971,5 +985,42 @@ object TpchGen {
          |              WHERE ps2.l_partkey = ps.l_partkey)
          |ORDER BY acctbal_cents DESC, n_name, s_name, p_partkey
          |LIMIT 100""".stripMargin)
+  }
+
+  // ---- the board ---------------------------------------------------------
+
+  /** The 22 board queries, each a draw of its builder at the parameter
+    * point the board pins. The driver views (`SparkEntry.queries` and
+    * `oracleSql`) both derive from this one list.
+    */
+  val board: Seq[(String, Q)] = {
+    val L: Loader = graft.Tables.load
+    def d(iso: String) = LocalDate.parse(iso)
+    Seq(
+      "q_tpch_q1" -> q1(L, deltaDays = 1186), // shipdate <= 1998-09-02
+      "q_tpch_q2" -> q2(L, "LARGE", 10, 20, regionKey = 3),
+      "q_tpch_q3" -> q3(L, "BUILDING", d("1998-03-15")),
+      "q_tpch_q4" -> q4(L, d("1997-01-01"), months = 6, lateDays = 60),
+      "q_tpch_q5" -> q5(L, regionKey = 2, year = 1996),
+      "q_tpch_q6" -> q6(L, 1997, discCenter = 0.06, qtyCut = 24),
+      "q_tpch_q7" -> q7(L, regA = 2, regB = 3, startYear = 1996),
+      "q_tpch_q8" -> q8(L, "PROMO", nationKey = 3, custRegion = 2,
+                        startYear = 1996),
+      "q_tpch_q9" -> q9(L, "gear"),
+      "q_tpch_q10" -> q10(L, d("1997-01-01")),
+      "q_tpch_q11" -> q11(L, regionKey = 2, mult = 2.0),
+      "q_tpch_q12" -> q12(L, cut1 = 30, cut2 = 90),
+      "q_tpch_q13" -> q13(L, "5-LOW"),
+      "q_tpch_q14" -> q14(L, d("1997-03-01")),
+      "q_tpch_q15" -> q15(L, d("1997-01-01")),
+      "q_tpch_q16" -> q16(L, "Brand#45", "PROMO",
+                          Seq(1, 3, 9, 14, 19, 23, 36, 45), balCut = 0.0),
+      "q_tpch_q17" -> q17(L, "Brand#23", "MEDIUM", frac = 0.2),
+      "q_tpch_q18" -> q18(L, qtyThresh = 300),
+      "q_tpch_q19" -> q19(L, Seq("Brand#12", "Brand#23", "Brand#34"),
+                          Seq(1, 10, 20)),
+      "q_tpch_q20" -> q20(L, "SMALL", mult = 4.0),
+      "q_tpch_q21" -> q21(L, lateDays = 90, status = "F"),
+      "q_tpch_q22" -> q22(L, Seq(1, 3, 5, 7, 9, 11, 13), d("1999-01-01")))
   }
 }

@@ -1,29 +1,85 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
 
-import graft.tpch.TpchExt
+import graft.tpch.TpchGen
 
-/** Planted-data semantics pins for the TpchExt decorrelations — each case
-  * targets the part of the rewrite that a green oracle run could mask at
-  * testdata scale (EXISTS-once counting, outer-join zero groups, max ties,
-  * the EXISTS ∧ NOT-EXISTS interaction, correlated-avg thresholds).
+/** Planted-data semantics pins for the TPC-H board entries — the
+  * `TpchGen` builders that Fuzz sweeps and graftbench runs, at the
+  * board's pinned parameters. Each case targets the part of a rewrite
+  * that a green oracle run could mask at testdata scale (EXISTS-once
+  * counting, outer-join zero groups, max ties, the EXISTS ∧ NOT-EXISTS
+  * interaction, correlated-avg thresholds). Money columns are integer
+  * cents. (The class keeps its name from the retired `TpchExt` board
+  * copy, so its test ids match earlier test records.)
   */
 class TpchExtSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(d: String) = java.sql.Timestamp.valueOf(d + " 00:00:00")
 
-  /** Plant `tables` as parquet under a fresh dir and run query `q` on it. */
+  private val board = TpchGen.board.toMap
+
+  /** Plant `tables` as parquet under a fresh dir and run board query `q`
+    * on it.
+    */
   private def planted(tables: Map[String, DataFrame], q: String): DataFrame = {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "tpchext").toString
+    val dir = Files.createTempDirectory(Paths.get("target"), "tpch").toString
     tables.foreach { case (n, df) =>
       df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$n.parquet")
     }
-    TpchExt.queries(q)(spark, dir)
+    board(q).run(spark, dir)
+  }
+
+  test("board: one list drives both driver views; no second definition") {
+    val keys = TpchGen.board.map(_._1)
+    assert(keys.size == 22 && keys.toSet.size == 22)
+    assert(SparkEntry.queries.keySet.filter(_.startsWith("q_tpch_")) ==
+             keys.toSet)
+    val oracle = SparkEntry.oracleSql.filter(_._1.startsWith("q_tpch_"))
+    assert(oracle.keySet == keys.toSet)
+    oracle.foreach { case (k, sql) =>
+      assert(sql == board(k).sql, s"$k oracle is not the board's sql")
+    }
+    // the names live in the board list only: a "q_tpch_ literal
+    // anywhere else in the engine would be a second definition
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root (no $root)")
+    val hits = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { (f: Path) =>
+        val src = new String(Files.readAllBytes(f), "UTF-8")
+        "\"q_tpch_".r.findAllMatchIn(src).map(_ => f)
+      }
+    val outside =
+      hits.filterNot(_.endsWith(Paths.get("graft/tpch/TpchGen.scala")))
+    assert(outside.isEmpty, s"q_tpch_ literal outside TpchGen.board: " +
+      outside.distinct.mkString(", "))
+    assert(hits.size == 22, s"${hits.size} q_tpch_ literals, want the 22 " +
+      "board entries")
+  }
+
+  test("q1: price and discount averages are exact per-row integer means") {
+    val li = Seq(
+      ("A", "F", 1.0, 10.00, 0.04, ts("1998-01-01")),
+      ("A", "F", 2.0, 20.00, 0.05, ts("1998-06-01")),
+      ("A", "F", 3.0, 20.02, 0.07, ts("1998-09-02")), // on the cutoff
+      ("A", "F", 9.0, 999.99, 0.10, ts("1998-09-03")), // past it
+      ("N", "O", 4.0, 0.10, 0.00, ts("1997-01-01"))
+    ).toDF("l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice",
+           "l_discount", "l_shipdate")
+      .withColumn("l_tax", lit(0.0))
+    val out = planted(Map("lineitem" -> li), "q_tpch_q1")
+      .select("l_returnflag", "avg_price_cents", "avg_disc", "count_order")
+      .as[(String, Double, Double, Long)].collect().toSet
+    // (1000 + 2000 + 2002) / 3 cents; (4 + 5 + 7) / 3 / 100
+    assert(out === Set(("A", 1667.333333, 0.053333, 3L),
+                       ("N", 10.0, 0.0, 1L)))
   }
 
   test("q4: EXISTS counts an order once no matter how many late lines") {
@@ -67,8 +123,8 @@ class TpchExtSpec extends SparkSpec {
       .toDF("s_suppkey", "s_name")
     val out = planted(Map("lineitem" -> li, "supplier" -> sup),
                       "q_tpch_q15")
-      .as[(Long, String, Double)].collect().toSet
-    assert(out === Set((1L, "S1", 100.0), (2L, "S2", 100.0)))
+      .as[(Long, String, Long)].collect().toSet
+    assert(out === Set((1L, "S1", 10000L), (2L, "S2", 10000L)))
   }
 
   test("q21: only the sole late supplier of a multi-supplier order waits") {
@@ -110,8 +166,8 @@ class TpchExtSpec extends SparkSpec {
       (3L, 1.0, 9999.0)
     ).toDF("l_partkey", "l_quantity", "l_extendedprice")
     val out = planted(Map("part" -> part, "lineitem" -> li), "q_tpch_q17")
-      .as[Double].collect()
-    assert(out.toSeq === Seq(30.0)) // (70 + 140) / 7
+      .as[Long].collect()
+    assert(out.toSeq === Seq(21000L)) // 70 + 140, in cents
   }
 
   test("q2: the min is over EUROPE suppliers only, and ties all win") {
@@ -148,8 +204,8 @@ class TpchExtSpec extends SparkSpec {
     val out = planted(
       Map("nation" -> nation, "supplier" -> sup, "lineitem" -> li),
       "q_tpch_q11")
-      .as[(Long, Double)].collect().toMap
-    assert(out === Map(100L -> 1000.0))
+      .as[(Long, Long)].collect().toMap
+    assert(out === Map(100L -> 100000L))
   }
 
   test("q20: only suppliers above 4x fair share of some part qualify") {
@@ -167,8 +223,8 @@ class TpchExtSpec extends SparkSpec {
     val out = planted(
       Map("part" -> part, "lineitem" -> li, "supplier" -> sup),
       "q_tpch_q20")
-      .as[(String, Double)].collect().toSet
-    assert(out === Set(("A", 10.0)))
+      .as[(String, Long)].collect().toSet
+    assert(out === Set(("A", 1000L)))
   }
 
   test("q22: scalar cut from positive balances; recent orders disqualify") {
@@ -183,7 +239,7 @@ class TpchExtSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_orderdate")
     val out = planted(Map("customer" -> cust, "orders" -> orders),
                       "q_tpch_q22")
-      .as[(Int, Long, Double)].collect().toSet
-    assert(out === Set((1, 1L, 100.0)))
+      .as[(Int, Long, Long)].collect().toSet
+    assert(out === Set((1, 1L, 10000L)))
   }
 }
