@@ -3,6 +3,7 @@ package graft
 import scala.collection.mutable.ListBuffer
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Ownership handles for operator-internal caches.
   *
@@ -28,14 +29,18 @@ import org.apache.spark.sql.DataFrame
   * `register`, which notes the frame in the innermost active scope on
   * the CURRENT THREAD (plan construction is driver-side and
   * single-threaded per call; scopes are ThreadLocal so concurrent query
-  * builders never see each other's frames). Outside any scope `register`
-  * is a no-op passthrough — existing clearCache-based callers
-  * (Bench/Verify) are unchanged. Nested captures own their frames
-  * exclusively: an inner scope's frames belong to the inner release().
+  * builders never see each other's frames; an operator that fans out
+  * to other threads binds its tasks to its own scope with `inherit`).
+  * Outside any scope `register` is a no-op passthrough — existing
+  * clearCache-based callers (Bench/Verify) are unchanged. Nested
+  * captures own their frames exclusively: an inner scope's frames
+  * belong to the inner release().
   *
   * `release()` is idempotent and safe on frames an operator already
   * unpersisted itself (loop intermediates): `unpersist` on a non-cached
-  * frame is a Spark no-op.
+  * frame is a Spark no-op. A registered `localCheckpoint` frame is
+  * released too: `unpersist` below frees its checkpoint blocks, which
+  * `Dataset.unpersist` never reaches.
   */
 object CacheScope {
 
@@ -46,8 +51,36 @@ object CacheScope {
     */
   private[graft] def register(df: DataFrame): DataFrame = {
     val buf = current.get()
-    if (buf != null) buf += df
+    if (buf != null) buf.synchronized(buf += df)
     df
+  }
+
+  /** `task` bound to the CALLER's scope, to run on another thread (a
+    * fan-out such as CorpusRefresh.inParallel): frames it registers
+    * there belong to the caller's release(), not to no scope at all.
+    */
+  private[graft] def inherit(task: () => Unit): () => Unit = {
+    val buf = current.get()
+    () => {
+      val own = current.get()
+      current.set(buf)
+      try task() finally current.set(own)
+    }
+  }
+
+  /** Drop a frame's cached blocks. `Dataset.unpersist` reaches only
+    * CacheManager entries; a `localCheckpoint`ed frame has none — it is
+    * a LogicalRDD leaf over a persisted RDD, whose blocks would stay in
+    * `sc.getPersistentRDDs` until the session ends. Only the frame's own
+    * root counts: a frame DERIVED from a checkpoint (a pin over it, a
+    * projection of it) leaves the checkpoint to its owner.
+    */
+  private[graft] def unpersist(df: DataFrame): Unit = {
+    df.unpersist(false)
+    df.queryExecution.logical match {
+      case r: LogicalRDD if r.rdd.isCheckpointed => r.rdd.unpersist(false)
+      case _ =>
+    }
   }
 
   /** Run `body`, collecting every operator-internal persist it performs
@@ -66,11 +99,11 @@ object CacheScope {
         // with no owner — exactly the clearCache-only leak this class
         // exists to replace
         case t: Throwable =>
-          buf.foreach(_.unpersist(false))
+          buf.foreach(unpersist)
           throw t
       }
       finally current.set(outer)
-    (result, () => buf.foreach(_.unpersist(false)))
+    (result, () => buf.foreach(unpersist))
   }
 
   /** Scoped convenience: build a frame, hand it to `use`, release the

@@ -177,10 +177,11 @@ object ConnectedComponents {
     * with rounds (round 9 of the spec's path graph took minutes before
     * aborting). Re-rooting the frame as a LogicalRDD leaf over the
     * about-to-be-persisted rows keeps every round's plan constant-size.
-    * NOT localCheckpoint: its blocks are non-evictable and piled up
-    * un-reclaimably across runs in round 1 — `df.rdd` over a persisted
-    * frame reads the evictable cache instead (and merely recomputes
-    * through normal lineage if evicted).
+    * NOT localCheckpoint: its blocks are non-evictable (a lost block
+    * fails the job; only `CacheScope.unpersist` frees them) — `df.rdd`
+    * over a persisted frame reads the evictable cache instead and
+    * merely recomputes through normal lineage if evicted, which an
+    * iterative loop under memory pressure needs.
     */
   private def truncated(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(df.rdd, df.schema)

@@ -50,7 +50,9 @@ object CorpusRefresh {
     * interleave their stages): writes that land in disjoint roots — this
     * commit phase's three, the board's cascade maintenance builds —
     * would otherwise pay one driver round-trip of latency each for no
-    * ordering benefit. Any failure propagates.
+    * ordering benefit. Any failure propagates. Each task runs in the
+    * caller's CacheScope, so a pin it registers (mergeByKey's) is
+    * released with the caller's other frames.
     */
   private[graft] def inParallel(tasks: (() => Unit)*): Unit = {
     import scala.concurrent.{Await, ExecutionContext, Future}
@@ -61,7 +63,8 @@ object CorpusRefresh {
     // orphan jobs that keep mutating store directories (and, in a
     // bench, inflate the NEXT query's timed window)
     val results = Await.result(
-      Future.sequence(tasks.map(task => Future(scala.util.Try(task())))),
+      Future.sequence(tasks.map(graft.CacheScope.inherit).map(task =>
+        Future(scala.util.Try(task())))),
       Duration.Inf)
     results.collectFirst { case scala.util.Failure(e) => throw e }: Unit
   }
@@ -106,11 +109,24 @@ object CorpusRefresh {
     * so the NEXT batch screens against this one too. Returns the
     * committed survivors.
     *
-    * The flagged set is frozen via an eager localCheckpoint BEFORE any
-    * store mutation (MinhashIndex.ingest's probe-then-mutate barrier):
-    * a lost-executor recompute can never silently re-plan the probe
-    * against the post-append index. Checkpoint cost is bounded by
-    * flagged-id volume, not batch volume.
+    * Two barriers, both eager localCheckpoints taken BEFORE any store
+    * mutation (MinhashIndex.ingest's probe-then-mutate barrier):
+    *  1. the gate — the batch minus the standing fingerprints, read
+    *     once; every later plan (shingle sets, election, survivors) sits
+    *     on it as a leaf, not on the `indexRoot/fps` scan;
+    *  2. `flagged` — the cross-corpus probe's verdict. The probe's own
+    *     pins over `indexRoot/{buckets,sets}` are released right after.
+    * So when the commits start, no cache refresh holds reads a path
+    * under `indexRoot`: their `invalidate` calls find nothing of
+    * refresh's to clear and re-plan, and a lost-executor recompute can
+    * never silently re-plan the gate or the probe against the
+    * post-append stores — it fails loudly instead. Checkpoint cost is
+    * bounded by the gated batch and the flagged-id volume.
+    *
+    * Cache ownership: the gate, `flagged`, the election's pins and
+    * mergeByKey's pin register with CacheScope and back the returned
+    * survivors plan — release them (CacheScope.capture) after consuming
+    * it; the release frees the checkpoint blocks too.
     */
   def refresh(batch: DataFrame, idCol: String, textCol: String,
               tableRoot: String, indexRoot: String,
@@ -123,14 +139,20 @@ object CorpusRefresh {
     val standingFps = Tables.read(spark, s"$indexRoot/fps")
       .join(batch.select(col(idCol).as("id")), Seq("id"), "left_anti")
       .select(col("fp")).distinct()
-    // pinned: gated feeds the within-batch shingle sets AND the final
-    // survivor anti-joins — unpinned, its lineage (the fingerprint
-    // anti-join) re-executes per consumer under AQE (DedupOps.pinned)
-    val gated = DedupOps.pinned(batch
+    // barrier 1: the gate is FROZEN, not pinned — the standing
+    // fingerprints are read once, before any mutation. gated feeds the
+    // within-batch shingle sets, the election and the survivor anti-
+    // joins; as a checkpoint it is a plan leaf under all of them, so
+    // their plans stop nesting the fingerprint anti-join (AQE re-explains
+    // every nested cached plan at each stage) and no store invalidation
+    // can match them — their lineage no longer reads `indexRoot/fps`.
+    val gated = batch
       .filter(TextOps.tokenCount(col(textCol)) >= minTokens)
       .join(standingFps,
             TextOps.fingerprint(col(textCol)) === col("fp"),
-            "left_anti"))
+            "left_anti")
+      .localCheckpoint(true)
+      .transform(graft.CacheScope.register)
     val gSets = DedupOps.hashedSets(gated, idCol, textCol, n)
     // ONE signing+banding pass over the batch, pinned and shared by all
     // three consumers (within-batch election, cross-corpus probe, store
@@ -159,12 +181,18 @@ object CorpusRefresh {
     // cross-corpus screen: batch canonicals vs the persisted index —
     // warehouse text is never read. Recall contract is minhashLshPairs'
     // banding geometry; every emitted candidate is exact-Jaccard
-    // verified, so precision is exact.
-    val flagged = MinhashIndex.probePostings(canonSets, canonPostings,
-                                             indexRoot, tau)
-      .select(col("id_b").as("id")).distinct()
-      .localCheckpoint(true)
-      .transform(graft.CacheScope.register)
+    // verified, so precision is exact. barrier 2: flagged is frozen,
+    // then the probe's own pins (candidates and verify ids over
+    // `indexRoot/{buckets,sets}`) are released at once — nothing reads
+    // them past the checkpoint, and held through the commits every
+    // `invalidate(indexRoot)` would clear and re-plan them.
+    val (flagged, releaseProbe) = graft.CacheScope.capture {
+      MinhashIndex.probePostings(canonSets, canonPostings, indexRoot, tau)
+        .select(col("id_b").as("id")).distinct()
+        .localCheckpoint(true)
+    }
+    releaseProbe()
+    graft.CacheScope.register(flagged)
     val dropIds = drops.withColumnRenamed("id", idCol)
     val flaggedIds = flagged.withColumnRenamed("id", idCol)
     val survivors = gated
@@ -188,9 +216,11 @@ object CorpusRefresh {
                 TextOps.fingerprint(col(textCol)).as("fp"))
         .join(presentFps, Seq("id"), "left_anti")
         .write.mode("append").parquet(s"$indexRoot/fps"))
-    Sinks.invalidate(spark, indexRoot)
+    // the batch-only pins go first: the closing invalidate then
+    // re-plans only caches that outlive refresh
     bucketed.unpersist(false)
     gSets.unpersist(false)
+    Sinks.invalidate(spark, indexRoot)
     survivors
   }
 
@@ -215,9 +245,9 @@ object CorpusRefresh {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // per-epoch cache ownership (the ingestStream pattern):
-        // refresh's internal pins (gated batch, banded postings,
-        // election drops, verify candidates) register into this scope
-        // and are released once its commits return — an unscoped
+        // refresh's gate and flagged checkpoints, election pins and
+        // merge pin register into this scope and are released (blocks
+        // included) once its commits return — an unscoped
         // stream would orphan them per epoch, growing the
         // CacheManager without bound. All of refresh's own actions
         // (the store commits) run INSIDE the scope; the returned

@@ -291,19 +291,24 @@ object MinhashIndex {
     * means a lost-executor recompute can never silently re-plan the
     * probe against the mutated index — it fails loudly instead (the
     * probe-then-mutate race every read-modify store has). Returns the
-    * checkpointed pairs (registered with CacheScope for release).
+    * checkpointed pairs, registered with CacheScope: its release frees
+    * the checkpoint blocks.
     */
   def ingest(batch: DataFrame, idCol: String, textCol: String,
              root: String, tau: Double): DataFrame = {
     val spark = batch.sparkSession
     val (n, k, bands) = readParams(spark, root)
     val bsets = DedupOps.hashedSets(batch, idCol, textCol, n)
-    val pairs = probeSets(bsets, root, tau, k, bands)
-      .localCheckpoint(true)
-      .transform(graft.CacheScope.register)
+    // the probe's own pins (candidates, verify ids) read `root`: release
+    // them once the pairs are frozen, before appendSets' invalidate(root)
+    // would clear and re-plan them for nothing
+    val (pairs, releaseProbe) = graft.CacheScope.capture {
+      probeSets(bsets, root, tau, k, bands).localCheckpoint(true)
+    }
+    releaseProbe()
     appendSets(bsets, root, k, bands)
     bsets.unpersist(false)
-    pairs
+    graft.CacheScope.register(pairs)
   }
 
   /** Streaming ingest: near-dup screening AT INGEST TIME, with the

@@ -217,12 +217,19 @@ object SketchOps {
     * the HLL twin ([[appendDailySketches]], whose register-max merge
     * makes re-delivery a free no-op), count-addition DOUBLE-COUNTS a
     * re-delivered batch — so exactly-once effect comes from an applied-
-    * batch ledger that lives INSIDE the table root (`<path>/_applied`)
+    * batch ledger that lives INSIDE the table root (`<path>/applied`)
     * and commits ATOMICALLY with the data (`<path>/data`) in one
     * [[graft.io.Sinks.stagedReplace]] swap: a crash anywhere leaves the
     * old root (data + ledger consistent) serving; a re-delivered
     * batchId after success is an exact no-op. Work is bounded by batch
     * volume plus the kilobyte-scale sketch table rewrite.
+    *
+    * The ledger name must not start with `_` or `.`: Spark treats such
+    * paths as hidden, so a read of one warns "All paths were ignored"
+    * and succeeds only by Spark's fallback. A table written under the
+    * old name (`<path>/_applied`) still reads its ledger from there,
+    * and its next swap writes only `applied` — the migration rides the
+    * same atomic swap as the data.
     */
   def appendDailyValueSketches(spark: org.apache.spark.sql.SparkSession,
                                path: String, batch: DataFrame,
@@ -236,10 +243,13 @@ object SketchOps {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val exists = fs.exists(new Path(path))
     val applied: Set[String] =
-      if (exists)
-        Tables.read(spark, s"$path/_applied")
+      if (!exists) Set.empty
+      else {
+        val ledger = Seq(s"$path/applied", s"$path/_applied")
+          .find(d => fs.exists(new Path(d))).getOrElse(s"$path/applied")
+        Tables.read(spark, ledger)
           .select(col("batch_id")).collect().map(_.getString(0)).toSet
-      else Set.empty
+      }
     if (applied.contains(batchId)) return // re-delivery: exact no-op
     val fresh = dailyValueSketches(batch, keyCol, tsCol, valueCol, alpha)
     val merged =
@@ -252,7 +262,7 @@ object SketchOps {
     val ledger = (applied + batchId).toSeq.sorted.toDF("batch_id")
     graft.io.Sinks.stagedReplace(spark, path) { stage =>
       merged.write.parquet(s"$stage/data")
-      ledger.coalesce(1).write.parquet(s"$stage/_applied")
+      ledger.coalesce(1).write.parquet(s"$stage/applied")
     }
   }
 

@@ -1458,7 +1458,7 @@ object SimilarityOps {
         new org.apache.hadoop.fs.Path(s"$path/lists/list_id=$lid"), true)
     }
     graft.io.Sinks.invalidate(spark, path)
-    keep.unpersist(false)
+    graft.CacheScope.unpersist(keep)
   }
 
   // ---------------------------------------------------------- IVF × PQ

@@ -264,7 +264,7 @@ object Bm25Index {
         .agg(coalesce(count(lit(1)).cast("double"), lit(0d)).as("n"),
              coalesce(sum(col("dl")), lit(0d)).as("sum_dl"))
       s.coalesce(1).write.parquet(s"$stage/stats/epoch=1")
-      kept.unpersist(false)
+      graft.CacheScope.unpersist(kept)
       Tables.read(spark, s"$root/params")
         .coalesce(1).write.parquet(s"$stage/params")
       val fs = fsFor(spark, stage)

@@ -3,8 +3,9 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{Session, SparkEntry}
@@ -16,7 +17,8 @@ import graft.{Session, SparkEntry}
   *
   *  - `time`: SPARK_GRAFT_RUNS (default 4) timed runs per query.
   *  - `jobs`: one timed run with per-job and per-stage lines — separates
-  *    driver/scheduling overhead from real compute.
+  *    driver/scheduling overhead from real compute; each job line ends
+  *    with the call site of the action that started it.
   *  - `driver`: `jobs` plus where the driver's own time goes (r12: the
   *    ~50 ms/job fixed cost of the store-lifecycle queries): time
   *    between jobs, catalyst phases, janino compiles, and a stack sample
@@ -86,23 +88,41 @@ object Probe {
     * per-job and per-stage report lines, and the catalyst phase time
     * (QueryPlanningTracker) of every action — analysis/optimization/
     * planning are the driver-side phases; execution is the jobs.
+    *
+    * Each job line names its call site. AQE stage jobs carry none of
+    * their own (their stages are named after an anonymous closure), so
+    * a job inside a SQL execution takes the execution's description —
+    * the call site of the action that started it, e.g. `head at
+    * DedupOps.scala:172` — via its `spark.sql.execution.id` property;
+    * any other job takes its result stage's name.
     */
-  private final class RunLog extends SparkListener
+  private[graft] final class RunLog extends SparkListener
       with QueryExecutionListener {
-    private val starts = mutable.Map[Int, Long]()
+    private val starts = mutable.Map[Int, (Long, String)]()
+    private val execSites = mutable.Map[Long, String]()
     private val intervals = mutable.ArrayBuffer[(Long, Long)]()
     private val lines = mutable.ArrayBuffer[String]()
     private val phaseNs = mutable.Map[String, Long]().withDefaultValue(0L)
     private var taskTimeMs, nStages, nExecs = 0L
 
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        synchronized { execSites(s.executionId) = s.description }
+      case _ =>
+    }
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      starts(e.jobId) = System.nanoTime()
+      val exec = Option(e.properties)
+        .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+      val site = exec.flatMap(id => execSites.get(id.toLong))
+        .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name))
+        .getOrElse("")
+      starts(e.jobId) = (System.nanoTime(), site)
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-      starts.remove(e.jobId).foreach { s =>
+      starts.remove(e.jobId).foreach { case (s, site) =>
         val end = System.nanoTime()
         intervals += ((s, end))
-        lines += f"job ${e.jobId}%3d ${(end - s) / 1e9}%7.3f s"
+        lines += f"job ${e.jobId}%3d ${(end - s) / 1e9}%7.3f s  $site"
       }
     }
     // stage wall far above taskTime/cpus: a serialized or skewed stage
@@ -132,9 +152,12 @@ object Probe {
                            error: Exception): Unit = ()
 
     def reset(): Unit = synchronized {
-      starts.clear(); intervals.clear(); lines.clear(); phaseNs.clear()
-      taskTimeMs = 0L; nStages = 0L; nExecs = 0L
+      starts.clear(); execSites.clear(); intervals.clear(); lines.clear()
+      phaseNs.clear(); taskTimeMs = 0L; nStages = 0L; nExecs = 0L
     }
+
+    /** The per-job and per-stage lines `reportJobs` prints. */
+    private[graft] def jobLines: Seq[String] = synchronized(lines.toSeq)
 
     def reportJobs(name: String, rows: Long, wall: Double): Unit =
       synchronized {

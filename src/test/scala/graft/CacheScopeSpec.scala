@@ -70,4 +70,58 @@ class CacheScopeSpec extends SparkSpec {
     assert(pinnedIds.size > before.size)
     spark.catalog.clearCache()
   }
+
+  test("checkpoint blocks are freed: a registered localCheckpoint on " +
+       "release, and the store operators' own checkpoints on return") {
+    import graft.dedup.MinhashIndex
+    import graft.io.Sinks
+    import graft.similarity.SimilarityOps
+    import graft.text.Bm25Index
+    spark.catalog.clearCache()
+    val root = s"${Sinks.scratchRoot}/spec_scope_ckpt"
+    Sinks.dropTable(spark, root)
+    val before = pinnedIds
+
+    // Dataset.unpersist alone leaves a checkpoint's RDD persisted
+    val (_, release) = CacheScope.capture {
+      CacheScope.register(docsDf.localCheckpoint(true))
+    }
+    assert(pinnedIds.size === before.size + 1)
+    release()
+    assert(pinnedIds === before, "release() must free checkpoint blocks")
+
+    // MinhashIndex.ingest returns its registered, checkpointed pairs
+    MinhashIndex.build(docsDf.filter($"doc_id" <= 2), "doc_id", "text",
+                       s"$root/mh", n = 5, k = 32, bands = 8)
+    val (pairs, releaseIngest) = CacheScope.capture {
+      MinhashIndex.ingest(docsDf.filter($"doc_id" > 2), "doc_id", "text",
+                          s"$root/mh", 0.8)
+    }
+    pairs.count()
+    releaseIngest()
+    assert(pinnedIds === before, "ingest must leave no blocks behind")
+
+    // compactIndex and forgetFromIndex own their checkpoints outright
+    Bm25Index.build(docsDf, s"$root/bm25", buckets = 4)
+    Bm25Index.forget(Seq(2L).toDF("doc_id"), s"$root/bm25")
+    spark.catalog.clearCache()
+    val beforeCompact = pinnedIds
+    Bm25Index.compactIndex(spark, s"$root/bm25")
+    assert(pinnedIds === beforeCompact,
+           "Bm25Index.compactIndex leaked blocks")
+    val emb = (0L until 6L).map(i => (i, Seq(1.0 * (i % 2), 1.0 - i % 2)))
+      .toDF("vec_id", "embedding")
+    val cents = SimilarityOps.seedCentroids(emb, "vec_id", "embedding",
+                                            nlist = 2)
+    SimilarityOps.saveIndex(
+      SimilarityOps.ivfAssignTo(emb, "vec_id", "embedding", cents),
+      cents, s"$root/ivf")
+    spark.catalog.clearCache()
+    val beforeForget = pinnedIds
+    SimilarityOps.forgetFromIndex(Seq(1L).toDF("vec_id"), "vec_id",
+                                  s"$root/ivf")
+    assert(pinnedIds === beforeForget,
+           "SimilarityOps.forgetFromIndex leaked blocks")
+    Sinks.dropTable(spark, root)
+  }
 }

@@ -146,4 +146,91 @@ class CorpusRefreshSpec extends SparkSpec {
     assert(spark.read.parquet(s"$root/mh/buckets").count() === buckets1)
     assert(spark.read.parquet(s"$root/mh/fps").count() === fps1)
   }
+
+  private def persistentRdds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** The logical plans of every CacheManager entry. The entry list has
+    * no public accessor, so it is read reflectively (test-only).
+    */
+  private def cachedPlans: Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
+    import org.apache.spark.sql.execution.{CacheManager, CachedData}
+    val m = classOf[CacheManager].getDeclaredMethod("cachedData")
+    m.setAccessible(true)
+    m.invoke(spark.sharedState.cacheManager)
+      .asInstanceOf[IndexedSeq[CachedData]].map(_.plan)
+  }
+
+  /** True when `plan` scans a file path under `root`. */
+  private def reads(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+                    root: String): Boolean = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val under = new org.apache.hadoop.fs.Path(root).toUri.getPath
+    plan.exists {
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation =>
+          fs.location.rootPaths.exists(_.toUri.getPath.startsWith(under))
+        case _ => false
+      }
+      case _ => false
+    }
+  }
+
+  test("refresh holds nothing once released: after CacheScope release " +
+       "and after a refreshStream epoch, persistent RDDs and the cache " +
+       "are as before (checkpoint blocks included)") {
+    val root = s"${Sinks.scratchRoot}/spec_refresh_release"
+    establish(root)
+    spark.catalog.clearCache()
+    val before = persistentRdds
+    val (surv, release) = CacheScope.capture {
+      CorpusRefresh.refresh(batch, "doc_id", "text", s"$root/table",
+                            s"$root/mh", tau, minTok)
+    }
+    assert(ids(surv) === Set(7L, 11L))
+    assert(persistentRdds.size > before.size, "refresh should hold blocks")
+    release()
+    assert(persistentRdds === before, "release() must free every block " +
+      "refresh holds, the gate and flagged checkpoints included")
+    assert(spark.sharedState.cacheManager.isEmpty)
+
+    val inDir = s"$root/in"; val ckpt = s"$root/ckpt"
+    Seq((21L, "one more stream epoch document with enough tokens here"))
+      .toDF("doc_id", "text").coalesce(1)
+      .write.mode("append").parquet(inDir)
+    val q = CorpusRefresh.refreshStream(
+      spark.readStream.schema(batch.schema).parquet(inDir), "doc_id",
+      "text", s"$root/table", s"$root/mh", tau, minTok, ckpt)
+    try q.processAllAvailable() finally q.stop()
+    assert(ids(spark.read.parquet(s"$root/table")) ===
+      Set(2L, 4L, 6L, 7L, 11L, 21L))
+    assert(persistentRdds === before, "a refreshStream epoch must free " +
+      "every block it held")
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("when the commits start, no cache refresh holds reads the index " +
+       "root: the store invalidations find nothing of refresh's to " +
+       "clear and re-plan") {
+    val root = s"${Sinks.scratchRoot}/spec_refresh_frozen"
+    establish(root)
+    spark.catalog.clearCache()
+    // checked on return, before release: past the commit start refresh
+    // adds only mergeByKey's pin over the survivors (gate and flagged
+    // checkpoints, election pin) and drops only the batch-only shingle
+    // and postings pins, so what reads the index root now is what read
+    // it when the commits started
+    val (surv, release) = CacheScope.capture {
+      CorpusRefresh.refresh(batch, "doc_id", "text", s"$root/table",
+                            s"$root/mh", tau, minTok)
+    }
+    try {
+      assert(ids(surv) === Set(7L, 11L))
+      val plans = cachedPlans
+      assert(plans.nonEmpty, "refresh should hold caches until release")
+      val stale = plans.filter(reads(_, s"$root/mh"))
+      assert(stale.isEmpty, s"${stale.size} cache(s) held by refresh " +
+        s"read the index root:\n${stale.mkString("\n")}")
+    } finally release()
+  }
 }

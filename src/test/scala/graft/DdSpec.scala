@@ -93,6 +93,38 @@ class DdSpec extends SparkSpec {
     }
   }
 
+  test("appendDailyValueSketches: visible ledger name; a table with the " +
+       "old `_applied` ledger still dedups and migrates in its next swap") {
+    import java.sql.Timestamp
+    import org.apache.hadoop.fs.Path
+    import graft.io.Sinks
+    import graft.ops.SketchOps
+    val root = s"${Sinks.scratchRoot}/spec_dd_ledger"
+    Sinks.dropTable(spark, root)
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def ev(d: Int) = (1 to 5).map(i =>
+      (Timestamp.valueOf(f"2024-01-$d%02d 12:00:00"), "t", i * 1.0))
+      .toDF("ts", "event_type", "value")
+    def quantiles(): Seq[(String, Double)] =
+      SketchOps.quantileReport(Tables.read(spark, s"$root/data"))
+        .select($"event_type", $"p95").as[(String, Double)].collect().toSeq
+    SketchOps.appendDailyValueSketches(spark, root, ev(1), "b1")
+    assert(fs.exists(new Path(s"$root/applied")))
+    assert(!fs.exists(new Path(s"$root/_applied")))
+    // the layout earlier versions wrote: the same ledger, hidden name
+    fs.rename(new Path(s"$root/applied"), new Path(s"$root/_applied"))
+    val once = quantiles()
+    SketchOps.appendDailyValueSketches(spark, root, ev(1), "b1")
+    assert(quantiles() === once, "re-delivery against the old ledger")
+    assert(fs.exists(new Path(s"$root/_applied")))
+    SketchOps.appendDailyValueSketches(spark, root, ev(2), "b2")
+    assert(fs.exists(new Path(s"$root/applied")))
+    assert(!fs.exists(new Path(s"$root/_applied")))
+    assert(Tables.read(spark, s"$root/applied").as[String].collect().toSet
+      === Set("b1", "b2"))
+    Sinks.dropTable(spark, root)
+  }
+
   test("streaming sketch build: windowed dd_agg on a stream = batch") {
     import java.sql.Timestamp
     val dir = "/root/repo/target/scratch/dd_stream"

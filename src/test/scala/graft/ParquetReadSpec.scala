@@ -112,7 +112,7 @@ class ParquetReadSpec extends SparkSpec {
       ev.filter(dayofmonth(col("ts")) <= 15), "b1")
     SketchOps.appendDailyValueSketches(spark, s"$root/vs",
       ev.filter(dayofmonth(col("ts")) > 15), "b2")
-    Seq("_applied", "data").foreach(p => sameAsSpark(s"$root/vs/$p"))
+    Seq("applied", "data").foreach(p => sameAsSpark(s"$root/vs/$p"))
     SketchOps.appendDailySketches(spark, s"$root/hll", ev)
     sameAsSpark(s"$root/hll")
     Sinks.dropTable(spark, root)

@@ -1,10 +1,10 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions._
 
 import graft.tools.Probe
 
-class ProbeSpec extends AnyFunSuite {
+class ProbeSpec extends SparkSpec {
 
   test("median is the middle sample, or the mean of the two middle ones") {
     assert(Probe.median(Seq(3.0)) === 3.0)
@@ -30,5 +30,25 @@ class ProbeSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Probe.parse(Seq("time")))
     intercept[IllegalArgumentException](
       Probe.parse(Seq("ab", "--conf", "spark.k=A", "q_a")))
+  }
+
+  test("jobs lines name each job's call site, AQE stage jobs included") {
+    val log = new Probe.RunLog
+    spark.sparkContext.addSparkListener(log)
+    try {
+      // one aggregation under AQE: a shuffle-stage job (no call site of
+      // its own) and the result job, both inside one SQL execution
+      val n = jobsStartedBy {
+        spark.range(0, 1000, 1, 4).groupBy(col("id") % 7).count()
+          .collect()
+      }
+      assert(n >= 2, s"expected a stage job and a result job, got $n")
+      val jobs = log.jobLines.filter(_.startsWith("job "))
+        .filterNot(_.contains("SparkSpec.scala")) // the drain sentinel
+      assert(jobs.size === n)
+      jobs.foreach(l =>
+        assert(l.matches(".* s  collect at ProbeSpec\\.scala:\\d+"),
+               s"unattributed job line: $l"))
+    } finally spark.sparkContext.removeSparkListener(log)
   }
 }
