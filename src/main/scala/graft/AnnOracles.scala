@@ -2,7 +2,7 @@ package graft
 
 /** GENERATED DuckDB twins for the ANN index family — queries that were
   * rows-only through round 6 ("k-means / index internals aren't
-  * reasonably SQL-expressible") until the kcenterOracle precedent
+  * reasonably SQL-expressible") until the kcenterOracleGen precedent
   * showed the real recipe: every one of these pipelines is a FIXED
   * number of deterministic dataflow steps (seed → assign → mean →
   * encode → serve), so the oracle is the same dataflow written as a

@@ -4,6 +4,7 @@ import scala.collection.mutable.ListBuffer
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** Ownership handles for operator-internal caches.
   *
@@ -54,6 +55,19 @@ object CacheScope {
     if (buf != null) buf.synchronized(buf += df)
     df
   }
+
+  /** persist(MEMORY_AND_DISK) + `register` for an operator-internal
+    * frame that several plan branches consume. The pin is LOAD-BEARING
+    * for plan cost, not just convenience: AQE materializes its query
+    * stages independently and does not reuse exchanges whose subtree
+    * reads an InMemoryRelation, so an UNpinned multi-consumer frame gets
+    * its whole lineage re-executed once per consuming branch (measured
+    * 5× on the verify candidate join — NgramPropertySpec pins the fix).
+    * Eager materialization was measured as a strict loss here (one extra
+    * pass, no reuse gain) — the cache fills lazily at first action.
+    */
+  private[graft] def pin(df: DataFrame): DataFrame =
+    register(df.persist(StorageLevel.MEMORY_AND_DISK))
 
   /** `task` bound to the CALLER's scope, to run on another thread (a
     * fan-out such as CorpusRefresh.inParallel): frames it registers

@@ -2,7 +2,6 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed connected components over an undirected edge list, via the
   * alternating large-star / small-star algorithm (Kiveris et al.,
@@ -78,8 +77,7 @@ object ConnectedComponents {
               least(col(aCol), col(bCol)).as("v"))
       .filter(col("u") =!= col("v"))
     var e = truncated(if (assumeDistinct) canon else canon.distinct())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
 
     // Round-0 check: the stats action is also what materializes the
     // (lazy) canonical-edge cache.
@@ -131,8 +129,7 @@ object ConnectedComponents {
         .union(mSmall.select(col("u"), col("m").as("v")))
         .filter(col("u") =!= col("v"))
         .distinct())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-        .transform(graft.CacheScope.register)
+        .transform(graft.CacheScope.pin)
 
       st = starStats(next)
       e.unpersist()

@@ -163,7 +163,7 @@ object CorpusRefresh {
     // is exact; recall is the banding contract both screens already
     // share) — measured faster than the exact prefix join here, and one
     // geometry means one recall story for the whole refresh.
-    val bucketed = DedupOps.pinned(DedupOps.lshBuckets(gSets, k, bands))
+    val bucketed = graft.CacheScope.pin(DedupOps.lshBuckets(gSets, k, bands))
     val cand = bucketed.as("a")
       .join(bucketed.as("b"),
             col("a.band") === col("b.band") &&
@@ -171,7 +171,7 @@ object CorpusRefresh {
               col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    val drops = DedupOps.pinned(ConnectedComponents.connectedComponents(
+    val drops = graft.CacheScope.pin(ConnectedComponents.connectedComponents(
         DedupOps.verifyPairs(cand, gSets, tau),
         "id_a", "id_b", assumeDistinct = true)
       .filter(col("id") =!= col("comp"))

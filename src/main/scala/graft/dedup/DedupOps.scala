@@ -3,7 +3,6 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{SetExpressions, ShingleExpressions}
 import graft.text.TextOps
@@ -26,21 +25,6 @@ import graft.text.TextOps
   *    output is still exact for pairs LSH surfaces.
   */
 object DedupOps {
-
-  /** persist(MEMORY_AND_DISK) + CacheScope registration for an
-    * operator-internal frame that several plan branches consume. The
-    * pin is LOAD-BEARING for plan cost, not just convenience: AQE
-    * materializes its query stages independently and does not reuse
-    * exchanges whose subtree reads an InMemoryRelation, so an UNpinned
-    * multi-consumer frame gets its whole lineage re-executed once per
-    * consuming branch (measured 5× on the verify candidate join —
-    * NgramPropertySpec pins the fix). Eager materialization was
-    * measured as a strict loss here (one extra pass, no reuse gain) —
-    * the cache fills lazily at first action.
-    */
-  private[graft] def pinned(df: DataFrame): DataFrame =
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
 
   /** Keyed dedup, deterministic survivor = min id per key group. */
   def dedupKeyed(df: DataFrame, keys: Seq[String], idCol: String): DataFrame =
@@ -117,7 +101,8 @@ object DedupOps {
       .select(col(idCol).as("id"),
               ShingleExpressions.shingleHashes(col(textCol), n).as("hs"))
       .withColumn("sz", size(col("hs")))
-      .transform(pinned) // fills at first action (eagerly, see pinned)
+      // fills at first action (why not eagerly: see CacheScope.pin)
+      .transform(graft.CacheScope.pin)
 
   /** Exact-Jaccard verification of candidate pairs. The shingle-set
     * payloads are first semi-join-reduced to ids that actually appear in
@@ -162,7 +147,7 @@ object DedupOps {
   private def joinPayloads(cand: DataFrame, sets: DataFrame): DataFrame = {
     val candIds = cand.select(col("id_a").as("id"))
       .union(cand.select(col("id_b").as("id"))).distinct()
-      .transform(pinned)
+      .transform(graft.CacheScope.pin)
     val needed = sets.join(candIds, Seq("id"), "left_semi")
     // runtime sizes: gram longs dominate; 48 B/row covers struct+array
     // overhead. Two narrow jobs over cached frames — O(needed) +
@@ -206,7 +191,7 @@ object DedupOps {
     // candidate join re-executed 5× (10 duplicate map stages, ~60% of
     // the query's task time). Candidates are narrow id pairs, so the
     // cache is small by the same bound that makes the operator scale.
-    val cand = pinned(cand0)
+    val cand = graft.CacheScope.pin(cand0)
     joinPayloads(cand, sets)
       .withColumn("common", ShingleExpressions.sortedLongIntersectCount(
         col("set_a"), col("set_b")))
@@ -260,7 +245,7 @@ object DedupOps {
       // AQE broadcasts this frame for the self-join (an exchange here is
       // pure overhead), and at SMJ scale the two sides' exchanges are
       // identical so ReuseExchange already collapses them to one.
-      .transform(pinned)
+      .transform(graft.CacheScope.pin)
     // length filter: J(A,B) ≥ τ forces τ·|B| ≤ |A| ≤ |B|/τ — prunes
     // size-mismatched candidates before the expensive verify.
     //
@@ -352,7 +337,7 @@ object DedupOps {
       .select(lit(0).as("side"), col("id"), col("hs"), col("sz"))
       .unionByName(setsB
         .select(lit(1).as("side"), col("id"), col("hs"), col("sz")))
-      .transform(pinned)
+      .transform(graft.CacheScope.pin)
     val postings = tagged.select(col("side"), col("id"), col("sz"),
                                  explode(col("hs")).as("sh"))
     val freq = reuseFreq.getOrElse(
@@ -368,7 +353,7 @@ object DedupOps {
       .filter(col("rn") <=
         floor(lit(1.0 - tau) * col("sz") + lit(1e-9)).cast("int") + 1)
       .select("side", "id", "sh", "sz", "rn")
-      .transform(pinned)
+      .transform(graft.CacheScope.pin)
     val overlapBound =
       least(col("a.rn"), col("b.rn")) +
         least(col("a.sz") - col("a.rn"), col("b.sz") - col("b.rn"))
@@ -401,7 +386,7 @@ object DedupOps {
                                 tau: Double): DataFrame = {
     // pin cand + candIds: same 5-branch re-execution as verifyPairs
     // (the long comment there applies verbatim)
-    val cand = pinned(cand0)
+    val cand = graft.CacheScope.pin(cand0)
     joinPayloads(cand, sets)
       .withColumn("common", ShingleExpressions.sortedLongIntersectCount(
         col("set_a"), col("set_b")))
@@ -502,7 +487,7 @@ object DedupOps {
         Window.partitionBy(col("id"))
           .orderBy(col("df").asc, col("sh").asc)))
       .select("id", "sh", "sz", "rn")
-      .transform(pinned)
+      .transform(graft.CacheScope.pin)
     val cand = containmentCandidates(
       ranked.filter(col("rn") <= containPrefixBound(tau)), ranked,
       idCond, tau)
@@ -525,7 +510,7 @@ object DedupOps {
       .select(lit(0).as("side"), col("id"), col("hs"), col("sz"))
       .unionByName(setsB
         .select(lit(1).as("side"), col("id"), col("hs"), col("sz")))
-      .transform(pinned)
+      .transform(graft.CacheScope.pin)
     val postings = tagged.select(col("side"), col("id"), col("sz"),
                                  explode(col("hs")).as("sh"))
     val freq = postings.groupBy("sh").agg(count(lit(1)).as("df"))
@@ -534,7 +519,7 @@ object DedupOps {
         Window.partitionBy(col("side"), col("id"))
           .orderBy(col("df").asc, col("sh").asc)))
       .select("side", "id", "sh", "sz", "rn")
-      .transform(pinned)
+      .transform(graft.CacheScope.pin)
     val cand = containmentCandidates(
       ranked.filter(col("side") === 0 &&
                     col("rn") <= containPrefixBound(tau)),
@@ -708,7 +693,7 @@ object DedupOps {
       .select(explode(ShingleExpressions.shingleHashes(col(textCol), n))
         .as("sh"))
       .distinct()
-      .transform(pinned)
+      .transform(graft.CacheScope.pin)
     // one scalar action sizes the filter; the gram set is persisted for
     // its other consumers
     val m = math.max(refGrams.count(), 1L)
@@ -1021,7 +1006,7 @@ object DedupOps {
       .select(col("a.cfg").as("cfg"),
               col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-      .transform(pinned)
+      .transform(graft.CacheScope.pin)
     // grid configs overlap heavily in candidates: exact-verify each
     // DISTINCT pair once and attribute per config afterwards — the
     // Jaccard work scales with the candidate UNION, not the grid sum

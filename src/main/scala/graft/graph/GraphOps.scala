@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Graph analytics over entity co-occurrence graphs — the corpus-quality
   * signals a web-scale training pipeline computes over its link /
@@ -33,16 +32,9 @@ import org.apache.spark.storage.StorageLevel
   *  - Fixed iteration counts + per-iteration rounding onto a shared
   *    decimal grid make the whole pipeline a deterministic dataflow, so
   *    the DuckDB oracle is the same dataflow as an unrolled CTE chain
-  *    (the kcenterOracle / AnnOracles recipe).
+  *    (the kcenterOracleGen / AnnOracles recipe).
   */
 object GraphOps {
-
-  /** See DedupOps.pinned — multi-consumer operator-internal frames must
-    * be pinned or AQE re-executes their lineage once per consumer.
-    */
-  private def pinned(df: DataFrame): DataFrame =
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
 
   /** Undirected co-purchase edge list from `lineitem`: one (src < dst)
     * row per part pair sharing an order. `modulus` is the fixture dial:
@@ -115,7 +107,7 @@ object GraphOps {
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    val sym = pinned(
+    val sym = graft.CacheScope.pin(
       if (edgeParts > 0) sym0.repartition(edgeParts, col("src")) else sym0)
     val joinMass = (mass: DataFrame) =>
       if (edgeParts > 0) sym.join(mass.hint("shuffle_hash"), "src")
@@ -126,7 +118,7 @@ object GraphOps {
   def pageRank(edges: DataFrame, iters: Int = 3, damping: Double = 0.85,
                scale: Int = 9, edgeParts: Int = 0): DataFrame = {
     val (sym, joinMass) = symmetrized(edges, edgeParts)
-    val spine = pinned(sym.groupBy("src").agg(count(lit(1)).as("deg"))
+    val spine = graft.CacheScope.pin(sym.groupBy("src").agg(count(lit(1)).as("deg"))
       .select(col("src").as("node"), col("deg")))
     // |V| as an in-plan 1-row broadcast (no driver action: a count()
     // here costs a full extra AQE materialization barrier — measured as
@@ -175,7 +167,7 @@ object GraphOps {
                            scale: Int = 9, edgeParts: Int = 0): DataFrame = {
     val (sym, joinMass) = symmetrized(edges, edgeParts)
     val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-    val spine = pinned(deg
+    val spine = graft.CacheScope.pin(deg
       .join(seeds.select(col("node")).distinct()
               .withColumn("is_seed", lit(1)),
             deg("src") === col("node"), "left")
@@ -229,8 +221,8 @@ object GraphOps {
     * broadcast contract; AQE broadcasts it at demo scale on its own.
     */
   def triangleStats(edges: DataFrame, edgeParts: Int = 0): DataFrame = {
-    val e = pinned(edges.select(col("src"), col("dst")))
-    val deg = pinned(
+    val e = graft.CacheScope.pin(edges.select(col("src"), col("dst")))
+    val deg = graft.CacheScope.pin(
       e.select(explode(array(col("src"), col("dst"))).as("node"))
         .groupBy("node").agg(count(lit(1)).as("deg")))
     // orient: (a, b, degb) with (deg, id)(a) < (deg, id)(b)
@@ -250,7 +242,7 @@ object GraphOps {
           struct(col("dst").as("a"), col("src").as("b"), col("ds").as("db")))
         .as("o"))
       .select(col("o.a").as("a"), col("o.b").as("b"), col("o.db").as("db"))
-    val oriented = pinned(
+    val oriented = graft.CacheScope.pin(
       if (edgeParts > 0) oriented0.repartition(edgeParts, col("a"))
       else oriented0)
     val o1 = oriented.select(col("a"), col("b"), col("db"))
@@ -263,7 +255,7 @@ object GraphOps {
     // the |wedges|-row frame shuffles on (b, c) — irreducible; in the
     // pinned regime the |E|-row closing side rides a shuffle-hash
     // build (never a sort); adaptively AQE picks broadcast when small
-    val tris = pinned(wedges.join(
+    val tris = graft.CacheScope.pin(wedges.join(
       if (edgeParts > 0) closing.hint("shuffle_hash") else closing,
       Seq("b", "c")))
     val perNode = tris

@@ -224,7 +224,7 @@ object Sinks {
 
   /** Every in-place mutation of an on-disk table/store ends here:
     * cached Datasets whose lineage reads `path` (operator-internal
-    * pins included — DedupOps.pinned frames over index stores) would
+    * pins included — CacheScope.pin frames over index stores) would
     * otherwise serve, or worse recompute from, the PRE-mutation file
     * list — a FILE_NOT_EXIST on recompute after a compaction swap, or
     * silently stale rows after an append. Spark's contract for this is
@@ -269,8 +269,7 @@ object Sinks {
       // an expensive update pipeline (the refresh flagship's gated/
       // screened survivors) executes once
       val up = updates
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        .transform(graft.CacheScope.register)
+        .transform(graft.CacheScope.pin)
       val target = Tables.read(spark, path).as("t")
       val upKeys = up.select(keys.map(col): _*).distinct().as("u")
       // null-SAFE key equality: a null-key update row must REPLACE the

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Ordered conversion-funnel analysis over an event stream — the
   * product-analytics staple (view → click → purchase): how many users
@@ -42,8 +41,7 @@ object Funnel {
               col(userCol).isNotNull && col(tsCol).isNotNull)
       .select(col(userCol).as("__u"), col(typeCol).as("__t"),
               col(tsCol).as("__ts"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     var prev: DataFrame = null
     val censusLevels = steps.zipWithIndex.map { case (s, i) =>
       val cur =
@@ -61,8 +59,7 @@ object Funnel {
             .groupBy(col("__u")).agg(min(col("__ts")).as("__pts"))
         }
       // each level feeds the next AND its own 1-row census
-      val level = cur.persist(StorageLevel.MEMORY_AND_DISK)
-        .transform(graft.CacheScope.register)
+      val level = cur.transform(graft.CacheScope.pin)
       prev = level
       level.agg(count(lit(1)).as("n_users"))
         .select(lit(i + 1).as("step"), lit(s).as("event_type"),
@@ -134,8 +131,7 @@ object Funnel {
                        col("__cbin") === col("__pbin") - 1 && bound)
       .select(keep: _*)
     val m = m0.unionByName(m1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val perConv = m.groupBy(col("__pid")).agg(count(lit(1)).as("__n"))
     val channelRows = m.join(perConv, "__pid")
       .groupBy(col("channel"))

@@ -121,8 +121,7 @@ object SketchOps {
     // the batch aggregate is consumed twice below (the days collect and
     // the union) — pin it or the whole batch re-aggregates per consumer
     val fresh = dailySketches(batch, keyCol, tsCol, p)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     // bootstrap ONLY on provable absence (fs.exists, the
     // appendDailyValueSketches discipline): a Try around the read took
     // the bootstrap branch on ANY transient read failure and silently

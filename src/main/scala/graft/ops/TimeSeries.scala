@@ -68,8 +68,7 @@ object TimeSeries {
       .filter(col(userCol).isNotNull && col(tsCol).isNotNull)
       .select(col(userCol).as("__u"), to_date(col(tsCol)).as("__d"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val votes = pairs
       .select(col("__u"), col("__d"), lit(1).as("__t"), lit(0).as("__y"))
       .unionByName(pairs.select(col("__u"),
@@ -152,8 +151,7 @@ object TimeSeries {
       .select(col(userCol).as("__u"),
               date_trunc(granularity, col(tsCol)).cast("date").as("__w"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val cohort = weeks.groupBy(col("__u")).agg(min(col("__w")).as("__cw"))
     val sizes = cohort.groupBy(col("__cw"))
       .agg(count(lit(1)).as("__size"))
@@ -286,8 +284,7 @@ object TimeSeries {
       .filter(col(userCol).isNotNull && col(tsCol).isNotNull)
       .select(col(userCol).as("__u"), to_date(col(tsCol)).as("__d"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val observed = pairs.select(col("__d")).distinct()
     val contrib = pairs
       .select(col("__u"),

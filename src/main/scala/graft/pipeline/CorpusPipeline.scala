@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
 import graft.dedup.DedupOps
@@ -130,8 +129,7 @@ object CorpusPipeline {
         TextOps.qualityScore(col("text")).as("quality_score"),
         ShingleExpressions.shingleHashes(col("text"), ShingleN).as("hs"))
       .withColumn("sz", size(col("hs")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
 
     // near-dup removal: pair graph → components → every non-canonical
     // (non-minimum) member drops. The pairs land in the CC loop's own
@@ -149,8 +147,7 @@ object CorpusPipeline {
     // the pair join and the CC rounds per consumer)
     val comp = graft.dedup.ConnectedComponents
       .connectedComponents(pairs, "id_a", "id_b", assumeDistinct = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val dropIds = comp.filter(col("id") =!= col("comp"))
       .select(col("id").as("doc_id"))
 

@@ -3,7 +3,6 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
 import graft.functions.VectorExpressions.cosineSim
@@ -128,8 +127,7 @@ object SimilarityOps {
   def marginMine(setA: DataFrame, setB: DataFrame, idCol: String,
                  vecCol: String, k: Int, tau: Double): DataFrame = {
     val fwd = knnJoin(setA, setB, idCol, vecCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val bwd = knnJoin(setB, setA, idCol, vecCol, k)
     val denA = fwd.groupBy("query_id").agg(avg(col("sim")).as("den_a"))
     val denB = bwd.groupBy("query_id").agg(avg(col("sim")).as("den_b"))
@@ -372,8 +370,7 @@ object SimilarityOps {
              frame.withColumn(
                "mind", least(col("mind"),
                              lit(1.0) - cosineSim(col("v"), centerLit))))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            .transform(graft.CacheScope.register)
+            .transform(graft.CacheScope.pin)
         // eager: truncate the lineage before releasing the prior round
         updated.count()
         if (prev != null) prev.unpersist(false)
@@ -496,8 +493,7 @@ object SimilarityOps {
       .select(col(idCol), col(vecCol),
               best.getField("l").as("list_id"),
               best.getField("s").as("cent_sim"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val a = assigned.select(col("list_id"), col(idCol).as("id_a"),
                             col(vecCol).as("va"))
     val b = assigned.select(col("list_id").as("__lb"),
@@ -734,8 +730,7 @@ object SimilarityOps {
         .join(means, Seq("list_id"), "left")
         .select(col("list_id"),
                 coalesce(col("mvec"), col("cvec")).as("cvec"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        .transform(graft.CacheScope.register)
+        .transform(graft.CacheScope.pin)
       // Training is inherently iterative: round i's assignment job must
       // run before round i+1 can improve on it, so materialize each
       // round's (nlist-row) codebook EAGERLY — that truncates the lazy
@@ -1070,8 +1065,7 @@ object SimilarityOps {
                 struct(s.cast("int").as("sub_id"),
                        slice(dvec, s * dsub + 1, lit(dsub)).as("sv")))).as("e"))
       .select(col("id"), col("e.sub_id").as("sub_id"), col("e.sv").as("sv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
 
     // seed filter is on the RAW row_number (rank <= k pattern), not a
     // derived `code < codes` alias: InferWindowGroupLimit only
@@ -1103,8 +1097,7 @@ object SimilarityOps {
       cb = cb.join(means, Seq("sub_id", "code"), "left")
         .select(col("sub_id"), col("code"),
                 coalesce(col("mvec"), col("cvec")).as("cvec"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        .transform(graft.CacheScope.register)
+        .transform(graft.CacheScope.pin)
       cb.count()
       prev.unpersist(false)
     }
@@ -1688,8 +1681,7 @@ object SimilarityOps {
       .select(col("pid"), col("rl"), col(idCol).as("nid"),
               coalesce(round(cosineSim(col(vecCol), col("__pv")), 6),
                        lit(Double.NegativeInfinity)).as("sim"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     // exact twin, self-matches excluded then re-ranked to k (knnJoin's
     // window includes the query itself at sim 1.0)
     val exact = knnJoin(probes.select(col("pid").as(idCol),
@@ -1702,8 +1694,7 @@ object SimilarityOps {
           .orderBy(col("sim").desc, col("neighbor_id").asc)))
       .filter(col("__rn") <= k)
       .select(col("query_id").as("pid"), col("neighbor_id").as("nid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val grid = nprobes.distinct.sorted
     val spark = assigned.sparkSession
     import spark.implicits._
@@ -1812,8 +1803,7 @@ object SimilarityOps {
           .orderBy(col("d2").asc, col("nid").asc)))
       .filter(col("__rn") <= k)
       .select(col("pid"), col("nid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     codebooks.map { case (label, cb) =>
       val (nsub, dsub) = pqShape(cb)
       val codes = emb.filter(size(col(vecCol)) === nsub * dsub)

@@ -125,8 +125,7 @@ object Bm25Index {
           .select(col("doc_id").as(idCol)).distinct(),
         Seq(idCol), "left_anti")
     val post = batchPostings(fresh, idCol, textCol, buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     // one-row aggregate: the size-gated driver action (n/sum_dl are
     // exact integer-valued doubles — cross-epoch addition stays exact)
     val f = post.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))

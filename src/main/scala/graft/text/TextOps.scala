@@ -421,8 +421,7 @@ object TextOps {
       .select(col(idCol), explode(tokens(col(textCol))).as("term"))
     val tf = tok.groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("tf"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     // tf is one row per (doc, term) already — count(*) IS document freq
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = df.agg(count(lit(1)).as("n"))
@@ -473,8 +472,7 @@ object TextOps {
     val dl = df.select(col(idCol),
                        tokenCount(col(textCol)).cast("double").as("dl"))
       .filter(col("dl") > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val stats = dl.agg(count(lit(1)).cast("double").as("n"),
                        avg(col("dl")).as("avgdl"))
     val tf = df
@@ -482,8 +480,7 @@ object TextOps {
       .filter(col("term").isin(queryTerms: _*))
       .groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).cast("double").as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     // tf is unique per (doc, term) — count(*) IS document frequency
     val dfreq = tf.groupBy(col("term"))
       .agg(count(lit(1)).cast("double").as("df"))
@@ -575,8 +572,7 @@ object TextOps {
     // it from raw text: two extra corpus passes. CACHE OWNERSHIP:
     // caller releases (CacheScope / clearCache), the bm25TopK contract.
     val m = model
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val ctx = m.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
     val vocab = m.agg(countDistinct(col("w2")).cast("double").as("v"))
     bigramPairs(df, textCol, Seq(col(idCol)))
@@ -619,8 +615,7 @@ object TextOps {
     val counts = df
       .filter(col(groupCol).isNotNull && col(textCol).isNotNull)
       .groupBy(col(groupCol)).agg(count(lit(1)).cast("double").as("n_g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val tot = counts.agg(sum(col("n_g")).as("n_tot"),
                          sum(pow(col("n_g"), lit(alpha))).as("z"))
     val rates = counts.crossJoin(broadcast(tot))
@@ -687,20 +682,17 @@ object TextOps {
       : DataFrame = {
     require(dim >= 2, s"dim must be >= 2 (got $dim)")
     val rawFeat = hashedGrams(raw, idCol, textCol, dim, mode)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     // cq/cp each feed TWO branches (the totals cross-join and the
     // log-ratio full-outer); unpinned, AQE re-executes their lineage
     // per branch — for cp that is the whole target-side gram hashing,
     // measured as the two largest stages of q_dsir_select. Both
     // aggregates are <= dim rows: pin them.
     val cq = rawFeat.groupBy(col("bucket")).agg(sum(col("c")).as("cq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val cp = hashedGrams(target, idCol, textCol, dim, mode)
       .groupBy(col("bucket")).agg(sum(col("c")).as("cp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val tot = cq.agg(sum(col("cq")).as("tq"))
       .crossJoin(cp.agg(sum(col("cp")).as("tp")))
     val lr = cq.join(cp, Seq("bucket"), "full_outer")
@@ -789,8 +781,7 @@ object TextOps {
     val keyed = narrow
       .repartitionByRange(p, keys: _*)
       .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val offsets = keyed.groupBy(col("__pid"))
       .agg(count(lit(1)).as("__n"))
       .withColumn("__off", coalesce(sum(col("__n")).over(
@@ -935,8 +926,7 @@ object TextOps {
     val toks = docs
       .select(col(idCol).as("__id"),
               explode(array_distinct(tokens(col(textCol)))).as("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val df = toks.groupBy(col("tok")).agg(count(lit(1)).as("__d"))
     val n = toks.agg(countDistinct(col("__id")).as("__n"))
     val pairs = toks.select(col("__id"), col("tok").as("x"))
@@ -1140,8 +1130,7 @@ object TextOps {
     val termCol = blocklist.columns.head
     val terms = blocklist
       .select(lower(trim(col(termCol))).as("__term")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     // one scalar action sizes the filter; shards > 1 lifts the
     // single-buffer bitset ceiling (the contaminationScreened knob —
     // DedupOps.bloomFold scaladoc)
@@ -1249,8 +1238,7 @@ object TextOps {
                 .as("n_tokens"))
       .repartitionByRange(p, col("__k"), col(idCol))
       .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val offsets = keyed.groupBy(col("__pid"))
       .agg(count(lit(1)).as("__n"), sum(col("n_tokens")).as("__t"))
       .withColumn("__off", coalesce(sum(col("__n")).over(
@@ -1297,8 +1285,7 @@ object TextOps {
                 .as("n_tokens"))
       .repartitionByRange(p, col("n_tokens"), col(idCol))
       .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val offsets = keyed.groupBy(col("__pid"))
       .agg(count(lit(1)).as("__n"))
       .withColumn("__off", coalesce(sum(col("__n")).over(
@@ -1367,8 +1354,7 @@ object TextOps {
                 .as("n_tokens"))
       .repartitionByRange(p, col(groupCol), col("__k"), col(idCol))
       .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val grpW = Window.partitionBy(col(groupCol)).orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = keyed.groupBy(col("__pid"), col(groupCol))
@@ -1423,8 +1409,7 @@ object TextOps {
                 .as("n_tokens"))
       .repartitionByRange(p, col("__k"), col(idCol))
       .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.CacheScope.register)
+      .transform(graft.CacheScope.pin)
     val offsets = keyed.groupBy(col("__pid"))
       .agg(sum(col("n_tokens")).as("__t"))
       .withColumn("__toff", coalesce(sum(col("__t")).over(

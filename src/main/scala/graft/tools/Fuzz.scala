@@ -10,6 +10,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Bench, Session, SparkEntry, Tables, Verify}
+import graft.board.{Analytics, Ann, Dedup, Parity, Text}
 import graft.dedup.DedupOps
 import graft.similarity.SimilarityOps
 
@@ -24,8 +25,9 @@ import graft.similarity.SimilarityOps
   * `tools/local_check.py` hash-compares every configuration exactly the way
   * the driver's correctness gate does. Where a board query is
   * parameterized, both sides come from the SAME builders the board pins:
-  * `SparkEntry.*Gen` / `*OracleGen` pairs, and `tpch.TpchGen`, whose
-  * `board` list IS the 22 TPC-H board queries — one definition, no drift.
+  * the `*Gen` / `*OracleGen` pairs beside their cases in the `graft.board`
+  * domain objects, and `tpch.TpchGen`, whose `board` list IS the 22 TPC-H
+  * board queries — one definition, no drift.
   *
   * r10 growth: the TPC-H bank rides three families
   * (tpch_a/b/c) drawing the spec's public substitution parameters, five
@@ -500,7 +502,7 @@ object Fuzz {
                    else docs0
         DedupOps.ngramJaccardPairs(docs, "doc_id", "text", n, tau)
       },
-      wrapSql(SparkEntry.jaccardPairsCteGen(n, tau, sliceRel(m, rem)) +
+      wrapSql(Dedup.jaccardPairsCteGen(n, tau, sliceRel(m, rem)) +
         "\nSELECT id_a, id_b, jaccard FROM pairs", pert))
   }
 
@@ -518,10 +520,10 @@ object Fuzz {
     FuzzCase(f"fz_contain_$i%03d", "containment",
       s"n=$n tau=$tau mod=$mod start=$start slen=$slen pert=$pert",
       (s, dir) =>
-        SparkEntry.containmentGen(docsOf(s, dir, pert), n, tau, mod, start,
-                                  slen, minTextLen),
-      wrapSql(SparkEntry.containmentOracleGen(n, tau, mod, start, slen,
-                                              minTextLen), pert))
+        Dedup.containmentGen(docsOf(s, dir, pert), n, tau, mod, start,
+                             slen, minTextLen),
+      wrapSql(Dedup.containmentOracleGen(n, tau, mod, start, slen,
+                                         minTextLen), pert))
   }
 
   /** Top-k per group over lineitem: k, group column and order column all
@@ -533,8 +535,8 @@ object Fuzz {
     val ord = Seq("l_extendedprice", "l_quantity", "l_discount")(r.nextInt(3))
     val pert = r.nextInt(100) < 35
     FuzzCase(f"fz_topk_$i%03d", "topk", s"k=$k grp=$grp ord=$ord pert=$pert",
-      (s, dir) => SparkEntry.topkGen(lineitemOf(s, dir, pert), k, grp, ord),
-      wrapLineitemSql(SparkEntry.topkOracleGen(k, grp, ord), pert))
+      (s, dir) => Parity.topkGen(lineitemOf(s, dir, pert), k, grp, ord),
+      wrapLineitemSql(Parity.topkOracleGen(k, grp, ord), pert))
   }
 
   /** Brute-force cosine top-k: probe id and k drawn. */
@@ -546,7 +548,7 @@ object Fuzz {
       (s, dir) =>
         SimilarityOps.topKNeighbors(embOf(s, dir, pert),
                                     "vec_id", "embedding", probe, k),
-      wrapEmbSql(SparkEntry.cosineTopkOracleGen(probe, k), pert))
+      wrapEmbSql(Ann.cosineTopkOracleGen(probe, k), pert))
   }
 
   /** All-pairs cosine ≥ τ. */
@@ -557,7 +559,7 @@ object Fuzz {
       (s, dir) =>
         SimilarityOps.cosinePairs(embOf(s, dir, pert),
                                   "vec_id", "embedding", tau),
-      wrapEmbSql(SparkEntry.cosinePairsOracleGen(tau), pert))
+      wrapEmbSql(Ann.cosinePairsOracleGen(tau), pert))
   }
 
   /** Doc-level decontamination: gram width, benchmark source, and the
@@ -576,7 +578,7 @@ object Fuzz {
                                docs.filter(col("source") === src),
                                "doc_id", "text", n, minShared)
       },
-      wrapSql(SparkEntry.decontaminateOracleGen(n, src, minShared), pert))
+      wrapSql(Dedup.decontaminateOracleGen(n, src, minShared), pert))
   }
 
   /** Cross-document maximal shared spans: anchor gram width and span
@@ -590,7 +592,7 @@ object Fuzz {
       (s, dir) =>
         DedupOps.sharedSpans(docsOf(s, dir, pert),
                              "doc_id", "text", n, minLen),
-      wrapSql(SparkEntry.substringOracleGen(n, minLen), pert))
+      wrapSql(Dedup.substringOracleGen(n, minLen), pert))
   }
 
   /** Benchmark-vs-corpus span decontamination. */
@@ -607,7 +609,7 @@ object Fuzz {
                                     docs.filter(col("source") === src),
                                     "doc_id", "text", n, minLen)
       },
-      wrapSql(SparkEntry.deconSpansOracleGen(n, minLen, src), pert))
+      wrapSql(Dedup.deconSpansOracleGen(n, minLen, src), pert))
   }
 
   /** Line-granular cross-doc dedup: duplication floor and blank-exemption
@@ -622,7 +624,7 @@ object Fuzz {
       (s, dir) =>
         DedupOps.lineDedup(docsOf(s, dir, pert),
                            "doc_id", "text", minDocs, minChars),
-      wrapSql(SparkEntry.lineDedupOracleGen(minDocs, minChars), pert))
+      wrapSql(Dedup.lineDedupOracleGen(minDocs, minChars), pert))
   }
 
   /** Keyed exact dedup over a random key subset. */
@@ -665,7 +667,7 @@ object Fuzz {
       (s, dir) =>
         SimilarityOps.kCenterSelect(Tables.load(s, dir, "embeddings"),
                                     "vec_id", "embedding", k),
-      SparkEntry.kcenterOracleGen(k))
+      Ann.kcenterOracleGen(k))
   }
 
   /** MMR greedy re-rank: (probe, λ, pool, k) all drawn; λ on the 0.05
@@ -681,7 +683,7 @@ object Fuzz {
       (s, dir) =>
         SimilarityOps.mmrRerank(Tables.load(s, dir, "embeddings"),
                                 "vec_id", "embedding", probe, lam, n, k),
-      SparkEntry.mmrOracleGen(probe, lam, n, k))
+      Ann.mmrOracleGen(probe, lam, n, k))
   }
 
   /** Top-k per group through the bounded-buffer Aggregator — the SAME
@@ -693,8 +695,8 @@ object Fuzz {
     val grp = Seq("l_returnflag", "l_linestatus")(r.nextInt(2))
     val pert = r.nextInt(100) < 35
     FuzzCase(f"fz_topkagg_$i%03d", "topk_agg", s"k=$k grp=$grp pert=$pert",
-      (s, dir) => SparkEntry.topkAggGen(lineitemOf(s, dir, pert), k, grp),
-      wrapLineitemSql(SparkEntry.topkOracleGen(k, grp, "l_extendedprice"),
+      (s, dir) => Parity.topkAggGen(lineitemOf(s, dir, pert), k, grp),
+      wrapLineitemSql(Parity.topkOracleGen(k, grp, "l_extendedprice"),
                       pert))
   }
 
@@ -708,7 +710,7 @@ object Fuzz {
       (s, dir) =>
         graft.ops.FuzzyMatch.fuzzyPairs(partOf(s, dir, pert),
                                         "p_name", tau),
-      wrapPartSql(SparkEntry.fuzzyOracleGen(tau), pert))
+      wrapPartSql(Dedup.fuzzyOracleGen(tau), pert))
   }
 
   /** Edit-distance join: d drawn (the 2d+1 length-key generation must
@@ -721,7 +723,7 @@ object Fuzz {
       (s, dir) =>
         graft.ops.FuzzyMatch.editPairs(partOf(s, dir, pert),
                                        "p_name", d),
-      wrapPartSql(SparkEntry.editOracleGen(d), pert))
+      wrapPartSql(Dedup.editOracleGen(d), pert))
   }
 
   /** Winsorization census: the (lo, hi) quantile pair drawn on the 0.05
@@ -732,8 +734,8 @@ object Fuzz {
     val hi = (15 + r.nextInt(5)) / 20.0 // 0.75..0.95
     val pert = r.nextInt(100) < 35
     FuzzCase(f"fz_winsor_$i%03d", "winsorize", s"lo=$lo hi=$hi pert=$pert",
-      (s, dir) => SparkEntry.winsorizeGen(eventsOf(s, dir, pert), lo, hi),
-      wrapEventsSql(SparkEntry.winsorizeOracleGen(lo, hi), pert))
+      (s, dir) => Analytics.winsorizeGen(eventsOf(s, dir, pert), lo, hi),
+      wrapEventsSql(Analytics.winsorizeOracleGen(lo, hi), pert))
   }
 
   /** Stratified sample: the per-group budget k drawn. */
@@ -745,7 +747,7 @@ object Fuzz {
         graft.text.TextOps.stratifiedSample(
           docsOf(s, dir, pert), "source", "doc_id", k)
           .select(col("source"), col("doc_id")),
-      wrapSql(SparkEntry.stratifiedOracleGen(k), pert))
+      wrapSql(Text.stratifiedOracleGen(k), pert))
   }
 
   /** Heavy-hitter grams: (n, minDf) drawn — the CMS screen must stay
@@ -761,7 +763,7 @@ object Fuzz {
       (s, dir) =>
         DedupOps.heavyGrams(docsOf(s, dir, pert),
                             "doc_id", "text", n, minDf, width = 1 << 17),
-      wrapSql(SparkEntry.heavyGramsOracleGen(n, minDf), pert))
+      wrapSql(Dedup.heavyGramsOracleGen(n, minDf), pert))
   }
 
   /** Semantic decontamination: τ drawn. */
@@ -775,7 +777,7 @@ object Fuzz {
           emb.filter(col("label") =!= 0), emb.filter(col("label") === 0),
           "vec_id", "embedding", tau)
       },
-      wrapEmbSql(SparkEntry.semDeconOracleGen(tau), pert))
+      wrapEmbSql(Ann.semDeconOracleGen(tau), pert))
   }
 
   /** Gap sessionization: the gap drawn (the lag/cumsum boundary must
@@ -787,7 +789,7 @@ object Fuzz {
     FuzzCase(f"fz_sess_$i%03d", "sessionize", s"gap=${gap}m pert=$pert",
       (s, dir) =>
         graft.streaming.Sessionize.batch(eventsOf(s, dir, pert), gap),
-      wrapEventsSql(SparkEntry.sessionizeOracleGen(gap), pert))
+      wrapEventsSql(Analytics.sessionizeOracleGen(gap), pert))
   }
 
   /** Interval self-join: δ drawn — the δ-bin equi-key decomposition
@@ -801,7 +803,7 @@ object Fuzz {
       (s, dir) =>
         graft.streaming.StreamingOps.intervalJoin(
           eventsOf(s, dir, pert), "event_id", "ts", delta),
-      wrapEventsSql(SparkEntry.intervalJoinOracleGen(delta), pert))
+      wrapEventsSql(Analytics.intervalJoinOracleGen(delta), pert))
   }
 
   /** Range-join pair census: δ drawn. */
@@ -814,7 +816,7 @@ object Fuzz {
                                         "event_id", "ts", delta)
           .agg(count(lit(1)).as("n_pairs"),
                round(avg(col("gap_ms")), 6).as("avg_gap_ms")),
-      wrapEventsSql(SparkEntry.rangeJoinOracleGen(delta), pert))
+      wrapEventsSql(Analytics.rangeJoinOracleGen(delta), pert))
   }
 
   /** Context-window chunking: (size, overlap) drawn — the tail-window
@@ -830,7 +832,7 @@ object Fuzz {
       (s, dir) =>
         graft.text.TextOps.chunkDocs(docsOf(s, dir, pert),
                                      "text", size, overlap),
-      wrapSql(SparkEntry.chunkDocsOracleGen(size, overlap), pert))
+      wrapSql(Text.chunkDocsOracleGen(size, overlap), pert))
   }
 
   /** Token-budget prefix sample: (budget, seed) drawn — the global
@@ -845,7 +847,7 @@ object Fuzz {
       s"budget=$budget seed=$seed pert=$pert",
       (s, dir) =>
         graft.text.TextOps.tokenBudget(docsOf(s, dir, pert), budget, seed),
-      wrapSql(SparkEntry.tokenBudgetOracleGen(budget, seed), pert))
+      wrapSql(Text.tokenBudgetOracleGen(budget, seed), pert))
   }
 
   /** Trailing value-range rolling aggregate: the window width drawn. */
@@ -857,7 +859,7 @@ object Fuzz {
         graft.ops.TimeSeries.rollingAgg(eventsOf(s, dir, pert),
                                         "event_id", "user_id", "ts",
                                         "value", hours),
-      wrapEventsSql(SparkEntry.rollingAvgOracleGen(hours), pert))
+      wrapEventsSql(Analytics.rollingAvgOracleGen(hours), pert))
   }
 
   /** Trailing-distinct active users: the window drawn. */
@@ -867,7 +869,7 @@ object Fuzz {
     FuzzCase(f"fz_actusr_$i%03d", "active_users", s"days=$days pert=$pert",
       (s, dir) =>
         graft.ops.TimeSeries.activeUsers(eventsOf(s, dir, pert), days),
-      wrapEventsSql(SparkEntry.activeUsersOracleGen(days), pert))
+      wrapEventsSql(Analytics.activeUsersOracleGen(days), pert))
   }
 
   /** Balanced shard assignment census: (nShards, seed) drawn — the
@@ -883,7 +885,7 @@ object Fuzz {
           .groupBy(col("shard").cast("long").as("shard"))
           .agg(count(lit(1)).as("n_docs"),
                sum(col("n_tokens")).as("n_tokens")),
-      wrapSql(SparkEntry.shardCensusOracleGen(n, seed), pert))
+      wrapSql(Text.shardCensusOracleGen(n, seed), pert))
   }
 
   /** Hopping-window rollup: (slide, hop-count) drawn — each row lands
@@ -900,7 +902,7 @@ object Fuzz {
       (s, dir) =>
         graft.streaming.StreamingOps.hoppingRollup(
           eventsOf(s, dir, pert), s"$dur minutes", s"$slide minutes"),
-      wrapEventsSql(SparkEntry.hoppingOracleGen(dur, slide), pert))
+      wrapEventsSql(Analytics.hoppingOracleGen(dur, slide), pert))
   }
 
   /** Trailing-baseline anomaly flags: (windowDays, z) drawn. */
@@ -912,7 +914,7 @@ object Fuzz {
       (s, dir) =>
         graft.ops.TimeSeries.anomalyFlags(eventsOf(s, dir, pert),
                                           days, z),
-      wrapEventsSql(SparkEntry.anomalyOracleGen(days, z), pert))
+      wrapEventsSql(Analytics.anomalyOracleGen(days, z), pert))
   }
 
   // ---- generic group-by/agg family -----------------------------------
@@ -1015,7 +1017,7 @@ object Fuzz {
 
   // ---- analytic-bank families (r9 verdict gap #3) -----------------------
   // Board analytic queries previously pinned at one parameter point;
-  // both sides live in SparkEntry (the board rows call them at the
+  // both sides live in graft.board.Analytics (the board rows call them at the
   // pinned params — one definition, no drift).
 
   /** SCD2 history build: the tier divisor moves every change boundary. */
@@ -1023,8 +1025,8 @@ object Fuzz {
     val d = Seq(10, 20, 25, 40, 50, 80)(r.nextInt(6))
     val pert = r.nextInt(100) < 35
     FuzzCase(f"fz_scd2_$i%03d", "scd2", s"div=$d pert=$pert",
-      (s, dir) => SparkEntry.scd2Gen(eventsOf(s, dir, pert), d),
-      wrapEventsSql(SparkEntry.scd2OracleGen(d), pert))
+      (s, dir) => Analytics.scd2Gen(eventsOf(s, dir, pert), d),
+      wrapEventsSql(Analytics.scd2OracleGen(d), pert))
   }
 
   /** Last-touch attribution: the channel modulus redraws the credit
@@ -1035,8 +1037,8 @@ object Fuzz {
     val m = 2 + r.nextInt(5) // 2..6
     val pert = r.nextInt(100) < 35
     FuzzCase(f"fz_attr_$i%03d", "attribution", s"mod=$m pert=$pert",
-      (s, dir) => SparkEntry.attributionGen(eventsOf(s, dir, pert), m),
-      wrapEventsSql(SparkEntry.attributionOracleGen(m), pert))
+      (s, dir) => Analytics.attributionGen(eventsOf(s, dir, pert), m),
+      wrapEventsSql(Analytics.attributionOracleGen(m), pert))
   }
 
   /** Ordered funnel: random step sequence over the five event types and
@@ -1052,7 +1054,7 @@ object Fuzz {
       (s, dir) =>
         graft.ops.Funnel.funnel(eventsOf(s, dir, pert), steps,
                                 maxGapHours = Some(gap)),
-      wrapEventsSql(SparkEntry.funnelOracleGen(steps, gap), pert))
+      wrapEventsSql(Analytics.funnelOracleGen(steps, gap), pert))
   }
 
   /** As-of join (latest order at-or-before each event): the user→cust
@@ -1064,9 +1066,9 @@ object Fuzz {
     val pertO = r.nextInt(100) < 35
     FuzzCase(f"fz_asof_$i%03d", "asof", s"mod=$m pertE=$pertE pertO=$pertO",
       (s, dir) =>
-        SparkEntry.asofGen(eventsOf(s, dir, pertE), ordersOf(s, dir, pertO),
-                           m),
-      wrapOrdersSql(wrapEventsSql(SparkEntry.asofOracleGen(m), pertE),
+        Analytics.asofGen(eventsOf(s, dir, pertE), ordersOf(s, dir, pertO),
+                          m),
+      wrapOrdersSql(wrapEventsSql(Analytics.asofOracleGen(m), pertE),
                     pertO))
   }
 
@@ -1089,7 +1091,7 @@ object Fuzz {
           .orderBy(col("pr").desc, col("node").asc).limit(25)
           .select(col("node").as("part_key"), col("pr")),
       wrapLineitemSql(
-        SparkEntry.pagerankOracleGen(m, iters, damping), pert))
+        Analytics.pagerankOracleGen(m, iters, damping), pert))
   }
 
   /** Event transition matrix at a drawn journey depth. */
@@ -1100,7 +1102,7 @@ object Fuzz {
       (s, dir) =>
         graft.ops.TimeSeries.transitions(eventsOf(s, dir, pert),
                                          step = step),
-      wrapEventsSql(SparkEntry.transitionsOracleGen(step), pert))
+      wrapEventsSql(Analytics.transitionsOracleGen(step), pert))
   }
 
   /** Gap-filled outage flags: baseline window and z cut drawn (the
@@ -1116,7 +1118,7 @@ object Fuzz {
         graft.ops.TimeSeries.anomalyFlags(eventsOf(s, dir, pert),
                                           windowDays = days,
                                           zThreshold = z, gapFill = true),
-      wrapEventsSql(SparkEntry.outageOracleGen(days, z), pert))
+      wrapEventsSql(Analytics.outageOracleGen(days, z), pert))
   }
 
   /** Cohort retention at drawn granularity (day vs week cohorts). */
@@ -1127,7 +1129,7 @@ object Fuzz {
       (s, dir) =>
         graft.ops.TimeSeries.cohortRetention(eventsOf(s, dir, pert),
                                              granularity = gran),
-      wrapEventsSql(SparkEntry.cohortOracleGen(gran), pert))
+      wrapEventsSql(Analytics.cohortOracleGen(gran), pert))
   }
 
   /** Daily churn census at a drawn look-back horizon (1/7/28-day). */
@@ -1138,7 +1140,7 @@ object Fuzz {
       (s, dir) =>
         graft.ops.TimeSeries.userChurn(eventsOf(s, dir, pert),
                                        horizonDays = h),
-      wrapEventsSql(SparkEntry.churnOracleGen(h), pert))
+      wrapEventsSql(Analytics.churnOracleGen(h), pert))
   }
 
   /** Gopher quality rules: every cut threshold drawn from its coarse
@@ -1161,7 +1163,7 @@ object Fuzz {
     FuzzCase(f"fz_gopher_$i%03d", "gopher", s"t=$t pert=$pert",
       (s, dir) =>
         graft.text.TextOps.gopherRules(docsOf(s, dir, pert), t = t),
-      wrapSql(SparkEntry.gopherOracleGen(t), pert))
+      wrapSql(Text.gopherOracleGen(t), pert))
   }
 
   /** Window frames: random ROWS / RANGE bounds (and a lag/lead offset)

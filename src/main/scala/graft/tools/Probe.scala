@@ -15,7 +15,12 @@ import graft.{Session, SparkEntry}
   * `SparkEntry.queries`, warms each once (JIT + codegen cache) and drops
   * caches before every measured run.
   *
-  *  - `time`: SPARK_GRAFT_RUNS (default 4) timed runs per query.
+  *  - `time`: SPARK_GRAFT_RUNS (default 4) timed runs per query. On
+  *    the stream rows (q_ingest_stream, q_refresh_stream) the warm run
+  *    consumes every stream file into the checkpoint (their
+  *    establish-once replay contract), so each timed run is a restart
+  *    with no new input: time ingest through q_minhash_index and
+  *    refresh through q_incremental_refresh.
   *  - `jobs`: one timed run with per-job and per-stage lines — separates
   *    driver/scheduling overhead from real compute; each job line ends
   *    with the call site of the action that started it.

@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   * discount ±0.01, quantity cuts, brands, types, sizes, segments,
   * nation/region draws — TPC-H v3 §2.4, public) and returns BOTH sides
   * of the differential check: the Spark builder and its DuckDB twin.
-  * `board` pins each query at one parameter point; `SparkEntry.queries`
-  * takes `run` and `SparkEntry.oracleSql` takes `sql` from that list,
-  * the fuzz families (tpch_a/b/c) draw the same builders across the
+  * `board` pins each query at one parameter point; `SparkEntry.cases`
+  * turns each entry into a `board.Case` (`run` as the builder, `sql` as
+  * the oracle), from which `queries` and `oracleSql` derive; the fuzz
+  * families (tpch_a/b/c) draw the same builders across the
   * parameter space, so the query the driver verifies is the one the
   * fuzzer sweeps.
   *
@@ -990,8 +991,9 @@ object TpchGen {
   // ---- the board ---------------------------------------------------------
 
   /** The 22 board queries, each a draw of its builder at the parameter
-    * point the board pins. The driver views (`SparkEntry.queries` and
-    * `oracleSql`) both derive from this one list.
+    * point the board pins. `SparkEntry.cases` maps each to a `board.Case`,
+    * so the driver views (`SparkEntry.queries` and `oracleSql`) both
+    * derive from this one list.
     */
   val board: Seq[(String, Q)] = {
     val L: Loader = graft.Tables.load

@@ -23,13 +23,17 @@ class EntrySpec extends SparkSpec {
     }
   }
 
-  test("oracleSql keys all exist in queries") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle for unknown queries: $missing")
+  test("board names are distinct; a duplicated name fails the build") {
+    val names = SparkEntry.cases.map(_.name)
+    assert(names.distinct.size == names.size)
+    assert(SparkEntry.queries.size == names.size)
+    val twice = SparkEntry.cases.take(2) :+ SparkEntry.cases.head
+    val e = intercept[IllegalArgumentException](SparkEntry.distinctNames(twice))
+    assert(e.getMessage.contains(SparkEntry.cases.head.name))
   }
 
   test("oracle coverage: SQL-expressible ops all have oracles") {
-    val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    val noOracle = SparkEntry.cases.filter(_.oracle.isEmpty).map(_.name).toSet
     // intentionally rows-only — after r7's promotions (generated CTE
     // twins for the greedy selections and the whole IVF/PQ/eval family;
     // verified forms for the HLL distincts) ONLY two classes remain:

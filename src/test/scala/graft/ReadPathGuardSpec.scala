@@ -34,6 +34,6 @@ class ReadPathGuardSpec extends AnyFunSuite {
 
   private def allowed(f: Path, options: String): Boolean =
     f.endsWith(Paths.get("graft/Tables.scala")) ||
-      (f.endsWith(Paths.get("graft/SparkEntry.scala")) &&
+      (f.endsWith(Paths.get("graft/board/Lifecycle.scala")) &&
          options.contains("\"mergeSchema\", \"true\""))
 }
