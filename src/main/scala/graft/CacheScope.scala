@@ -32,10 +32,10 @@ import org.apache.spark.storage.StorageLevel
   * single-threaded per call; scopes are ThreadLocal so concurrent query
   * builders never see each other's frames; an operator that fans out
   * to other threads binds its tasks to its own scope with `inherit`).
-  * Outside any scope `register` is a no-op passthrough — existing
-  * clearCache-based callers (Bench/Verify) are unchanged. Nested
-  * captures own their frames exclusively: an inner scope's frames
-  * belong to the inner release().
+  * Outside any scope `register` is a no-op passthrough — callers that
+  * drop every cache (Bench/Verify, `Session.dropCaches`) are unchanged.
+  * Nested captures own their frames exclusively: an inner scope's
+  * frames belong to the inner release().
   *
   * `release()` is idempotent and safe on frames an operator already
   * unpersisted itself (loop intermediates): `unpersist` on a non-cached

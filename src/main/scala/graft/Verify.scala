@@ -45,8 +45,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // queries persist intermediates; don't let 50 queries' caches pile up
-      spark.catalog.clearCache()
+      // queries persist intermediates and checkpoint blocks; don't let
+      // 224 queries' caches pile up
+      Session.dropCaches(spark)
     }
     writeOracleSql(s"$outDir/oracle_sql.json", SparkEntry.oracleSql)
     spark.stop()

@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * CACHE OWNERSHIP: the returned frame reads from an internally
   * persisted edge frame (evictable MEMORY_AND_DISK; all intermediate
   * rounds are unpersisted eagerly). The CALLER releases it —
-  * `spark.catalog.clearCache()` (as Bench/Verify do per action) or
+  * `Session.dropCaches` (as Bench/Verify do per action) or
   * unpersist of the returned frame's cache via the session — same
   * contract as DedupOps.hashedSets.
   */

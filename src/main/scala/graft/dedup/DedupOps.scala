@@ -80,7 +80,7 @@ object DedupOps {
     * drops exactly the frames the operators pinned (this one, the prefix
     * frame `ngramJaccardPairs*` pins internally, `CorpusPipeline.curate`'s
     * enrichment frame) without touching unrelated session caches.
-    * `unpersist()`/`spark.catalog.clearCache()` (as Bench/Verify do per
+    * `unpersist()` or `Session.dropCaches` (as Bench/Verify do per
     * action) remain valid; without SOME release a long-lived session
     * accumulates block-manager bookkeeping.
     */

@@ -45,8 +45,8 @@ import graft.text.{Hashing, TextOps}
   * after the consuming action: wrap the call in
   * `CacheScope.capture { ... }` and invoke the returned release() —
   * exactly the operator's pins are dropped, unrelated session caches
-  * survive. `spark.catalog.clearCache()` (what Bench/Verify do) remains
-  * the blunt whole-session alternative.
+  * survive. `Session.dropCaches` (what Bench/Verify do between queries)
+  * remains the blunt whole-session alternative.
   */
 object CorpusPipeline {
 

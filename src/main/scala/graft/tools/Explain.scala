@@ -3,7 +3,9 @@ package graft.tools
 import graft.{Session, SparkEntry}
 
 /** Dump formatted physical plans for the named queries (dev tool for the
-  * plan audit: pushdown, pruning, broadcast, codegen spans).
+  * plan audit: pushdown, pruning, broadcast, codegen spans). Caches are
+  * dropped between queries, so no plan's statistics depend on the query
+  * before it.
   * Usage: runMain graft.tools.Explain <sfDir> [query ...]
   */
 object Explain {
@@ -18,6 +20,7 @@ object Explain {
         .queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
       catch { case e: Throwable => println(s"FAILED: ${e.getMessage}") }
+      Session.dropCaches(spark)
     }
     spark.stop()
   }

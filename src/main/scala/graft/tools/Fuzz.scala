@@ -3,16 +3,19 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
 
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.{Bench, Session, SparkEntry, Tables, Verify}
 import graft.board.{Analytics, Ann, Dedup, Parity, Text}
 import graft.dedup.DedupOps
 import graft.similarity.SimilarityOps
+import graft.tpch.TpchGen
 
 /** Parameter-space differential fuzzer vs the DuckDB oracle.
   *
@@ -29,12 +32,16 @@ import graft.similarity.SimilarityOps
   * domain objects, and `tpch.TpchGen`, whose `board` list IS the 22 TPC-H
   * board queries — one definition, no drift.
   *
-  * r10 growth: the TPC-H bank rides three families
-  * (tpch_a/b/c) drawing the spec's public substitution parameters, five
-  * analytic families (scd2 / attribution / funnel / asof / pagerank)
-  * ride newly parameterized shared gens, and the orders / customer /
-  * supplier corpora joined lineitem / part / documents / events /
-  * embeddings in the crafted-row perturbation pool — 39 families total.
+  * 45 families: the TPC-H bank rides three (tpch_a/b/c) drawing the
+  * spec's public substitution parameters, and the analytic families
+  * (scd2 / attribution / funnel / asof / pagerank / ...) ride the
+  * parameterized shared gens. Most families also draw whether to
+  * perturb their corpus: each of the eight tables with crafted rows
+  * (documents, events, lineitem, orders, customer, supplier, part,
+  * embeddings) is one `Crafted(table, schema, rows)` declaration, and
+  * one `Pert` (the set of perturbed tables) derives both sides from it —
+  * the rows unioned into the Spark frame, and a `p<table>` CTE of the
+  * same rows as DuckDB VALUES in the oracle.
   *
   * Usage: runMain graft.tools.Fuzz <sfDir> <outDir> <nConfigs> <seed>
   *        [families]   (comma-separated subset, default all)
@@ -60,42 +67,206 @@ object Fuzz {
     else s"(SELECT * FROM documents WHERE doc_id % $m = $rem)"
 
   // ---- corpus perturbation -------------------------------------------
-  // Crafted degenerate docs injected on BOTH sides (drawn per case):
-  // null text, empty, whitespace-only, single char, and a multi-byte
-  // unicode near-dup pair (é/ö two-byte, CJK three-byte, emoji four-byte
-  // — any code-unit-vs-code-point disagreement between the engines'
-  // substr/len shows up as a pair/census mismatch). The operators claim
+  // Each corpus is one `Crafted` record: the fixture table's columns
+  // (names and types, in file order) and the degenerate rows injected on
+  // BOTH sides of a perturbed case. `Pert.load` unions the rows into the
+  // Spark frame; `Pert.wrap` retargets the oracle to a `p<table>` CTE =
+  // base UNION ALL the same rows as DuckDB VALUES. The operators claim
   // totality over these shapes (the r8 hardening sweep); perturbation
   // makes every fuzzed configuration re-prove it against DuckDB.
 
-  private val craftedDocs: Seq[(Long, String, String, String, Long)] = Seq(
-    (900001L, null.asInstanceOf[String], "en", "srcX", 0L),
-    (900002L, "", "en", "srcX", 0L),
-    (900003L, "   ", "zz", "srcX", 3L),
-    (900004L, "a", "en", "srcY", 1L),
-    (900005L, "héllo wörld 你好 🌍 héllo wörld 你好 🌍 once more", "zh",
-     "srcY", 40L),
-    (900006L, "héllo wörld 你好 🌍 héllo wörld 你好 🌍 once again", "zh",
-     "srcY", 40L))
+  private[tools] final case class Crafted(table: String, schema: StructType,
+                                          rows: Seq[Seq[Any]]) {
+    /** The rows as DuckDB VALUES tuples, each NULL cast to its column's
+      * type.
+      */
+    def valuesSql: String = rows.map(_.zip(schema.map(_.dataType)).map {
+      case (null, t) => s"CAST(NULL AS ${duckType(t)})"
+      case (v: String, TimestampType | TimestampNTZType) => s"TIMESTAMP '$v'"
+      case (v: String, _) => "'" + v.replace("'", "''") + "'"
+      case (v: Array[Float], _) =>
+        v.map(x => f"$x%.1f").mkString("CAST([", ", ", "] AS FLOAT[])")
+      case (v, _) => v.toString
+    }.mkString("(", ", ", ")")).mkString(", ")
 
-  private def craftedValuesSql: String =
-    craftedDocs.map { case (id, text, lang, src, nc) =>
-      val t = Option(text).map(x => "'" + x.replace("'", "''") + "'")
-        .getOrElse("CAST(NULL AS VARCHAR)")
-      s"($id, $t, '$lang', '$src', $nc)"
-    }.mkString(", ")
-
-  /** The documents frame, optionally with the crafted rows unioned in. */
-  private def docsOf(s: SparkSession, dir: String,
-                     perturb: Boolean): DataFrame = {
-    val base = Tables.load(s, dir, "documents")
-    if (!perturb) base
-    else {
-      import s.implicits._
-      base.unionByName(
-        craftedDocs.toDF("doc_id", "text", "lang", "source", "n_chars"))
+    /** The rows as a Spark frame; timestamp text is cast in the session
+      * time zone, so the union widens a fixture NTZ column (lineitem,
+      * orders) to TimestampType exactly as the recorded sweeps did.
+      */
+    def frame(s: SparkSession): DataFrame = {
+      def isTs(t: DataType) = t == TimestampType || t == TimestampNTZType
+      val asText = StructType(schema.map(f =>
+        if (isTs(f.dataType)) f.copy(dataType = StringType) else f))
+      s.createDataFrame(rows.map(Row.fromSeq).asJava, asText).select(
+        schema.map(f =>
+          if (isTs(f.dataType)) col(f.name).cast(TimestampType)
+          else col(f.name)): _*)
     }
   }
+
+  private def duckType(t: DataType): String = t match {
+    case LongType => "BIGINT"
+    case IntegerType => "INTEGER"
+    case DoubleType => "DOUBLE"
+    case StringType => "VARCHAR"
+    case TimestampType | TimestampNTZType => "TIMESTAMP"
+    case ArrayType(FloatType, _) => "FLOAT[]"
+  }
+
+  private def fields(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) => StructField(n, t) })
+
+  // Crafted degenerate docs: null text, empty, whitespace-only, single
+  // char, and a multi-byte unicode near-dup pair (é/ö two-byte, CJK
+  // three-byte, emoji four-byte — any code-unit-vs-code-point
+  // disagreement between the engines' substr/len shows up as a
+  // pair/census mismatch).
+  private val craftedDocuments = Crafted("documents",
+    fields("doc_id" -> LongType, "text" -> StringType, "lang" -> StringType,
+           "source" -> StringType, "n_chars" -> LongType),
+    Seq(
+      Seq(900001L, null, "en", "srcX", 0L),
+      Seq(900002L, "", "en", "srcX", 0L),
+      Seq(900003L, "   ", "zz", "srcX", 3L),
+      Seq(900004L, "a", "en", "srcY", 1L),
+      Seq(900005L, "héllo wörld 你好 🌍 héllo wörld 你好 🌍 once more", "zh",
+          "srcY", 40L),
+      Seq(900006L, "héllo wörld 你好 🌍 héllo wörld 你好 🌍 once again", "zh",
+          "srcY", 40L)))
+
+  // Crafted degenerate EVENTS for the time families: null ts / user /
+  // value / type (every oracle guard runs against its engine twin), an
+  // equal-microsecond same-user pair (tie-break and RANGE-frame seams),
+  // and a negative value. Timestamps sit inside the fixture's Jan-2024
+  // span so trailing windows and day censuses include them.
+  private val T0 = "2024-01-10 12:00:00.123456"
+  private val T1 = "2024-01-15 08:30:00.500000"
+  private val T2 = "2024-01-20 22:45:10.000001"
+  private val craftedEvents = Crafted("events",
+    fields("event_id" -> LongType, "ts" -> TimestampType,
+           "user_id" -> LongType, "event_type" -> StringType,
+           "value" -> DoubleType, "props" -> StringType),
+    Seq(
+      Seq(9000001L, null, 7L, "click", 5.0, "{}"),
+      Seq(9000002L, T0, null, "click", 5.0, "{}"),
+      Seq(9000003L, T0, 7L, "click", null, "{}"),
+      Seq(9000004L, T1, 8L, "purchase", 10.0, "{}"),
+      Seq(9000005L, T1, 8L, "click", 20.0, "{}"),
+      Seq(9000006L, T2, 8L, "view", -3.5, "{}"),
+      Seq(9000007L, T2, 9L, null, 2.0, "{}")))
+
+  // Crafted degenerate LINEITEM rows for the top-k / agg families:
+  // null quantity, null extendedprice (the top-k ORDER column — Spark
+  // desc and DuckDB both rank nulls last; the typed Aggregator path
+  // needed the nullable-score form), null returnflag (null group key),
+  // negatives, and a near-2^53 magnitude price.
+  private val craftedLineitem = Crafted("lineitem",
+    fields("l_orderkey" -> LongType, "l_partkey" -> LongType,
+           "l_suppkey" -> LongType, "l_linenumber" -> IntegerType,
+           "l_quantity" -> DoubleType, "l_extendedprice" -> DoubleType,
+           "l_discount" -> DoubleType, "l_tax" -> DoubleType,
+           "l_returnflag" -> StringType, "l_linestatus" -> StringType,
+           "l_shipdate" -> TimestampNTZType),
+    Seq(
+      Seq(9000001L, 1L, 1L, 1, null, 50.5, 0.0, 0.0, "A", "F",
+          "2024-01-15 00:00:00"),
+      Seq(9000002L, 2L, 2L, 2, 10.0, null, 0.1, 0.1, "R", "O",
+          "2024-01-16 00:00:00"),
+      Seq(9000003L, 3L, 3L, 3, -5.0, -100.25, 0.0, 0.0, null, "F",
+          "2024-01-17 00:00:00"),
+      Seq(9000004L, 4L, 4L, 4, 10.0, 9.9e13, 0.05, 0.02, "N", "O",
+          "2024-01-18 00:00:00")))
+
+  // Crafted degenerate ORDERS for the TPC-H families (r9 verdict gap:
+  // lineitem was the only fact corpus with crafted-row perturbation and
+  // its rows alone caught the top-k NPE): null custkey (outer joins,
+  // EXISTS correlation), null orderdate (date filters, datediff →
+  // bucket CASE fall-through), a NONEXISTENT custkey (an orphan order —
+  // referential integrity is not assumed), null priority (the IN-list
+  // and <>-filter null seams), and a near-2^53-cents totalprice.
+  // Interlock: craftedLineitem rides REAL part/supp keys 1..4 but its
+  // own l_orderkeys are 9000001..9000004, so crafted order 9000001
+  // matches craftedLineitem's l_orderkey 9000001 row (null quantity) —
+  // the crafted order has a crafted lineitem shipping far in the
+  // future — the Q4/Q21 lateness predicates see it on both engines.
+  private val craftedOrders = Crafted("orders",
+    fields("o_orderkey" -> LongType, "o_custkey" -> LongType,
+           "o_orderstatus" -> StringType, "o_totalprice" -> DoubleType,
+           "o_orderdate" -> TimestampNTZType, "o_orderpriority" -> StringType),
+    Seq(
+      Seq(9000001L, null, "F", null, "1997-02-15 00:00:00", "1-URGENT"),
+      Seq(9000002L, 1L, "P", 0.0, null, "5-LOW"),
+      Seq(9000003L, 888888L, "O", -42.5, "1997-06-30 00:00:00", null),
+      Seq(9000004L, 2L, "F", 99999999999.99, "1995-01-01 00:00:00",
+          "2-HIGH")))
+
+  // Crafted degenerate CUSTOMER rows: null nationkey (dim-join drop +
+  // IN-list null), null segment/name, a negative balance, and a huge
+  // balance that joins a real nation — the Q22 average-cut mover. The
+  // 9000001 customer has NO orders: Q13's outer-join zero bucket.
+  private val craftedCustomer = Crafted("customer",
+    fields("c_custkey" -> LongType, "c_name" -> StringType,
+           "c_nationkey" -> IntegerType, "c_acctbal" -> DoubleType,
+           "c_mktsegment" -> StringType),
+    Seq(
+      Seq(9000001L, null, null, null, "BUILDING"),
+      Seq(9000002L, "o'hara", 3, -999.99, null),
+      Seq(9000003L, "cust z", 7, 9999999.99, "MACHINERY")))
+
+  // Crafted degenerate SUPPLIER rows: all-null dims, and the Q16
+  // balance-cut boundary pair (-0.01 strictly below zero, 0.00 exactly
+  // at it — `< 0` must exclude the latter on both engines).
+  private val craftedSupplier = Crafted("supplier",
+    fields("s_suppkey" -> LongType, "s_name" -> StringType,
+           "s_nationkey" -> IntegerType, "s_acctbal" -> DoubleType),
+    Seq(
+      Seq(9000001L, null, null, null),
+      Seq(9000002L, "supp neg", 4, -0.01),
+      Seq(9000003L, "supp zero", 4, 0.0)))
+
+  // Crafted degenerate PART rows for the fuzzy/edit families: null and
+  // empty names, an embedded single-quote near-dup pair (SQL escaping
+  // through the VALUES twin), a single-char name and its exact
+  // duplicate (the DISTINCT-name domain). ASCII ONLY by design:
+  // DuckDB's levenshtein/jaro_winkler are BYTE-based on multi-byte
+  // text while the engine (and Spark's levenshtein) count code points
+  // — the board corpus is ASCII so the oracles are exact there; the
+  // divergence is an oracle-portability limit, not an engine seam
+  // (documented in PLANS, pinned by the ASCII-only draw here).
+  private val craftedPart = Crafted("part",
+    fields("p_partkey" -> LongType, "p_name" -> StringType,
+           "p_brand" -> StringType, "p_type" -> StringType,
+           "p_size" -> IntegerType, "p_retailprice" -> DoubleType),
+    Seq(
+      Seq(9000001L, null, "Brand#9", "crafted", 1, 1.0),
+      Seq(9000002L, "", "Brand#9", "crafted", 1, 1.0),
+      Seq(9000003L, "o'brien valve", "Brand#9", "crafted", 1, 1.0),
+      Seq(9000004L, "o'brien valvf", "Brand#9", "crafted", 1, 1.0),
+      Seq(9000005L, "x", "Brand#9", "crafted", 1, 1.0),
+      Seq(9000006L, "x", "Brand#9", "crafted", 1, 1.0)))
+
+  // Crafted degenerate EMBEDDINGS for the cosine families: null, empty,
+  // zero-norm and dim-mismatched vectors (the engine's cosine is NULL
+  // for all four — excluded from neighbors/pairs/flags; the SQL twins
+  // carry the matching explicit validity conditions, because an
+  // index-overlap dot would otherwise score a dim-mismatched pair),
+  // plus a PARALLEL same-dim pair (cos exactly 1.0 — the tie seam) at
+  // the fixture's 64 dimensions.
+  private val craftedEmbeddings = Crafted("embeddings",
+    fields("vec_id" -> LongType, "embedding" -> ArrayType(FloatType),
+           "label" -> IntegerType),
+    Seq(
+      Seq(9000001L, null, 5),
+      Seq(9000002L, Array.empty[Float], 5),
+      Seq(9000003L, Array.fill(64)(0.0f), 5),
+      Seq(9000004L, Array(1.0f, 2.0f, 3.0f), 5),
+      Seq(9000005L, Array.tabulate(64)(j => (j % 7 + 1).toFloat), 5),
+      Seq(9000006L, Array.tabulate(64)(j => 2.0f * (j % 7 + 1)), 6)))
+
+  /** Every corpus, in the order `Pert.wrap` applies the CTEs. */
+  private[tools] val crafted: Seq[Crafted] = Seq(
+    craftedDocuments, craftedEvents, craftedLineitem, craftedOrders,
+    craftedCustomer, craftedSupplier, craftedPart, craftedEmbeddings)
 
   /** Retarget every table REFERENCE of `table` (`FROM table` /
     * `JOIN table`, any case, any whitespace) to `ptable`. Scoped to
@@ -132,355 +303,38 @@ object Fuzz {
       body.replaceFirst("WITH ", s"WITH $cte,\n")
     else s"WITH $cte\n" + body
 
-  /** Rewrite a generated oracle to read the perturbed corpus: every
-    * `documents` table reference retargets to a `pdocs` CTE = base
-    * UNION ALL crafted VALUES.
+  /** The crafted corpora one case perturbs, both sides: `load` reads a
+    * table with its crafted rows unioned in when it is perturbed (it is
+    * also the TPC-H builders' Loader), and `wrap` retargets every
+    * perturbed table's references in a generated oracle to its
+    * `p<table>` CTE.
     */
-  private def wrapSql(sql: String, perturb: Boolean): String =
-    if (!perturb) sql
-    else {
-      val cte = "pdocs AS (SELECT * FROM documents UNION ALL\n" +
-        s"  SELECT * FROM (VALUES $craftedValuesSql)\n" +
-        "    v(doc_id, text, lang, source, n_chars))"
-      withCte(retarget(sql, "documents", "pdocs"), cte)
+  private final case class Pert(tables: Set[String]) {
+    require(tables.subsetOf(crafted.map(_.table).toSet),
+      s"no crafted rows for ${tables.mkString(",")}")
+
+    def on: Boolean = tables.nonEmpty
+
+    def ++(other: Pert): Pert = Pert(tables ++ other.tables)
+
+    def load(s: SparkSession, dir: String, table: String): DataFrame = {
+      val base = Tables.load(s, dir, table)
+      crafted.find(c => c.table == table && tables(table))
+        .fold(base)(c => base.unionByName(c.frame(s)))
     }
 
-  // Crafted degenerate EVENTS for the time families: null ts / user /
-  // value / type (every oracle guard runs against its engine twin), an
-  // equal-microsecond same-user pair (tie-break and RANGE-frame seams),
-  // and a negative value. Timestamps sit inside the fixture's Jan-2024
-  // span so trailing windows and day censuses include them.
-  private val T0 = "2024-01-10 12:00:00.123456"
-  private val T1 = "2024-01-15 08:30:00.500000"
-  private val T2 = "2024-01-20 22:45:10.000001"
-  private val craftedEvents
-      : Seq[(Long, String, java.lang.Long, String, java.lang.Double,
-             String)] = Seq(
-    (9000001L, null.asInstanceOf[String], 7L, "click", 5.0, "{}"),
-    (9000002L, T0, null.asInstanceOf[java.lang.Long], "click", 5.0, "{}"),
-    (9000003L, T0, 7L, "click", null.asInstanceOf[java.lang.Double], "{}"),
-    (9000004L, T1, 8L, "purchase", 10.0, "{}"),
-    (9000005L, T1, 8L, "click", 20.0, "{}"),
-    (9000006L, T2, 8L, "view", -3.5, "{}"),
-    (9000007L, T2, 9L, null.asInstanceOf[String], 2.0, "{}"))
-
-  private def craftedEventsSql: String =
-    craftedEvents.map { case (id, ts, uid, typ, v, props) =>
-      val tsS = Option(ts).map(t => s"TIMESTAMP '$t'")
-        .getOrElse("CAST(NULL AS TIMESTAMP)")
-      val uidS = Option(uid).map(_.toString)
-        .getOrElse("CAST(NULL AS BIGINT)")
-      val typS = Option(typ).map(t => s"'$t'")
-        .getOrElse("CAST(NULL AS VARCHAR)")
-      val vS = Option(v).map(_.toString)
-        .getOrElse("CAST(NULL AS DOUBLE)")
-      s"($id, $tsS, $uidS, $typS, $vS, '$props')"
-    }.mkString(", ")
-
-  private def eventsOf(s: SparkSession, dir: String,
-                       perturb: Boolean): DataFrame = {
-    val base = Tables.load(s, dir, "events")
-    if (!perturb) base
-    else {
-      import s.implicits._
-      base.unionByName(
-        craftedEvents.toDF("event_id", "ts", "user_id", "event_type",
-                           "value", "props")
-          .withColumn("ts", col("ts").cast("timestamp")))
-    }
+    def wrap(sql: String): String =
+      crafted.filter(c => tables(c.table)).foldLeft(sql) { (q, c) =>
+        withCte(retarget(q, c.table, s"p${c.table}"),
+          s"p${c.table} AS (SELECT * FROM ${c.table} UNION ALL\n" +
+            s"  SELECT * FROM (VALUES ${c.valuesSql})\n" +
+            s"    v(${c.schema.fieldNames.mkString(", ")}))")
+      }
   }
 
-  /** Retarget an events-reading oracle to the perturbed stream (table
-    * references only — see wrapSql).
-    */
-  private def wrapEventsSql(sql: String, perturb: Boolean): String =
-    if (!perturb) sql
-    else withCte(retarget(sql, "events", "pevents"),
-      "pevents AS (SELECT * FROM events UNION ALL\n" +
-        s"  SELECT * FROM (VALUES $craftedEventsSql)\n" +
-        "    v(event_id, ts, user_id, event_type, value, props))")
-
-  // Crafted degenerate LINEITEM rows for the top-k / agg families:
-  // null quantity, null extendedprice (the top-k ORDER column — Spark
-  // desc and DuckDB both rank nulls last; the typed Aggregator path
-  // needed the nullable-score form), null returnflag (null group key),
-  // negatives, and a near-2^53 magnitude price.
-  private val craftedLineitem
-      : Seq[(Long, Long, Long, Int, java.lang.Double, java.lang.Double,
-             Double, Double, String, String, String)] = Seq(
-    (9000001L, 1L, 1L, 1, null.asInstanceOf[java.lang.Double], 50.5,
-     0.0, 0.0, "A", "F", "2024-01-15 00:00:00"),
-    (9000002L, 2L, 2L, 2, 10.0, null.asInstanceOf[java.lang.Double],
-     0.1, 0.1, "R", "O", "2024-01-16 00:00:00"),
-    (9000003L, 3L, 3L, 3, -5.0, -100.25, 0.0, 0.0,
-     null.asInstanceOf[String], "F", "2024-01-17 00:00:00"),
-    (9000004L, 4L, 4L, 4, 10.0, 9.9e13, 0.05, 0.02, "N", "O",
-     "2024-01-18 00:00:00"))
-
-  private def craftedLineitemSql: String =
-    craftedLineitem.map { case (ok, pk, sk, ln, q, ep, d, t, rf, ls, sd) =>
-      def dbl(v: java.lang.Double) =
-        Option(v).map(_.toString).getOrElse("CAST(NULL AS DOUBLE)")
-      def str(v: String) =
-        Option(v).map(x => s"'$x'").getOrElse("CAST(NULL AS VARCHAR)")
-      s"($ok, $pk, $sk, $ln, ${dbl(q)}, ${dbl(ep)}, $d, $t, " +
-        s"${str(rf)}, ${str(ls)}, TIMESTAMP '$sd')"
-    }.mkString(", ")
-
-  private def lineitemOf(s: SparkSession, dir: String,
-                         perturb: Boolean): DataFrame = {
-    val base = Tables.load(s, dir, "lineitem")
-    if (!perturb) base
-    else {
-      import s.implicits._
-      base.unionByName(
-        craftedLineitem.toDF("l_orderkey", "l_partkey", "l_suppkey",
-                             "l_linenumber", "l_quantity",
-                             "l_extendedprice", "l_discount", "l_tax",
-                             "l_returnflag", "l_linestatus", "l_shipdate")
-          .withColumn("l_shipdate", col("l_shipdate").cast("timestamp")))
-    }
-  }
-
-  private def wrapLineitemSql(sql: String, perturb: Boolean): String =
-    if (!perturb) sql
-    else withCte(retarget(sql, "lineitem", "plineitem"),
-      "plineitem AS (SELECT * FROM lineitem UNION ALL\n" +
-        s"  SELECT * FROM (VALUES $craftedLineitemSql)\n" +
-        "    v(l_orderkey, l_partkey, l_suppkey, l_linenumber, " +
-        "l_quantity, l_extendedprice, l_discount, l_tax, l_returnflag, " +
-        "l_linestatus, l_shipdate))")
-
-  // Crafted degenerate ORDERS for the TPC-H families (r9 verdict gap:
-  // lineitem was the only fact corpus with crafted-row perturbation and
-  // its rows alone caught the top-k NPE): null custkey (outer joins,
-  // EXISTS correlation), null orderdate (date filters, datediff →
-  // bucket CASE fall-through), a NONEXISTENT custkey (an orphan order —
-  // referential integrity is not assumed), null priority (the IN-list
-  // and <>-filter null seams), and a near-2^53-cents totalprice.
-  // Interlock: craftedLineitem rides REAL part/supp keys 1..4 but its
-  // own l_orderkeys are 9000001..9000004, so crafted order 9000001
-  // matches craftedLineitem's l_orderkey 9000001 row (null quantity) —
-  // the crafted order has a crafted lineitem shipping far in the
-  // future — the Q4/Q21 lateness predicates see it on both engines.
-  private val craftedOrders
-      : Seq[(Long, java.lang.Long, String, java.lang.Double, String,
-             String)] = Seq(
-    (9000001L, null.asInstanceOf[java.lang.Long], "F",
-     null.asInstanceOf[java.lang.Double], "1997-02-15 00:00:00",
-     "1-URGENT"),
-    (9000002L, 1L, "P", 0.0, null.asInstanceOf[String], "5-LOW"),
-    (9000003L, 888888L, "O", -42.5, "1997-06-30 00:00:00",
-     null.asInstanceOf[String]),
-    (9000004L, 2L, "F", 99999999999.99, "1995-01-01 00:00:00", "2-HIGH"))
-
-  private def craftedOrdersSql: String =
-    craftedOrders.map { case (ok, ck, st, tp, od, pr) =>
-      val ckS = Option(ck).map(_.toString)
-        .getOrElse("CAST(NULL AS BIGINT)")
-      val tpS = Option(tp).map(_.toString)
-        .getOrElse("CAST(NULL AS DOUBLE)")
-      val odS = Option(od).map(d => s"TIMESTAMP '$d'")
-        .getOrElse("CAST(NULL AS TIMESTAMP)")
-      val prS = Option(pr).map(p => s"'$p'")
-        .getOrElse("CAST(NULL AS VARCHAR)")
-      s"($ok, $ckS, '$st', $tpS, $odS, $prS)"
-    }.mkString(", ")
-
-  private def ordersOf(s: SparkSession, dir: String,
-                       perturb: Boolean): DataFrame = {
-    val base = Tables.load(s, dir, "orders")
-    if (!perturb) base
-    else {
-      import s.implicits._
-      base.unionByName(
-        craftedOrders.toDF("o_orderkey", "o_custkey", "o_orderstatus",
-                           "o_totalprice", "o_orderdate",
-                           "o_orderpriority")
-          .withColumn("o_orderdate", col("o_orderdate").cast("timestamp")))
-    }
-  }
-
-  private def wrapOrdersSql(sql: String, perturb: Boolean): String =
-    if (!perturb) sql
-    else withCte(retarget(sql, "orders", "porders"),
-      "porders AS (SELECT * FROM orders UNION ALL\n" +
-        s"  SELECT * FROM (VALUES $craftedOrdersSql)\n" +
-        "    v(o_orderkey, o_custkey, o_orderstatus, o_totalprice, " +
-        "o_orderdate, o_orderpriority))")
-
-  // Crafted degenerate CUSTOMER rows: null nationkey (dim-join drop +
-  // IN-list null), null segment/name, a negative balance, and a huge
-  // balance that joins a real nation — the Q22 average-cut mover. The
-  // 9000001 customer has NO orders: Q13's outer-join zero bucket.
-  private val craftedCustomer
-      : Seq[(Long, String, java.lang.Integer, java.lang.Double,
-             String)] = Seq(
-    (9000001L, null.asInstanceOf[String],
-     null.asInstanceOf[java.lang.Integer],
-     null.asInstanceOf[java.lang.Double], "BUILDING"),
-    (9000002L, "o'hara", 3, -999.99, null.asInstanceOf[String]),
-    (9000003L, "cust z", 7, 9999999.99, "MACHINERY"))
-
-  private def craftedCustomerSql: String =
-    craftedCustomer.map { case (ck, nm, nk, ab, seg) =>
-      val nmS = Option(nm).map(x => "'" + x.replace("'", "''") + "'")
-        .getOrElse("CAST(NULL AS VARCHAR)")
-      val nkS = Option(nk).map(_.toString)
-        .getOrElse("CAST(NULL AS INTEGER)")
-      val abS = Option(ab).map(_.toString)
-        .getOrElse("CAST(NULL AS DOUBLE)")
-      val segS = Option(seg).map(x => s"'$x'")
-        .getOrElse("CAST(NULL AS VARCHAR)")
-      s"($ck, $nmS, $nkS, $abS, $segS)"
-    }.mkString(", ")
-
-  private def customerOf(s: SparkSession, dir: String,
-                         perturb: Boolean): DataFrame = {
-    val base = Tables.load(s, dir, "customer")
-    if (!perturb) base
-    else {
-      import s.implicits._
-      base.unionByName(
-        craftedCustomer.toDF("c_custkey", "c_name", "c_nationkey",
-                             "c_acctbal", "c_mktsegment"))
-    }
-  }
-
-  private def wrapCustomerSql(sql: String, perturb: Boolean): String =
-    if (!perturb) sql
-    else withCte(retarget(sql, "customer", "pcustomer"),
-      "pcustomer AS (SELECT * FROM customer UNION ALL\n" +
-        s"  SELECT * FROM (VALUES $craftedCustomerSql)\n" +
-        "    v(c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment))")
-
-  // Crafted degenerate SUPPLIER rows: all-null dims, and the Q16
-  // balance-cut boundary pair (-0.01 strictly below zero, 0.00 exactly
-  // at it — `< 0` must exclude the latter on both engines).
-  private val craftedSupplier
-      : Seq[(Long, String, java.lang.Integer, java.lang.Double)] = Seq(
-    (9000001L, null.asInstanceOf[String],
-     null.asInstanceOf[java.lang.Integer],
-     null.asInstanceOf[java.lang.Double]),
-    (9000002L, "supp neg", 4, -0.01),
-    (9000003L, "supp zero", 4, 0.0))
-
-  private def craftedSupplierSql: String =
-    craftedSupplier.map { case (sk, nm, nk, ab) =>
-      val nmS = Option(nm).map(x => s"'$x'")
-        .getOrElse("CAST(NULL AS VARCHAR)")
-      val nkS = Option(nk).map(_.toString)
-        .getOrElse("CAST(NULL AS INTEGER)")
-      val abS = Option(ab).map(_.toString)
-        .getOrElse("CAST(NULL AS DOUBLE)")
-      s"($sk, $nmS, $nkS, $abS)"
-    }.mkString(", ")
-
-  private def supplierOf(s: SparkSession, dir: String,
-                         perturb: Boolean): DataFrame = {
-    val base = Tables.load(s, dir, "supplier")
-    if (!perturb) base
-    else {
-      import s.implicits._
-      base.unionByName(
-        craftedSupplier.toDF("s_suppkey", "s_name", "s_nationkey",
-                             "s_acctbal"))
-    }
-  }
-
-  private def wrapSupplierSql(sql: String, perturb: Boolean): String =
-    if (!perturb) sql
-    else withCte(retarget(sql, "supplier", "psupplier"),
-      "psupplier AS (SELECT * FROM supplier UNION ALL\n" +
-        s"  SELECT * FROM (VALUES $craftedSupplierSql)\n" +
-        "    v(s_suppkey, s_name, s_nationkey, s_acctbal))")
-
-  // Crafted degenerate PART rows for the fuzzy/edit families: null and
-  // empty names, an embedded single-quote near-dup pair (SQL escaping
-  // through the VALUES twin), a single-char name and its exact
-  // duplicate (the DISTINCT-name domain). ASCII ONLY by design:
-  // DuckDB's levenshtein/jaro_winkler are BYTE-based on multi-byte
-  // text while the engine (and Spark's levenshtein) count code points
-  // — the board corpus is ASCII so the oracles are exact there; the
-  // divergence is an oracle-portability limit, not an engine seam
-  // (documented in PLANS, pinned by the ASCII-only draw here).
-  private val craftedParts
-      : Seq[(Long, String, String, String, Int, Double)] = Seq(
-    (9000001L, null.asInstanceOf[String], "Brand#9", "crafted", 1, 1.0),
-    (9000002L, "", "Brand#9", "crafted", 1, 1.0),
-    (9000003L, "o'brien valve", "Brand#9", "crafted", 1, 1.0),
-    (9000004L, "o'brien valvf", "Brand#9", "crafted", 1, 1.0),
-    (9000005L, "x", "Brand#9", "crafted", 1, 1.0),
-    (9000006L, "x", "Brand#9", "crafted", 1, 1.0))
-
-  private def craftedPartsSql: String =
-    craftedParts.map { case (pk, name, brand, typ, sz, rp) =>
-      val n = Option(name).map(x => "'" + x.replace("'", "''") + "'")
-        .getOrElse("CAST(NULL AS VARCHAR)")
-      s"($pk, $n, '$brand', '$typ', $sz, $rp)"
-    }.mkString(", ")
-
-  private def partOf(s: SparkSession, dir: String,
-                     perturb: Boolean): DataFrame = {
-    val base = Tables.load(s, dir, "part")
-    if (!perturb) base
-    else {
-      import s.implicits._
-      base.unionByName(
-        craftedParts.toDF("p_partkey", "p_name", "p_brand", "p_type",
-                          "p_size", "p_retailprice"))
-    }
-  }
-
-  private def wrapPartSql(sql: String, perturb: Boolean): String =
-    if (!perturb) sql
-    else withCte(retarget(sql, "part", "ppart"),
-      "ppart AS (SELECT * FROM part UNION ALL\n" +
-        s"  SELECT * FROM (VALUES $craftedPartsSql)\n" +
-        "    v(p_partkey, p_name, p_brand, p_type, p_size, " +
-        "p_retailprice))")
-
-  // Crafted degenerate EMBEDDINGS for the cosine families: null, empty,
-  // zero-norm and dim-mismatched vectors (the engine's cosine is NULL
-  // for all four — excluded from neighbors/pairs/flags; the SQL twins
-  // carry the matching explicit validity conditions, because an
-  // index-overlap dot would otherwise score a dim-mismatched pair),
-  // plus a PARALLEL same-dim pair (cos exactly 1.0 — the tie seam).
-  private def craftedEmbeddings(dim: Int)
-      : Seq[(Long, Array[Float], Int)] = Seq(
-    (9000001L, null.asInstanceOf[Array[Float]], 5),
-    (9000002L, Array.empty[Float], 5),
-    (9000003L, Array.fill(dim)(0.0f), 5),
-    (9000004L, Array(1.0f, 2.0f, 3.0f), 5),
-    (9000005L, Array.tabulate(dim)(j => (j % 7 + 1).toFloat), 5),
-    (9000006L, Array.tabulate(dim)(j => 2.0f * (j % 7 + 1)), 6))
-
-  private def craftedEmbSql(dim: Int): String =
-    craftedEmbeddings(dim).map { case (id, v, label) =>
-      val vs = Option(v).map(a =>
-        if (a.isEmpty) "CAST([] AS FLOAT[])"
-        else a.map(x => f"$x%.1f").mkString("CAST([", ", ", "] AS FLOAT[])"))
-        .getOrElse("CAST(NULL AS FLOAT[])")
-      s"($id, $vs, $label)"
-    }.mkString(", ")
-
-  private def embOf(s: SparkSession, dir: String,
-                    perturb: Boolean): DataFrame = {
-    val base = Tables.load(s, dir, "embeddings")
-    if (!perturb) base
-    else {
-      import s.implicits._
-      base.unionByName(
-        craftedEmbeddings(64).toDF("vec_id", "embedding", "label"))
-    }
-  }
-
-  private def wrapEmbSql(sql: String, perturb: Boolean): String =
-    if (!perturb) sql
-    else withCte(retarget(sql, "embeddings", "pembeddings"),
-      "pembeddings AS (SELECT * FROM embeddings UNION ALL\n" +
-        s"  SELECT * FROM (VALUES ${craftedEmbSql(64)})\n" +
-        "    v(vec_id, embedding, label))")
+  /** A one-table family's draw: its table perturbed 35% of the time. */
+  private def drawPert(r: Random, table: String): Pert =
+    Pert(if (r.nextInt(100) < 35) Set(table) else Set.empty)
 
   // ---- families ------------------------------------------------------
 
@@ -493,17 +347,17 @@ object Fuzz {
     val tau = tauGrid(r)                // 0.50..0.95
     val m = 1 + r.nextInt(3)            // slice modulus 1..3
     val rem = r.nextInt(m)
-    val pert = r.nextInt(100) < 35
+    val p = drawPert(r, "documents")
     FuzzCase(f"fz_jaccard_$i%03d", "jaccard",
-      s"n=$n tau=$tau m=$m r=$rem pert=$pert",
+      s"n=$n tau=$tau m=$m r=$rem pert=${p.on}",
       (s, dir) => {
-        val docs0 = docsOf(s, dir, pert)
+        val docs0 = p.load(s, dir, "documents")
         val docs = if (m > 1) docs0.filter(pmod(col("doc_id"), lit(m)) === rem)
                    else docs0
         DedupOps.ngramJaccardPairs(docs, "doc_id", "text", n, tau)
       },
-      wrapSql(Dedup.jaccardPairsCteGen(n, tau, sliceRel(m, rem)) +
-        "\nSELECT id_a, id_b, jaccard FROM pairs", pert))
+      p.wrap(Dedup.jaccardPairsCteGen(n, tau, sliceRel(m, rem)) +
+        "\nSELECT id_a, id_b, jaccard FROM pairs"))
   }
 
   /** R-S containment join: snippet geometry (start/len/stride) and τ all
@@ -516,14 +370,14 @@ object Fuzz {
     val start = 21 + r.nextInt(60)      // 21..80
     val slen = 80 + r.nextInt(121)      // 80..200
     val minTextLen = start + slen + 49
-    val pert = r.nextInt(100) < 35
+    val p = drawPert(r, "documents")
     FuzzCase(f"fz_contain_$i%03d", "containment",
-      s"n=$n tau=$tau mod=$mod start=$start slen=$slen pert=$pert",
+      s"n=$n tau=$tau mod=$mod start=$start slen=$slen pert=${p.on}",
       (s, dir) =>
-        Dedup.containmentGen(docsOf(s, dir, pert), n, tau, mod, start,
+        Dedup.containmentGen(p.load(s, dir, "documents"), n, tau, mod, start,
                              slen, minTextLen),
-      wrapSql(Dedup.containmentOracleGen(n, tau, mod, start, slen,
-                                         minTextLen), pert))
+      p.wrap(Dedup.containmentOracleGen(n, tau, mod, start, slen,
+                                        minTextLen)))
   }
 
   /** Top-k per group over lineitem: k, group column and order column all
@@ -533,33 +387,34 @@ object Fuzz {
     val k = 1 + r.nextInt(8)
     val grp = Seq("l_returnflag", "l_linestatus")(r.nextInt(2))
     val ord = Seq("l_extendedprice", "l_quantity", "l_discount")(r.nextInt(3))
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_topk_$i%03d", "topk", s"k=$k grp=$grp ord=$ord pert=$pert",
-      (s, dir) => Parity.topkGen(lineitemOf(s, dir, pert), k, grp, ord),
-      wrapLineitemSql(Parity.topkOracleGen(k, grp, ord), pert))
+    val p = drawPert(r, "lineitem")
+    FuzzCase(f"fz_topk_$i%03d", "topk", s"k=$k grp=$grp ord=$ord pert=${p.on}",
+      (s, dir) => Parity.topkGen(p.load(s, dir, "lineitem"), k, grp, ord),
+      p.wrap(Parity.topkOracleGen(k, grp, ord)))
   }
 
   /** Brute-force cosine top-k: probe id and k drawn. */
   private def genCosTopk(r: Random, i: Int): FuzzCase = {
     val probe = r.nextInt(500).toLong
     val k = 3 + r.nextInt(23)           // 3..25
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_costopk_$i%03d", "cos_topk", s"probe=$probe k=$k pert=$pert",
+    val p = drawPert(r, "embeddings")
+    FuzzCase(f"fz_costopk_$i%03d", "cos_topk",
+      s"probe=$probe k=$k pert=${p.on}",
       (s, dir) =>
-        SimilarityOps.topKNeighbors(embOf(s, dir, pert),
+        SimilarityOps.topKNeighbors(p.load(s, dir, "embeddings"),
                                     "vec_id", "embedding", probe, k),
-      wrapEmbSql(Ann.cosineTopkOracleGen(probe, k), pert))
+      p.wrap(Ann.cosineTopkOracleGen(probe, k)))
   }
 
   /** All-pairs cosine ≥ τ. */
   private def genCosPairs(r: Random, i: Int): FuzzCase = {
     val tau = tauGrid(r, 6, 16)         // 0.30..0.80
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_cospairs_$i%03d", "cos_pairs", s"tau=$tau pert=$pert",
+    val p = drawPert(r, "embeddings")
+    FuzzCase(f"fz_cospairs_$i%03d", "cos_pairs", s"tau=$tau pert=${p.on}",
       (s, dir) =>
-        SimilarityOps.cosinePairs(embOf(s, dir, pert),
+        SimilarityOps.cosinePairs(p.load(s, dir, "embeddings"),
                                   "vec_id", "embedding", tau),
-      wrapEmbSql(Ann.cosinePairsOracleGen(tau), pert))
+      p.wrap(Ann.cosinePairsOracleGen(tau)))
   }
 
   /** Doc-level decontamination: gram width, benchmark source, and the
@@ -569,16 +424,16 @@ object Fuzz {
     val n = 20 + r.nextInt(21)          // 20..40
     val src = s"src${r.nextInt(20)}"
     val minShared = 1L + r.nextInt(3)   // 1..3
-    val pert = r.nextInt(100) < 35
+    val p = drawPert(r, "documents")
     FuzzCase(f"fz_decon_$i%03d", "decon",
-      s"n=$n src=$src min=$minShared pert=$pert",
+      s"n=$n src=$src min=$minShared pert=${p.on}",
       (s, dir) => {
-        val docs = docsOf(s, dir, pert)
+        val docs = p.load(s, dir, "documents")
         DedupOps.contamination(docs.filter(col("source") =!= src),
                                docs.filter(col("source") === src),
                                "doc_id", "text", n, minShared)
       },
-      wrapSql(Dedup.decontaminateOracleGen(n, src, minShared), pert))
+      p.wrap(Dedup.decontaminateOracleGen(n, src, minShared)))
   }
 
   /** Cross-document maximal shared spans: anchor gram width and span
@@ -587,12 +442,12 @@ object Fuzz {
   private def genSpans(r: Random, i: Int): FuzzCase = {
     val n = 15 + r.nextInt(16)          // 15..30
     val minLen = n + 15 + r.nextInt(41) // n+15..n+55
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_spans_$i%03d", "spans", s"n=$n minLen=$minLen pert=$pert",
+    val p = drawPert(r, "documents")
+    FuzzCase(f"fz_spans_$i%03d", "spans", s"n=$n minLen=$minLen pert=${p.on}",
       (s, dir) =>
-        DedupOps.sharedSpans(docsOf(s, dir, pert),
+        DedupOps.sharedSpans(p.load(s, dir, "documents"),
                              "doc_id", "text", n, minLen),
-      wrapSql(Dedup.substringOracleGen(n, minLen), pert))
+      p.wrap(Dedup.substringOracleGen(n, minLen)))
   }
 
   /** Benchmark-vs-corpus span decontamination. */
@@ -600,16 +455,16 @@ object Fuzz {
     val n = 20 + r.nextInt(16)          // 20..35
     val minLen = n + 20 + r.nextInt(41) // n+20..n+60
     val src = s"src${r.nextInt(20)}"
-    val pert = r.nextInt(100) < 35
+    val p = drawPert(r, "documents")
     FuzzCase(f"fz_dspans_$i%03d", "decon_spans",
-      s"n=$n minLen=$minLen src=$src pert=$pert",
+      s"n=$n minLen=$minLen src=$src pert=${p.on}",
       (s, dir) => {
-        val docs = docsOf(s, dir, pert)
+        val docs = p.load(s, dir, "documents")
         DedupOps.sharedSpansBetween(docs.filter(col("source") =!= src),
                                     docs.filter(col("source") === src),
                                     "doc_id", "text", n, minLen)
       },
-      wrapSql(Dedup.deconSpansOracleGen(n, minLen, src), pert))
+      p.wrap(Dedup.deconSpansOracleGen(n, minLen, src)))
   }
 
   /** Line-granular cross-doc dedup: duplication floor and blank-exemption
@@ -618,27 +473,26 @@ object Fuzz {
   private def genLineDedup(r: Random, i: Int): FuzzCase = {
     val minDocs = 2 + r.nextInt(3)      // 2..4
     val minChars = 1 + r.nextInt(3)     // 1..3
-    val pert = r.nextInt(100) < 35
+    val p = drawPert(r, "documents")
     FuzzCase(f"fz_lined_$i%03d", "line_dedup",
-      s"minDocs=$minDocs minChars=$minChars pert=$pert",
+      s"minDocs=$minDocs minChars=$minChars pert=${p.on}",
       (s, dir) =>
-        DedupOps.lineDedup(docsOf(s, dir, pert),
+        DedupOps.lineDedup(p.load(s, dir, "documents"),
                            "doc_id", "text", minDocs, minChars),
-      wrapSql(Dedup.lineDedupOracleGen(minDocs, minChars), pert))
+      p.wrap(Dedup.lineDedupOracleGen(minDocs, minChars)))
   }
 
   /** Keyed exact dedup over a random key subset. */
   private def genDedupKeyed(r: Random, i: Int): FuzzCase = {
     val all = Seq("lang", "source")
     val keys = r.shuffle(all).take(1 + r.nextInt(all.size))
-    val pert = r.nextInt(100) < 35
+    val p = drawPert(r, "documents")
     FuzzCase(f"fz_keyed_$i%03d", "dedup_keyed",
-      s"keys=${keys.mkString("+")} pert=$pert",
+      s"keys=${keys.mkString("+")} pert=${p.on}",
       (s, dir) =>
-        DedupOps.dedupKeyed(docsOf(s, dir, pert), keys, "doc_id"),
-      wrapSql(s"""SELECT ${keys.mkString(", ")}, min(doc_id) AS doc_id
-         |FROM documents GROUP BY ${keys.mkString(", ")}""".stripMargin,
-        pert))
+        DedupOps.dedupKeyed(p.load(s, dir, "documents"), keys, "doc_id"),
+      p.wrap(s"""SELECT ${keys.mkString(", ")}, min(doc_id) AS doc_id
+         |FROM documents GROUP BY ${keys.mkString(", ")}""".stripMargin))
   }
 
   /** Hour-range predicate with random (possibly degenerate) bounds —
@@ -647,15 +501,14 @@ object Fuzz {
   private def genHour(r: Random, i: Int): FuzzCase = {
     val lo = r.nextInt(24)
     val hi = lo + r.nextInt(24 - lo)
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_hour_$i%03d", "hour", s"lo=$lo hi=$hi pert=$pert",
+    val p = drawPert(r, "events")
+    FuzzCase(f"fz_hour_$i%03d", "hour", s"lo=$lo hi=$hi pert=${p.on}",
       (s, dir) =>
-        eventsOf(s, dir, pert)
+        p.load(s, dir, "events")
           .filter(hour(col("ts")).between(lo, hi))
           .agg(count(lit(1)).as("n_rows")),
-      wrapEventsSql(s"""SELECT count(*) AS n_rows FROM events
-         |WHERE date_part('hour', ts) BETWEEN $lo AND $hi""".stripMargin,
-        pert))
+      p.wrap(s"""SELECT count(*) AS n_rows FROM events
+         |WHERE date_part('hour', ts) BETWEEN $lo AND $hi""".stripMargin))
   }
 
   /** k-center greedy coreset: k drawn; the unrolled CTE chain's length
@@ -693,11 +546,10 @@ object Fuzz {
   private def genTopkAgg(r: Random, i: Int): FuzzCase = {
     val k = 1 + r.nextInt(8)
     val grp = Seq("l_returnflag", "l_linestatus")(r.nextInt(2))
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_topkagg_$i%03d", "topk_agg", s"k=$k grp=$grp pert=$pert",
-      (s, dir) => Parity.topkAggGen(lineitemOf(s, dir, pert), k, grp),
-      wrapLineitemSql(Parity.topkOracleGen(k, grp, "l_extendedprice"),
-                      pert))
+    val p = drawPert(r, "lineitem")
+    FuzzCase(f"fz_topkagg_$i%03d", "topk_agg", s"k=$k grp=$grp pert=${p.on}",
+      (s, dir) => Parity.topkAggGen(p.load(s, dir, "lineitem"), k, grp),
+      p.wrap(Parity.topkOracleGen(k, grp, "l_extendedprice")))
   }
 
   /** Blocked Jaro-Winkler entity resolution: τ drawn (the native
@@ -705,12 +557,12 @@ object Fuzz {
     */
   private def genFuzzy(r: Random, i: Int): FuzzCase = {
     val tau = tauGrid(r, 14, 19)        // 0.70..0.95
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_fuzzy_$i%03d", "fuzzy", s"tau=$tau pert=$pert",
+    val p = drawPert(r, "part")
+    FuzzCase(f"fz_fuzzy_$i%03d", "fuzzy", s"tau=$tau pert=${p.on}",
       (s, dir) =>
-        graft.ops.FuzzyMatch.fuzzyPairs(partOf(s, dir, pert),
+        graft.ops.FuzzyMatch.fuzzyPairs(p.load(s, dir, "part"),
                                         "p_name", tau),
-      wrapPartSql(Dedup.fuzzyOracleGen(tau), pert))
+      p.wrap(Dedup.fuzzyOracleGen(tau)))
   }
 
   /** Edit-distance join: d drawn (the 2d+1 length-key generation must
@@ -718,12 +570,12 @@ object Fuzz {
     */
   private def genEdit(r: Random, i: Int): FuzzCase = {
     val d = 1 + r.nextInt(3)            // 1..3
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_edit_$i%03d", "edit", s"d=$d pert=$pert",
+    val p = drawPert(r, "part")
+    FuzzCase(f"fz_edit_$i%03d", "edit", s"d=$d pert=${p.on}",
       (s, dir) =>
-        graft.ops.FuzzyMatch.editPairs(partOf(s, dir, pert),
+        graft.ops.FuzzyMatch.editPairs(p.load(s, dir, "part"),
                                        "p_name", d),
-      wrapPartSql(Dedup.editOracleGen(d), pert))
+      p.wrap(Dedup.editOracleGen(d)))
   }
 
   /** Winsorization census: the (lo, hi) quantile pair drawn on the 0.05
@@ -732,22 +584,22 @@ object Fuzz {
   private def genWinsorize(r: Random, i: Int): FuzzCase = {
     val lo = (1 + r.nextInt(5)) / 20.0  // 0.05..0.25
     val hi = (15 + r.nextInt(5)) / 20.0 // 0.75..0.95
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_winsor_$i%03d", "winsorize", s"lo=$lo hi=$hi pert=$pert",
-      (s, dir) => Analytics.winsorizeGen(eventsOf(s, dir, pert), lo, hi),
-      wrapEventsSql(Analytics.winsorizeOracleGen(lo, hi), pert))
+    val p = drawPert(r, "events")
+    FuzzCase(f"fz_winsor_$i%03d", "winsorize", s"lo=$lo hi=$hi pert=${p.on}",
+      (s, dir) => Analytics.winsorizeGen(p.load(s, dir, "events"), lo, hi),
+      p.wrap(Analytics.winsorizeOracleGen(lo, hi)))
   }
 
   /** Stratified sample: the per-group budget k drawn. */
   private def genStratified(r: Random, i: Int): FuzzCase = {
     val k = 3 + r.nextInt(28)           // 3..30
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_strat_$i%03d", "stratified", s"k=$k pert=$pert",
+    val p = drawPert(r, "documents")
+    FuzzCase(f"fz_strat_$i%03d", "stratified", s"k=$k pert=${p.on}",
       (s, dir) =>
         graft.text.TextOps.stratifiedSample(
-          docsOf(s, dir, pert), "source", "doc_id", k)
+          p.load(s, dir, "documents"), "source", "doc_id", k)
           .select(col("source"), col("doc_id")),
-      wrapSql(Text.stratifiedOracleGen(k), pert))
+      p.wrap(Text.stratifiedOracleGen(k)))
   }
 
   /** Heavy-hitter grams: (n, minDf) drawn — the CMS screen must stay
@@ -757,27 +609,27 @@ object Fuzz {
   private def genHeavyGrams(r: Random, i: Int): FuzzCase = {
     val n = 8 + r.nextInt(9)            // 8..16
     val minDf = 3L + r.nextInt(18)      // 3..20
-    val pert = r.nextInt(100) < 35
+    val p = drawPert(r, "documents")
     FuzzCase(f"fz_heavy_$i%03d", "heavy_grams",
-      s"n=$n minDf=$minDf pert=$pert",
+      s"n=$n minDf=$minDf pert=${p.on}",
       (s, dir) =>
-        DedupOps.heavyGrams(docsOf(s, dir, pert),
+        DedupOps.heavyGrams(p.load(s, dir, "documents"),
                             "doc_id", "text", n, minDf, width = 1 << 17),
-      wrapSql(Dedup.heavyGramsOracleGen(n, minDf), pert))
+      p.wrap(Dedup.heavyGramsOracleGen(n, minDf)))
   }
 
   /** Semantic decontamination: τ drawn. */
   private def genSemDecon(r: Random, i: Int): FuzzCase = {
     val tau = tauGrid(r, 4, 12)         // 0.20..0.60
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_semdecon_$i%03d", "sem_decon", s"tau=$tau pert=$pert",
+    val p = drawPert(r, "embeddings")
+    FuzzCase(f"fz_semdecon_$i%03d", "sem_decon", s"tau=$tau pert=${p.on}",
       (s, dir) => {
-        val emb = embOf(s, dir, pert)
+        val emb = p.load(s, dir, "embeddings")
         SimilarityOps.semanticDecontaminate(
           emb.filter(col("label") =!= 0), emb.filter(col("label") === 0),
           "vec_id", "embedding", tau)
       },
-      wrapEmbSql(Ann.semDeconOracleGen(tau), pert))
+      p.wrap(Ann.semDeconOracleGen(tau)))
   }
 
   /** Gap sessionization: the gap drawn (the lag/cumsum boundary must
@@ -785,11 +637,11 @@ object Fuzz {
     */
   private def genSessionize(r: Random, i: Int): FuzzCase = {
     val gap = 5 + r.nextInt(116)        // 5..120 minutes
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_sess_$i%03d", "sessionize", s"gap=${gap}m pert=$pert",
+    val p = drawPert(r, "events")
+    FuzzCase(f"fz_sess_$i%03d", "sessionize", s"gap=${gap}m pert=${p.on}",
       (s, dir) =>
-        graft.streaming.Sessionize.batch(eventsOf(s, dir, pert), gap),
-      wrapEventsSql(Analytics.sessionizeOracleGen(gap), pert))
+        graft.streaming.Sessionize.batch(p.load(s, dir, "events"), gap),
+      p.wrap(Analytics.sessionizeOracleGen(gap)))
   }
 
   /** Interval self-join: δ drawn — the δ-bin equi-key decomposition
@@ -798,25 +650,26 @@ object Fuzz {
     */
   private def genIntervalJoin(r: Random, i: Int): FuzzCase = {
     val delta = 200L + r.nextInt(4801)  // 200..5000 ms
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_ivj_$i%03d", "interval_join", s"delta=${delta}ms pert=$pert",
+    val p = drawPert(r, "events")
+    FuzzCase(f"fz_ivj_$i%03d", "interval_join",
+      s"delta=${delta}ms pert=${p.on}",
       (s, dir) =>
         graft.streaming.StreamingOps.intervalJoin(
-          eventsOf(s, dir, pert), "event_id", "ts", delta),
-      wrapEventsSql(Analytics.intervalJoinOracleGen(delta), pert))
+          p.load(s, dir, "events"), "event_id", "ts", delta),
+      p.wrap(Analytics.intervalJoinOracleGen(delta)))
   }
 
   /** Range-join pair census: δ drawn. */
   private def genRangeJoin(r: Random, i: Int): FuzzCase = {
     val delta = 5000L + 1000L * r.nextInt(116) // 5..120 s
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_rgj_$i%03d", "range_join", s"delta=${delta}ms pert=$pert",
+    val p = drawPert(r, "events")
+    FuzzCase(f"fz_rgj_$i%03d", "range_join", s"delta=${delta}ms pert=${p.on}",
       (s, dir) =>
-        graft.ops.RangeJoin.pairsWithin(eventsOf(s, dir, pert),
+        graft.ops.RangeJoin.pairsWithin(p.load(s, dir, "events"),
                                         "event_id", "ts", delta)
           .agg(count(lit(1)).as("n_pairs"),
                round(avg(col("gap_ms")), 6).as("avg_gap_ms")),
-      wrapEventsSql(Analytics.rangeJoinOracleGen(delta), pert))
+      p.wrap(Analytics.rangeJoinOracleGen(delta)))
   }
 
   /** Context-window chunking: (size, overlap) drawn — the tail-window
@@ -826,13 +679,13 @@ object Fuzz {
   private def genChunk(r: Random, i: Int): FuzzCase = {
     val size = 20 + r.nextInt(61)       // 20..80 tokens
     val overlap = r.nextInt(size / 2 + 1)
-    val pert = r.nextInt(100) < 35
+    val p = drawPert(r, "documents")
     FuzzCase(f"fz_chunk_$i%03d", "chunk",
-      s"size=$size overlap=$overlap pert=$pert",
+      s"size=$size overlap=$overlap pert=${p.on}",
       (s, dir) =>
-        graft.text.TextOps.chunkDocs(docsOf(s, dir, pert),
+        graft.text.TextOps.chunkDocs(p.load(s, dir, "documents"),
                                      "text", size, overlap),
-      wrapSql(Text.chunkDocsOracleGen(size, overlap), pert))
+      p.wrap(Text.chunkDocsOracleGen(size, overlap)))
   }
 
   /** Token-budget prefix sample: (budget, seed) drawn — the global
@@ -842,34 +695,35 @@ object Fuzz {
   private def genTokenBudget(r: Random, i: Int): FuzzCase = {
     val budget = 500L * (1 + r.nextInt(60)) // 500..30000 tokens
     val seed = r.nextInt(1000).toString
-    val pert = r.nextInt(100) < 35
+    val p = drawPert(r, "documents")
     FuzzCase(f"fz_tokbud_$i%03d", "token_budget",
-      s"budget=$budget seed=$seed pert=$pert",
+      s"budget=$budget seed=$seed pert=${p.on}",
       (s, dir) =>
-        graft.text.TextOps.tokenBudget(docsOf(s, dir, pert), budget, seed),
-      wrapSql(Text.tokenBudgetOracleGen(budget, seed), pert))
+        graft.text.TextOps.tokenBudget(p.load(s, dir, "documents"), budget,
+                                       seed),
+      p.wrap(Text.tokenBudgetOracleGen(budget, seed)))
   }
 
   /** Trailing value-range rolling aggregate: the window width drawn. */
   private def genRolling(r: Random, i: Int): FuzzCase = {
     val hours = 1 + r.nextInt(72)
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_roll_$i%03d", "rolling", s"hours=$hours pert=$pert",
+    val p = drawPert(r, "events")
+    FuzzCase(f"fz_roll_$i%03d", "rolling", s"hours=$hours pert=${p.on}",
       (s, dir) =>
-        graft.ops.TimeSeries.rollingAgg(eventsOf(s, dir, pert),
+        graft.ops.TimeSeries.rollingAgg(p.load(s, dir, "events"),
                                         "event_id", "user_id", "ts",
                                         "value", hours),
-      wrapEventsSql(Analytics.rollingAvgOracleGen(hours), pert))
+      p.wrap(Analytics.rollingAvgOracleGen(hours)))
   }
 
   /** Trailing-distinct active users: the window drawn. */
   private def genActiveUsers(r: Random, i: Int): FuzzCase = {
     val days = 2 + r.nextInt(20) // 2..21
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_actusr_$i%03d", "active_users", s"days=$days pert=$pert",
+    val p = drawPert(r, "events")
+    FuzzCase(f"fz_actusr_$i%03d", "active_users", s"days=$days pert=${p.on}",
       (s, dir) =>
-        graft.ops.TimeSeries.activeUsers(eventsOf(s, dir, pert), days),
-      wrapEventsSql(Analytics.activeUsersOracleGen(days), pert))
+        graft.ops.TimeSeries.activeUsers(p.load(s, dir, "events"), days),
+      p.wrap(Analytics.activeUsersOracleGen(days)))
   }
 
   /** Balanced shard assignment census: (nShards, seed) drawn — the
@@ -878,14 +732,14 @@ object Fuzz {
   private def genShard(r: Random, i: Int): FuzzCase = {
     val n = 2 + r.nextInt(31) // 2..32
     val seed = r.nextInt(1000).toString
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_shard_$i%03d", "shard", s"n=$n seed=$seed pert=$pert",
+    val p = drawPert(r, "documents")
+    FuzzCase(f"fz_shard_$i%03d", "shard", s"n=$n seed=$seed pert=${p.on}",
       (s, dir) =>
-        graft.text.TextOps.shardAssign(docsOf(s, dir, pert), n, seed)
+        graft.text.TextOps.shardAssign(p.load(s, dir, "documents"), n, seed)
           .groupBy(col("shard").cast("long").as("shard"))
           .agg(count(lit(1)).as("n_docs"),
                sum(col("n_tokens")).as("n_tokens")),
-      wrapSql(Text.shardCensusOracleGen(n, seed), pert))
+      p.wrap(Text.shardCensusOracleGen(n, seed)))
   }
 
   /** Hopping-window rollup: (slide, hop-count) drawn — each row lands
@@ -896,25 +750,25 @@ object Fuzz {
     val slide = Seq(10, 15, 20, 30, 60)(r.nextInt(5))
     val mult = 2 + r.nextInt(3) // dur = 2..4 slides
     val dur = slide * mult
-    val pert = r.nextInt(100) < 35
+    val p = drawPert(r, "events")
     FuzzCase(f"fz_hop_$i%03d", "hopping",
-      s"dur=${dur}m slide=${slide}m pert=$pert",
+      s"dur=${dur}m slide=${slide}m pert=${p.on}",
       (s, dir) =>
         graft.streaming.StreamingOps.hoppingRollup(
-          eventsOf(s, dir, pert), s"$dur minutes", s"$slide minutes"),
-      wrapEventsSql(Analytics.hoppingOracleGen(dur, slide), pert))
+          p.load(s, dir, "events"), s"$dur minutes", s"$slide minutes"),
+      p.wrap(Analytics.hoppingOracleGen(dur, slide)))
   }
 
   /** Trailing-baseline anomaly flags: (windowDays, z) drawn. */
   private def genAnomaly(r: Random, i: Int): FuzzCase = {
     val days = 2 + r.nextInt(13)        // 2..14
     val z = (4 + r.nextInt(9)) / 2.0    // 2.0..6.0 on the 0.5 grid
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_anom_$i%03d", "anomaly", s"days=$days z=$z pert=$pert",
+    val p = drawPert(r, "events")
+    FuzzCase(f"fz_anom_$i%03d", "anomaly", s"days=$days z=$z pert=${p.on}",
       (s, dir) =>
-        graft.ops.TimeSeries.anomalyFlags(eventsOf(s, dir, pert),
+        graft.ops.TimeSeries.anomalyFlags(p.load(s, dir, "events"),
                                           days, z),
-      wrapEventsSql(Analytics.anomalyOracleGen(days, z), pert))
+      p.wrap(Analytics.anomalyOracleGen(days, z)))
   }
 
   // ---- generic group-by/agg family -----------------------------------
@@ -947,7 +801,9 @@ object Fuzz {
     */
   private def genAgg(r: Random, i: Int): FuzzCase = {
     val tb = aggTables(r.nextInt(aggTables.size))
-    val pert = tb.name == "lineitem" && r.nextInt(100) < 35
+    // only lineitem is perturbed here; the other tables skip the draw
+    // (the recorded sweeps' parameters depend on it)
+    val p = if (tb.name == "lineitem") drawPert(r, tb.name) else Pert(Set.empty)
     val nGrp = r.nextInt(math.min(2, tb.grpCols.size) + 1) // 0..2
     val grps = r.shuffle(tb.grpCols).take(nGrp)
 
@@ -1001,18 +857,16 @@ object Fuzz {
       if (grps.nonEmpty) s"\nGROUP BY ${grps.mkString(", ")}" else ""
     FuzzCase(f"fz_agg_$i%03d", "agg",
       s"tb=${tb.name} grp=${grps.mkString("+")} aggs=${aggs.size} " +
-        s"filt=${filt.map(_._2).getOrElse("none")} pert=$pert",
+        s"filt=${filt.map(_._2).getOrElse("none")} pert=${p.on}",
       (s, dir) => {
-        val base0 = if (pert) lineitemOf(s, dir, perturb = true)
-                    else Tables.load(s, dir, tb.name)
+        val base0 = p.load(s, dir, tb.name)
         val base = filt.map(f => base0.filter(f._1)).getOrElse(base0)
         val cols = aggs.map(_._1)
         if (grps.nonEmpty)
           base.groupBy(grps.map(col): _*).agg(cols.head, cols.tail: _*)
         else base.agg(cols.head, cols.tail: _*)
       },
-      wrapLineitemSql(s"SELECT $sqlSel\nFROM ${tb.name}$sqlWhere$sqlGroup",
-                      pert))
+      p.wrap(s"SELECT $sqlSel\nFROM ${tb.name}$sqlWhere$sqlGroup"))
   }
 
   // ---- analytic-bank families (r9 verdict gap #3) -----------------------
@@ -1023,10 +877,10 @@ object Fuzz {
   /** SCD2 history build: the tier divisor moves every change boundary. */
   private def genScd2(r: Random, i: Int): FuzzCase = {
     val d = Seq(10, 20, 25, 40, 50, 80)(r.nextInt(6))
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_scd2_$i%03d", "scd2", s"div=$d pert=$pert",
-      (s, dir) => Analytics.scd2Gen(eventsOf(s, dir, pert), d),
-      wrapEventsSql(Analytics.scd2OracleGen(d), pert))
+    val p = drawPert(r, "events")
+    FuzzCase(f"fz_scd2_$i%03d", "scd2", s"div=$d pert=${p.on}",
+      (s, dir) => Analytics.scd2Gen(p.load(s, dir, "events"), d),
+      p.wrap(Analytics.scd2OracleGen(d)))
   }
 
   /** Last-touch attribution: the channel modulus redraws the credit
@@ -1035,10 +889,10 @@ object Fuzz {
     */
   private def genAttribution(r: Random, i: Int): FuzzCase = {
     val m = 2 + r.nextInt(5) // 2..6
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_attr_$i%03d", "attribution", s"mod=$m pert=$pert",
-      (s, dir) => Analytics.attributionGen(eventsOf(s, dir, pert), m),
-      wrapEventsSql(Analytics.attributionOracleGen(m), pert))
+    val p = drawPert(r, "events")
+    FuzzCase(f"fz_attr_$i%03d", "attribution", s"mod=$m pert=${p.on}",
+      (s, dir) => Analytics.attributionGen(p.load(s, dir, "events"), m),
+      p.wrap(Analytics.attributionOracleGen(m)))
   }
 
   /** Ordered funnel: random step sequence over the five event types and
@@ -1048,13 +902,13 @@ object Fuzz {
     val types = Seq("view", "click", "purchase", "signup", "error")
     val steps = r.shuffle(types).take(2 + r.nextInt(3))
     val gap = 12 + r.nextInt(85) // 12..96 h
-    val pert = r.nextInt(100) < 35
+    val p = drawPert(r, "events")
     FuzzCase(f"fz_funnel_$i%03d", "funnel",
-      s"steps=${steps.mkString(">")} gap=${gap}h pert=$pert",
+      s"steps=${steps.mkString(">")} gap=${gap}h pert=${p.on}",
       (s, dir) =>
-        graft.ops.Funnel.funnel(eventsOf(s, dir, pert), steps,
+        graft.ops.Funnel.funnel(p.load(s, dir, "events"), steps,
                                 maxGapHours = Some(gap)),
-      wrapEventsSql(Analytics.funnelOracleGen(steps, gap), pert))
+      p.wrap(Analytics.funnelOracleGen(steps, gap)))
   }
 
   /** As-of join (latest order at-or-before each event): the user→cust
@@ -1062,14 +916,13 @@ object Fuzz {
     */
   private def genAsof(r: Random, i: Int): FuzzCase = {
     val m = Seq(50, 100, 150, 250)(r.nextInt(4))
-    val pertE = r.nextInt(100) < 35
-    val pertO = r.nextInt(100) < 35
-    FuzzCase(f"fz_asof_$i%03d", "asof", s"mod=$m pertE=$pertE pertO=$pertO",
+    val p = drawPert(r, "events") ++ drawPert(r, "orders")
+    FuzzCase(f"fz_asof_$i%03d", "asof",
+      s"mod=$m pertE=${p.tables("events")} pertO=${p.tables("orders")}",
       (s, dir) =>
-        Analytics.asofGen(eventsOf(s, dir, pertE), ordersOf(s, dir, pertO),
+        Analytics.asofGen(p.load(s, dir, "events"), p.load(s, dir, "orders"),
                           m),
-      wrapOrdersSql(wrapEventsSql(Analytics.asofOracleGen(m), pertE),
-                    pertO))
+      p.wrap(Analytics.asofOracleGen(m)))
   }
 
   /** PageRank: basket modulus (graph density), iteration count and the
@@ -1080,29 +933,29 @@ object Fuzz {
     val m = 4 + r.nextInt(5)            // 4..8
     val iters = 2 + r.nextInt(3)        // 2..4
     val damping = Seq(0.8, 0.85, 0.9)(r.nextInt(3))
-    val pert = r.nextInt(100) < 35
+    val p = drawPert(r, "lineitem")
     FuzzCase(f"fz_pr_$i%03d", "pagerank",
-      s"mod=$m iters=$iters d=$damping pert=$pert",
+      s"mod=$m iters=$iters d=$damping pert=${p.on}",
       (s, dir) =>
         graft.graph.GraphOps.pageRank(
             graft.graph.GraphOps.coPurchaseEdges(
-              lineitemOf(s, dir, pert), modulus = m),
+              p.load(s, dir, "lineitem"), modulus = m),
             iters = iters, damping = damping)
           .orderBy(col("pr").desc, col("node").asc).limit(25)
           .select(col("node").as("part_key"), col("pr")),
-      wrapLineitemSql(
-        Analytics.pagerankOracleGen(m, iters, damping), pert))
+      p.wrap(
+        Analytics.pagerankOracleGen(m, iters, damping)))
   }
 
   /** Event transition matrix at a drawn journey depth. */
   private def genTransitions(r: Random, i: Int): FuzzCase = {
     val step = 1 + r.nextInt(4)
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_trans_$i%03d", "transitions", s"step=$step pert=$pert",
+    val p = drawPert(r, "events")
+    FuzzCase(f"fz_trans_$i%03d", "transitions", s"step=$step pert=${p.on}",
       (s, dir) =>
-        graft.ops.TimeSeries.transitions(eventsOf(s, dir, pert),
+        graft.ops.TimeSeries.transitions(p.load(s, dir, "events"),
                                          step = step),
-      wrapEventsSql(Analytics.transitionsOracleGen(step), pert))
+      p.wrap(Analytics.transitionsOracleGen(step)))
   }
 
   /** Gap-filled outage flags: baseline window and z cut drawn (the
@@ -1112,35 +965,35 @@ object Fuzz {
   private def genOutage(r: Random, i: Int): FuzzCase = {
     val days = 2 + r.nextInt(13)        // 2..14
     val z = (4 + r.nextInt(9)) / 2.0    // 2.0..6.0 on the 0.5 grid
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_outage_$i%03d", "outage", s"days=$days z=$z pert=$pert",
+    val p = drawPert(r, "events")
+    FuzzCase(f"fz_outage_$i%03d", "outage", s"days=$days z=$z pert=${p.on}",
       (s, dir) =>
-        graft.ops.TimeSeries.anomalyFlags(eventsOf(s, dir, pert),
+        graft.ops.TimeSeries.anomalyFlags(p.load(s, dir, "events"),
                                           windowDays = days,
                                           zThreshold = z, gapFill = true),
-      wrapEventsSql(Analytics.outageOracleGen(days, z), pert))
+      p.wrap(Analytics.outageOracleGen(days, z)))
   }
 
   /** Cohort retention at drawn granularity (day vs week cohorts). */
   private def genCohort(r: Random, i: Int): FuzzCase = {
     val gran = Seq("day", "week")(r.nextInt(2))
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_cohort_$i%03d", "cohort", s"gran=$gran pert=$pert",
+    val p = drawPert(r, "events")
+    FuzzCase(f"fz_cohort_$i%03d", "cohort", s"gran=$gran pert=${p.on}",
       (s, dir) =>
-        graft.ops.TimeSeries.cohortRetention(eventsOf(s, dir, pert),
+        graft.ops.TimeSeries.cohortRetention(p.load(s, dir, "events"),
                                              granularity = gran),
-      wrapEventsSql(Analytics.cohortOracleGen(gran), pert))
+      p.wrap(Analytics.cohortOracleGen(gran)))
   }
 
   /** Daily churn census at a drawn look-back horizon (1/7/28-day). */
   private def genChurn(r: Random, i: Int): FuzzCase = {
     val h = Seq(1, 2, 3, 7, 14, 28)(r.nextInt(6))
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_churn_$i%03d", "churn", s"horizon=$h pert=$pert",
+    val p = drawPert(r, "events")
+    FuzzCase(f"fz_churn_$i%03d", "churn", s"horizon=$h pert=${p.on}",
       (s, dir) =>
-        graft.ops.TimeSeries.userChurn(eventsOf(s, dir, pert),
+        graft.ops.TimeSeries.userChurn(p.load(s, dir, "events"),
                                        horizonDays = h),
-      wrapEventsSql(Analytics.churnOracleGen(h), pert))
+      p.wrap(Analytics.churnOracleGen(h)))
   }
 
   /** Gopher quality rules: every cut threshold drawn from its coarse
@@ -1159,11 +1012,11 @@ object Fuzz {
       maxEllipsisFrac = Seq(0.05, 0.1, 0.3)(r.nextInt(3)),
       minAlphaFrac = Seq(0.6, 0.8, 0.9)(r.nextInt(3)),
       minStopwords = 1 + r.nextInt(3))
-    val pert = r.nextInt(100) < 35
-    FuzzCase(f"fz_gopher_$i%03d", "gopher", s"t=$t pert=$pert",
+    val p = drawPert(r, "documents")
+    FuzzCase(f"fz_gopher_$i%03d", "gopher", s"t=$t pert=${p.on}",
       (s, dir) =>
-        graft.text.TextOps.gopherRules(docsOf(s, dir, pert), t = t),
-      wrapSql(Text.gopherOracleGen(t), pert))
+        graft.text.TextOps.gopherRules(p.load(s, dir, "documents"), t = t),
+      p.wrap(Text.gopherOracleGen(t)))
   }
 
   /** Window frames: random ROWS / RANGE bounds (and a lag/lead offset)
@@ -1180,14 +1033,14 @@ object Fuzz {
     // RANGE offsets are in orderkey units — scale up so frames span
     // multiple rows at sf0.01's sparse per-customer keys
     val (ra, rb) = (a * 100, b * 100)
-    val pert = r.nextInt(100) < 35
+    val p = drawPert(r, "orders")
     val frameSql = mode match {
       case "rows"    => s"ROWS BETWEEN $a PRECEDING AND $b FOLLOWING"
       case "range"   => s"RANGE BETWEEN $ra PRECEDING AND $rb FOLLOWING"
       case "running" => "ROWS UNBOUNDED PRECEDING"
     }
     FuzzCase(f"fz_wframe_$i%03d", "window_frames",
-      s"mode=$mode a=$a b=$b off=$off pert=$pert",
+      s"mode=$mode a=$a b=$b off=$off pert=${p.on}",
       (s, dir) => {
         val base = Window.partitionBy(col("o_custkey"))
           .orderBy(col("o_orderkey").asc)
@@ -1197,7 +1050,7 @@ object Fuzz {
           case "running" =>
             base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         }
-        ordersOf(s, dir, pert)
+        p.load(s, dir, "orders")
           .select(col("o_custkey"), col("o_orderkey"),
                   col("o_totalprice"))
           .withColumn("frame_cents",
@@ -1207,7 +1060,7 @@ object Fuzz {
           .withColumn("next_k", lead(col("o_orderkey"), off).over(base))
           .drop("o_totalprice")
       },
-      wrapOrdersSql(
+      p.wrap(
         s"""SELECT o_custkey, o_orderkey,
            |  CAST(sum(CAST(round((o_totalprice) * 100, 0) AS BIGINT))
            |       OVER w AS BIGINT) AS frame_cents,
@@ -1218,7 +1071,7 @@ object Fuzz {
            |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey
            |             $frameSql),
            |       wp AS (PARTITION BY o_custkey ORDER BY o_orderkey)"""
-          .stripMargin, pert))
+          .stripMargin))
   }
 
   // ---- TPC-H substitution-parameter families ---------------------------
@@ -1229,38 +1082,20 @@ object Fuzz {
   // nation/region picks — TPC-H v3 §2.4, adapted to the synthetic
   // domain) and run the paired builders in graft.tpch.TpchGen, whose
   // pinned draws are the board entries (`TpchGen.board`). Each of
-  // the four mutable-side tables is independently perturbed with
-  // crafted degenerate rows at 30% (orphan orders, null dims, boundary
-  // balances — see the crafted blocks above); wraps compose, one CTE
-  // per perturbed table.
+  // the five TPC-H tables with crafted rows is independently perturbed
+  // at 30% (orphan orders, null dims, boundary balances — see the
+  // crafted blocks above); wraps compose, one CTE per perturbed table.
 
-  private final case class Pert(li: Boolean, ord: Boolean, cust: Boolean,
-                                supp: Boolean, part: Boolean) {
-    override def toString =
-      Seq("li" -> li, "ord" -> ord, "cust" -> cust, "supp" -> supp,
-          "part" -> part).collect { case (n, true) => n } match {
-        case Nil => "none"
-        case ps  => ps.mkString("+")
-      }
+  /** The TPC-H draw: each table perturbed at 30%, in this order, and
+    * the params tag naming the perturbed ones (`li+ord`, `none`).
+    */
+  private def drawTpchPert(r: Random): (Pert, String) = {
+    val on = Seq("lineitem" -> "li", "orders" -> "ord", "customer" -> "cust",
+                 "supplier" -> "supp", "part" -> "part")
+      .filter(_ => r.nextInt(100) < 30)
+    (Pert(on.map(_._1).toSet),
+     if (on.isEmpty) "none" else on.map(_._2).mkString("+"))
   }
-
-  private def drawPert(r: Random): Pert =
-    Pert(r.nextInt(100) < 30, r.nextInt(100) < 30, r.nextInt(100) < 30,
-         r.nextInt(100) < 30, r.nextInt(100) < 30)
-
-  private def tpchLoad(p: Pert): graft.tpch.TpchGen.Loader =
-    (s, dir, name) => name match {
-      case "lineitem" => lineitemOf(s, dir, p.li)
-      case "orders"   => ordersOf(s, dir, p.ord)
-      case "customer" => customerOf(s, dir, p.cust)
-      case "supplier" => supplierOf(s, dir, p.supp)
-      case "part"     => partOf(s, dir, p.part)
-      case other      => Tables.load(s, dir, other)
-    }
-
-  private def wrapTpchSql(sql: String, p: Pert): String =
-    wrapPartSql(wrapSupplierSql(wrapCustomerSql(wrapOrdersSql(
-      wrapLineitemSql(sql, p.li), p.ord), p.cust), p.supp), p.part)
 
   private def drawDate(r: Random, loYear: Int, hiYear: Int): LocalDate =
     LocalDate.of(loYear + r.nextInt(hiYear - loYear + 1),
@@ -1280,9 +1115,8 @@ object Fuzz {
 
   /** Scan/aggregate/EXISTS bank: Q1, Q4, Q6, Q12, Q13, Q14, Q22. */
   private def genTpchA(r: Random, i: Int): FuzzCase = {
-    val p = drawPert(r)
-    val L = tpchLoad(p)
-    import graft.tpch.TpchGen
+    val (p, pTag) = drawTpchPert(r)
+    val L: TpchGen.Loader = p.load
     val (tag, params, q) = r.nextInt(7) match {
       case 0 =>
         val d = 60 + r.nextInt(61)
@@ -1314,15 +1148,14 @@ object Fuzz {
         ("q22", s"keys=${keys.mkString("/")} cut=$cut",
          TpchGen.q22(L, keys, cut))
     }
-    FuzzCase(f"fz_tpcha_$i%03d", "tpch_a", s"$tag $params pert=$p",
-             q.run, wrapTpchSql(q.sql, p))
+    FuzzCase(f"fz_tpcha_$i%03d", "tpch_a", s"$tag $params pert=$pTag",
+             q.run, p.wrap(q.sql))
   }
 
   /** Join-pipeline bank: Q3, Q5, Q7, Q8, Q9, Q10, Q18. */
   private def genTpchB(r: Random, i: Int): FuzzCase = {
-    val p = drawPert(r)
-    val L = tpchLoad(p)
-    import graft.tpch.TpchGen
+    val (p, pTag) = drawTpchPert(r)
+    val L: TpchGen.Loader = p.load
     val (tag, params, q) = r.nextInt(7) match {
       case 0 =>
         val seg = segments(r.nextInt(5))
@@ -1352,15 +1185,14 @@ object Fuzz {
         val thr = 250 + r.nextInt(151)
         ("q18", s"qty>$thr", TpchGen.q18(L, thr))
     }
-    FuzzCase(f"fz_tpchb_$i%03d", "tpch_b", s"$tag $params pert=$p",
-             q.run, wrapTpchSql(q.sql, p))
+    FuzzCase(f"fz_tpchb_$i%03d", "tpch_b", s"$tag $params pert=$pTag",
+             q.run, p.wrap(q.sql))
   }
 
   /** Subquery/threshold bank: Q2, Q11, Q15, Q16, Q17, Q19, Q20, Q21. */
   private def genTpchC(r: Random, i: Int): FuzzCase = {
-    val p = drawPert(r)
-    val L = tpchLoad(p)
-    import graft.tpch.TpchGen
+    val (p, pTag) = drawTpchPert(r)
+    val L: TpchGen.Loader = p.load
     val (tag, params, q) = r.nextInt(8) match {
       case 0 =>
         val t = partTypes(r.nextInt(6))
@@ -1403,8 +1235,8 @@ object Fuzz {
         val st = Seq("F", "O", "P")(r.nextInt(3))
         ("q21", s"late=$late status=$st", TpchGen.q21(L, late, st))
     }
-    FuzzCase(f"fz_tpchc_$i%03d", "tpch_c", s"$tag $params pert=$p",
-             q.run, wrapTpchSql(q.sql, p))
+    FuzzCase(f"fz_tpchc_$i%03d", "tpch_c", s"$tag $params pert=$pTag",
+             q.run, p.wrap(q.sql))
   }
 
   // ---- driver --------------------------------------------------------
@@ -1512,7 +1344,7 @@ object Fuzz {
         System.err.println(s"[fuzz] ${c.name} FAILED (${c.params}): " +
           e.toString)
       }
-      spark.catalog.clearCache()
+      Session.dropCaches(spark)
     }
 
     Verify.writeOracleSql(s"$outDir/oracle_sql.json", oracle)

@@ -31,7 +31,7 @@ import graft.ops.FuzzyMatch
   *    exclusion, nothing else.
   *
   * Corpus: seeded typo-cluster generator over 2-byte (é/ö), 3-byte
-  * (CJK), and 4-byte (emoji) tokens — the Fuzz.craftedDocs pool
+  * (CJK), and 4-byte (emoji) tokens — the Fuzz.craftedDocuments pool
   * (tools/Fuzz.scala) widened to whole names; mutations substitute/
   * insert/delete at CODE POINT granularity so an edit on an emoji is
   * one edit, not two.
