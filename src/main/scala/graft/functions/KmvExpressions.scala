@@ -135,23 +135,6 @@ object Kmv {
     (kInter, m, unionEst)
   }
 
-  /** k smallest distinct of two unsigned-sorted sketches (the merge). */
-  def mergeArrays(a: Array[Long], b: Array[Long], k: Int): Array[Long] = {
-    val buf = new Array[Long](math.min(a.length + b.length, k))
-    var i = 0; var j = 0; var m = 0
-    while (m < k && (i < a.length || j < b.length)) {
-      if (j >= b.length) { buf(m) = a(i); i += 1; m += 1 }
-      else if (i >= a.length) { buf(m) = b(j); j += 1; m += 1 }
-      else {
-        val c = java.lang.Long.compareUnsigned(a(i), b(j))
-        if (c == 0) { buf(m) = a(i); i += 1; j += 1; m += 1 }
-        else if (c < 0) { buf(m) = a(i); i += 1; m += 1 }
-        else { buf(m) = b(j); j += 1; m += 1 }
-      }
-    }
-    if (m == buf.length) buf else java.util.Arrays.copyOf(buf, m)
-  }
-
   def requireSketchType(e: Expression, who: String)
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._

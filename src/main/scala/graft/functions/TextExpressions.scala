@@ -26,9 +26,6 @@ object TextExpressions {
     else TypeCheckFailure(
       s"$name requires $what argument, got ${e.dataType.catalogString}")
 
-  def hashBytes(s: UTF8String): Long =
-    XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, Seed)
-
   /** Column API: 64-bit SimHash of a token array. */
   def simhash64(tokens: Column): Column =
     Bridge.toColumn(SimHash64(Bridge.toExpression(tokens), Seed))

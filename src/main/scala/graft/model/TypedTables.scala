@@ -12,42 +12,6 @@ import graft.Tables
   * checks help).
   */
 
-/** The reference's trip fact schema — Postgres DDL
-  * dags/nyc_taxi_pipeline_dag.py:31-53 mapped per SURVEY §1.2
-  * (`store_and_fwd_flag` kept String: TLC data is 'N'/'Y' despite the
-  * DDL's BOOLEAN — the documented type clash).
-  */
-case class TaxiTrip(
-    VendorID: Option[Int],
-    tpep_pickup_datetime: Option[Timestamp],
-    tpep_dropoff_datetime: Option[Timestamp],
-    passenger_count: Option[Int],
-    trip_distance: Option[Double],
-    RatecodeID: Option[Int],
-    store_and_fwd_flag: Option[String],
-    PULocationID: Option[Int],
-    DOLocationID: Option[Int],
-    payment_type: Option[Int],
-    fare_amount: Option[Double],
-    extra: Option[Double],
-    mta_tax: Option[Double],
-    tip_amount: Option[Double],
-    tolls_amount: Option[Double],
-    improvement_surcharge: Option[Double],
-    total_amount: Option[Double],
-    congestion_surcharge: Option[Double],
-    Airport_fee: Option[Double],
-    pickup_month: Option[Int])
-
-/** Zone dimension (data/taxi_zone_lookup.csv). */
-case class Zone(LocationID: Int, Borough: String, Zone: String,
-                service_zone: String)
-
-/** Legacy TLD row (recovered bytecode DAGs, SURVEY §1.4). */
-case class TopLevelDomain(domain: String, `type`: String,
-                          sponsoring_organization: Option[String],
-                          date: Option[String])
-
 // testdata tables (FIXTURES.md §B)
 case class Event(event_id: Long, ts: Timestamp, user_id: Long,
                  event_type: String, value: Double, props: String)

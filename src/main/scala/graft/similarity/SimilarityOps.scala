@@ -573,14 +573,6 @@ object SimilarityOps {
       .select(col(idCol), col(vecCol),
               nearestListExpr(col(vecCol), col("__cb")).as("list_id"))
 
-  /** IVF index build against the seed codebook (backwards-compatible
-    * shape: list_id values are 0..nlist-1 ranks of the seed ids).
-    */
-  def ivfAssign(emb: DataFrame, idCol: String, vecCol: String,
-                nlist: Int): DataFrame =
-    ivfAssignTo(emb, idCol, vecCol,
-                seedCentroids(emb, idCol, vecCol, nlist))
-
   /** Spherical k-means training for the IVF codebook: assign to nearest
     * centroid by cosine, recompute each list's centroid as the
     * per-dimension mean (the mean direction maximizes the summed cosine,

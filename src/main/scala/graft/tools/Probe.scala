@@ -2,13 +2,7 @@ package graft.tools
 
 import scala.collection.mutable
 
-import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.util.QueryExecutionListener
-
-import graft.{Session, SparkEntry}
+import graft.{QueryMetrics, Session, SparkEntry}
 
 /** Dev probe over driver-contract queries, on the bench's own session
   * (`graft.Session`). Every mode looks the queries up in
@@ -21,9 +15,10 @@ import graft.{Session, SparkEntry}
   *    establish-once replay contract), so each timed run is a restart
   *    with no new input: time ingest through q_minhash_index and
   *    refresh through q_incremental_refresh.
-  *  - `jobs`: one timed run with per-job and per-stage lines — separates
-  *    driver/scheduling overhead from real compute; each job line ends
-  *    with the call site of the action that started it.
+  *  - `jobs`: one timed run under a `graft.QueryMetrics` ledger, with
+  *    per-job and per-stage lines — separates driver/scheduling overhead
+  *    from real compute; each job line ends with the call site of the
+  *    action that started it.
   *  - `driver`: `jobs` plus where the driver's own time goes (r12: the
   *    ~50 ms/job fixed cost of the store-lifecycle queries): time
   *    between jobs, catalyst phases, janino compiles, and a stack sample
@@ -87,109 +82,6 @@ object Probe {
     val s = xs.sorted
     val m = s.size / 2
     if (s.size % 2 == 1) s(m) else (s(m - 1) + s(m)) / 2
-  }
-
-  /** What the listener buses saw since the last `reset`: job intervals,
-    * per-job and per-stage report lines, and the catalyst phase time
-    * (QueryPlanningTracker) of every action — analysis/optimization/
-    * planning are the driver-side phases; execution is the jobs.
-    *
-    * Each job line names its call site. AQE stage jobs carry none of
-    * their own (their stages are named after an anonymous closure), so
-    * a job inside a SQL execution takes the execution's description —
-    * the call site of the action that started it, e.g. `head at
-    * DedupOps.scala:172` — via its `spark.sql.execution.id` property;
-    * any other job takes its result stage's name.
-    */
-  private[graft] final class RunLog extends SparkListener
-      with QueryExecutionListener {
-    private val starts = mutable.Map[Int, (Long, String)]()
-    private val execSites = mutable.Map[Long, String]()
-    private val intervals = mutable.ArrayBuffer[(Long, Long)]()
-    private val lines = mutable.ArrayBuffer[String]()
-    private val phaseNs = mutable.Map[String, Long]().withDefaultValue(0L)
-    private var taskTimeMs, nStages, nExecs = 0L
-
-    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-      case s: SparkListenerSQLExecutionStart =>
-        synchronized { execSites(s.executionId) = s.description }
-      case _ =>
-    }
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      val exec = Option(e.properties)
-        .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
-      val site = exec.flatMap(id => execSites.get(id.toLong))
-        .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name))
-        .getOrElse("")
-      starts(e.jobId) = (System.nanoTime(), site)
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-      starts.remove(e.jobId).foreach { case (s, site) =>
-        val end = System.nanoTime()
-        intervals += ((s, end))
-        lines += f"job ${e.jobId}%3d ${(end - s) / 1e9}%7.3f s  $site"
-      }
-    }
-    // stage wall far above taskTime/cpus: a serialized or skewed stage
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      synchronized {
-        val m = e.stageInfo.taskMetrics
-        taskTimeMs += m.executorRunTime
-        nStages += 1
-        val wall = (for {
-          s <- e.stageInfo.submissionTime; c <- e.stageInfo.completionTime
-        } yield (c - s) / 1000.0).getOrElse(-1.0)
-        lines += f"  stage ${e.stageInfo.stageId}%3d tasks=${e.stageInfo.numTasks}%3d " +
-          f"wall=$wall%7.2f s " +
-          f"taskTime=${m.executorRunTime / 1000.0}%8.2f s " +
-          f"sRead=${m.shuffleReadMetrics.recordsRead}%10d " +
-          f"sWrite=${m.shuffleWriteMetrics.recordsWritten}%10d " +
-          f"spill=${(m.memoryBytesSpilled + m.diskBytesSpilled) / 1e6}%8.1f MB"
-      }
-    override def onSuccess(funcName: String, qe: QueryExecution,
-                           durationNs: Long): Unit = synchronized {
-      nExecs += 1
-      qe.tracker.phases.foreach { case (p, s) =>
-        phaseNs(p) += (s.endTimeMs - s.startTimeMs) * 1000000L }
-      phaseNs("TOTAL_ACTION") += durationNs
-    }
-    override def onFailure(funcName: String, qe: QueryExecution,
-                           error: Exception): Unit = ()
-
-    def reset(): Unit = synchronized {
-      starts.clear(); execSites.clear(); intervals.clear(); lines.clear()
-      phaseNs.clear(); taskTimeMs = 0L; nStages = 0L; nExecs = 0L
-    }
-
-    /** The per-job and per-stage lines `reportJobs` prints. */
-    private[graft] def jobLines: Seq[String] = synchronized(lines.toSeq)
-
-    def reportJobs(name: String, rows: Long, wall: Double): Unit =
-      synchronized {
-        println(f"=== $name rows=$rows wall=$wall%.2fs jobs=${intervals.size} " +
-          s"stages=$nStages taskTime=${taskTimeMs / 1000.0}s")
-        lines.foreach(l => println("  " + l))
-      }
-
-    /** The union of the job intervals splits the wall into inside-jobs
-      * and between-jobs (pure driver work: planning, file listing,
-      * commit, parquet footers).
-      */
-    def reportDriver(wall: Double, compiles: Long): Unit = synchronized {
-      // by start time, each interval adds only what reaches past the
-      // furthest end seen so far
-      val (covered, _) = intervals.sortBy(_._1).foldLeft((0L, Long.MinValue)) {
-        case ((sum, reach), (s, e)) =>
-          (sum + math.max(0L, e - math.max(s, reach)), math.max(reach, e))
-      }
-      val inJobs = covered / 1e9
-      println(f"  driver: inJobs=$inJobs%.2f s betweenJobs=${wall - inJobs}%.2f s " +
-        f"perJobOverheadIfUniform=${(wall - inJobs) / math.max(1, intervals.size) * 1000}%.1f ms " +
-        s"codegenCompiles=$compiles")
-      println(s"  catalyst phases over $nExecs tracked executions:")
-      phaseNs.toSeq.sortBy(-_._2).foreach { case (p, ns) =>
-        println(f"    $p%-16s ${ns / 1e9}%7.3f s") }
-    }
   }
 
   /** Driver-cost categories: a sampled stack belongs to the first
@@ -297,9 +189,6 @@ object Probe {
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "4").toInt
     val spark = Session.local(Session.defaultCpus,
       args.confs.filterNot(args.arms.contains): _*)
-    val log = new RunLog
-    spark.sparkContext.addSparkListener(log)
-    spark.listenerManager.register(log)
 
     args.queries.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
@@ -342,20 +231,14 @@ object Probe {
             f"B=$valB min=$minB%.3f med=$medB%.3f | minB/minA=${minB / minA}%.3f " +
             f"medB/medA=${medB / medA}%.3f")
         case mode => // jobs, driver
-          // the listener bus is asynchronous: let it deliver each run's
-          // events before resetting and before reporting
-          Thread.sleep(500)
-          log.reset()
           val sampler = Option.when(mode == "driver")(new Sampler)
-          val cg0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-          sampler.foreach(_.start())
-          val (n, wall) = timed()
-          sampler.foreach(_.halt())
-          Thread.sleep(500)
-          log.reportJobs(name, n, wall)
+          val ((n, wall), m) = QueryMetrics.measure(spark) {
+            sampler.foreach(_.start())
+            try timed() finally sampler.foreach(_.halt())
+          }
+          m.reportJobs(name, n, wall)
           sampler.foreach { s =>
-            log.reportDriver(wall,
-              CodegenMetrics.METRIC_COMPILATION_TIME.getCount - cg0)
+            m.reportDriver(wall)
             s.report()
           }
       }

@@ -2,11 +2,10 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Session, SparkEntry, Tables}
+import graft.{QueryMetrics, Session, SparkEntry, Tables}
 
 /** Empirical scaling curve for the headline dedup/ANN operators (r10
   * verdict task 1 — convert the 100 TB claim from design audit to
@@ -120,12 +119,6 @@ object ScaleCurve {
 
     val spark = Session.local(Session.defaultCpus)
 
-    @volatile var jobs = 0
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        synchronized { jobs += 1 }
-    })
-
     val dirs = scales.map(s => s -> ensureScaled(spark, baseDir, workDir, s))
       .toMap
 
@@ -135,11 +128,12 @@ object ScaleCurve {
       val fn = SparkEntry.queries.getOrElse(q, sys.error(s"unknown query $q"))
       val best = (1 to runs).map { _ =>
         Session.dropCaches(spark)
-        val j0 = jobs
-        val t0 = System.nanoTime()
-        val n = fn(spark, dirs(s)).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        (sec, n, jobs - j0)
+        val ((sec, n), m) = QueryMetrics.measure(spark) {
+          val t0 = System.nanoTime()
+          val n = fn(spark, dirs(s)).count()
+          ((System.nanoTime() - t0) / 1e9, n)
+        }
+        (sec, n, m.jobs)
       }.minBy(_._1)
       res += ((q, s) -> best)
       println(f"[scale] $q%-22s x$s%-2d ${best._1}%8.2fs rows=${best._2}%-8d " +

@@ -12,7 +12,7 @@ class BloomLayoutSpec extends SparkSpec {
   import spark.implicits._
 
   test("bloomFilterWrite puts filters in footers for exactly the asked columns") {
-    val dir = "/root/repo/target/scratch/bloom_spec"
+    val dir = s"${Sinks.scratchRoot}/bloom_spec"
     Sinks.bloomFilterWrite(
       Tables.load(spark, sfDir, "events")
         .select($"event_id", $"user_id", $"value"),

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.io.Sinks
+
 /** Bucketed co-located join: write both join sides bucketed by the join
   * key, and the join needs NO shuffle exchange — the write-time layout
   * that turns a 100 TB fact⋈fact join from all-to-all into map-side work.
@@ -10,7 +12,7 @@ class BucketingSpec extends SparkSpec {
   import spark.implicits._
 
   test("bucketed tables join without a shuffle exchange") {
-    val warehouse = "/root/repo/target/scratch/bucketed"
+    val warehouse = s"${Sinks.scratchRoot}/bucketed"
     spark.sql("DROP TABLE IF EXISTS li_b")
     spark.sql("DROP TABLE IF EXISTS ord_b")
     Tables.load(spark, sfDir, "lineitem")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.DedupOps
 import graft.functions.CmsExpressions
+import graft.io.Sinks
 
 class CmsSpec extends SparkSpec {
   import spark.implicits._
@@ -71,7 +72,7 @@ class CmsSpec extends SparkSpec {
 
   test("cms_agg is a valid streaming aggregate: complete-mode sketch " +
        "absorbs new files and never undercounts") {
-    val dir = "/root/repo/target/scratch/cms_stream"
+    val dir = s"${Sinks.scratchRoot}/cms_stream"
     new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
     val batch1 = (0L until 50L).flatMap(i => Seq.fill(3)(i)).toDF("h")
     batch1.write.mode("overwrite").parquet(dir)

@@ -39,7 +39,8 @@ class CoreOpsSpec extends SparkSpec {
     // a shuffling repartition must therefore decline at gate 1
     val small = Seq.tabulate(64)(i => (i.toLong, s"v$i")).toDF("id", "v")
       .repartition(2)
-    val n = jobsStartedBy(CoreOps.spreadSmallScan(small, col("id")))
+    val n = QueryMetrics.measure(spark)(
+      CoreOps.spreadSmallScan(small, col("id")))._2.jobs
     assert(n === 0, s"spreadSmallScan started $n Spark job(s)")
   }
 

@@ -60,7 +60,7 @@ class CorpusPipelineSpec extends SparkSpec {
 
   test("streaming curate ≡ batch curate (incremental ingest twin)") {
     val docs = Tables.load(spark, sfDir, "documents")
-    val dir = "/root/repo/target/scratch/curate_stream_in"
+    val dir = s"${Sinks.scratchRoot}/curate_stream_in"
     docs.write.mode("overwrite").parquet(dir)
 
     // 0.1 sits inside this corpus's observed rep_ratio range (0.06-0.18),
@@ -89,7 +89,7 @@ class CorpusPipelineSpec extends SparkSpec {
   }
 
   test("sorted partitioned write produces pruned, sorted row groups (S9)") {
-    val path = "/root/repo/target/scratch/test_sorted_write"
+    val path = s"${Sinks.scratchRoot}/test_sorted_write"
     val li = Tables.load(spark, sfDir, "lineitem")
       .withColumn("ship_month", month($"l_shipdate"))
     Sinks.writeSortedPartitioned(li, "ship_month", "l_shipdate", path)

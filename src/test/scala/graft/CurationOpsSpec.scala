@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.dedup.DedupOps
+import graft.io.Sinks
 import graft.similarity.SimilarityOps
 import graft.text.TextOps
 
@@ -55,7 +56,7 @@ class CurationOpsSpec extends SparkSpec {
   }
 
   test("contaminationStream flags on a real stream, statelessly") {
-    val dir = "/root/repo/target/scratch/contam_stream"
+    val dir = s"${Sinks.scratchRoot}/contam_stream"
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog tonight"),
       (2L, "completely unrelated content with no overlap at all here")
@@ -91,7 +92,7 @@ class CurationOpsSpec extends SparkSpec {
     assert(exact.nonEmpty)
 
     // stream shape: quoting doc flagged, clean doc passes silently
-    val dir = "/root/repo/target/scratch/contam_bloom_stream"
+    val dir = s"${Sinks.scratchRoot}/contam_bloom_stream"
     val sdocs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog tonight"),
       (2L, "completely unrelated content with no overlap at all here")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Dd
 import graft.functions.DdExpressions.{ddAgg, ddMerge, ddQuantile}
+import graft.io.Sinks
 
 /** DDSketch (Masson, Rim & Lee VLDB'19) contracts: the ≤ alpha
   * relative-error guarantee, the EXACT-merge property (count addition —
@@ -97,7 +98,6 @@ class DdSpec extends SparkSpec {
        "old `_applied` ledger still dedups and migrates in its next swap") {
     import java.sql.Timestamp
     import org.apache.hadoop.fs.Path
-    import graft.io.Sinks
     import graft.ops.SketchOps
     val root = s"${Sinks.scratchRoot}/spec_dd_ledger"
     Sinks.dropTable(spark, root)
@@ -127,7 +127,7 @@ class DdSpec extends SparkSpec {
 
   test("streaming sketch build: windowed dd_agg on a stream = batch") {
     import java.sql.Timestamp
-    val dir = "/root/repo/target/scratch/dd_stream"
+    val dir = s"${Sinks.scratchRoot}/dd_stream"
     val rows = Seq(
       (Timestamp.valueOf("2024-01-01 10:05:00"), "a", 5.0),
       (Timestamp.valueOf("2024-01-01 10:40:00"), "a", 50.0),

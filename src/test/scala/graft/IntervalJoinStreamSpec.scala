@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import graft.io.Sinks
 import graft.ops.RangeJoin
 import graft.streaming.StreamingOps
 
@@ -35,7 +36,7 @@ class IntervalJoinStreamSpec extends SparkSpec {
   }
 
   test("stream-stream interval join emits exactly the batch pairs") {
-    val dir = "/root/repo/target/scratch/interval_stream"
+    val dir = s"${Sinks.scratchRoot}/interval_stream"
     sample.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(sample.schema).parquet(dir)
     val q = StreamingOps.intervalJoin(stream, "event_id", "ts", 60000L)

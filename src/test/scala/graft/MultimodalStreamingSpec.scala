@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.io.Sinks
 import graft.multimodal.MultimodalOps
 import graft.streaming.StreamingOps
 
@@ -31,7 +32,7 @@ class MultimodalStreamingSpec extends SparkSpec {
   }
 
   test("metadata predicates do not read the media payload column") {
-    val dir = "/root/repo/target/scratch/media_parquet"
+    val dir = s"${Sinks.scratchRoot}/media_parquet"
     media.write.mode("overwrite").parquet(dir)
     val q = spark.read.parquet(dir)
       .filter($"format" === "fake/png" && $"width" > 100)
@@ -59,7 +60,7 @@ class MultimodalStreamingSpec extends SparkSpec {
   test("streaming windowed rollup equals the batch rollup") {
     val events = Tables.load(spark, sfDir, "events")
       .select($"ts", $"event_type", $"value")
-    val dir = "/root/repo/target/scratch/stream_in"
+    val dir = s"${Sinks.scratchRoot}/stream_in"
     events.write.mode("overwrite").parquet(dir)
     val batch = StreamingOps.windowedRollup(events)
       .orderBy($"hour_start", $"event_type")

@@ -124,10 +124,10 @@ class ParquetReadSpec extends SparkSpec {
     Sinks.dropTable(spark, root)
     Seq((1L, 1), (2L, 2), (3L, 3)).toDF("id", "band")
       .write.partitionBy("band").parquet(s"$root/buckets")
-    val n = jobsStartedBy {
+    val n = QueryMetrics.measure(spark) {
       Tables.all.foreach(t => Tables.load(spark, sfDir, t))
       Tables.read(spark, s"$root/buckets")
-    }
+    }._2.jobs
     assert(n === 0, s"Tables.read started $n Spark job(s)")
     Sinks.dropTable(spark, root)
   }

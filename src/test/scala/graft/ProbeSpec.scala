@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.tools.Probe
 
@@ -33,22 +35,43 @@ class ProbeSpec extends SparkSpec {
   }
 
   test("jobs lines name each job's call site, AQE stage jobs included") {
-    val log = new Probe.RunLog
-    spark.sparkContext.addSparkListener(log)
+    // one aggregation under AQE: a shuffle-stage job (no call site of
+    // its own) and the result job, both inside one SQL execution
+    val (_, m) = QueryMetrics.measure(spark) {
+      spark.range(0, 1000, 1, 4).groupBy(col("id") % 7).count().collect()
+    }
+    assert(m.jobs >= 2, s"expected a stage job and a result job, got ${m.jobs}")
+    val jobs = m.jobLines.filter(_.startsWith("job "))
+    assert(jobs.size === m.jobs)
+    jobs.foreach(l =>
+      assert(l.matches(".* s  collect at ProbeSpec\\.scala:\\d+"),
+             s"unattributed job line: $l"))
+  }
+
+  test("drain starts no job: an empty body counts 0 jobs") {
+    val (_, m) = QueryMetrics.measure(spark)(QueryMetrics.drain(spark))
+    assert(m.jobs === 0)
+    assert(m.jobLines.isEmpty)
+  }
+
+  test("every job of sequential actions is counted when the body returns") {
+    // holds the shared listener bus for 2 s at the first action's end, so
+    // the body returns with every count job's events still queued
+    val slow = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        Thread.sleep(2000)
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(slow)
     try {
-      // one aggregation under AQE: a shuffle-stage job (no call site of
-      // its own) and the result job, both inside one SQL execution
-      val n = jobsStartedBy {
-        spark.range(0, 1000, 1, 4).groupBy(col("id") % 7).count()
-          .collect()
+      val n = 12
+      val (_, m) = QueryMetrics.measure(spark) {
+        spark.range(1).collect()
+        (1 to n).foreach(i => spark.sparkContext.parallelize(1 to i, 2).count())
       }
-      assert(n >= 2, s"expected a stage job and a result job, got $n")
-      val jobs = log.jobLines.filter(_.startsWith("job "))
-        .filterNot(_.contains("SparkSpec.scala")) // the drain sentinel
-      assert(jobs.size === n)
-      jobs.foreach(l =>
-        assert(l.matches(".* s  collect at ProbeSpec\\.scala:\\d+"),
-               s"unattributed job line: $l"))
-    } finally spark.sparkContext.removeSparkListener(log)
+      assert(m.jobLines.count(
+        _.matches("job .* s  count at ProbeSpec\\.scala:\\d+")) === n)
+    } finally spark.listenerManager.unregister(slow)
   }
 }

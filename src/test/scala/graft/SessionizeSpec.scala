@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import graft.io.Sinks
 import graft.streaming.Sessionize
 
 class SessionizeSpec extends SparkSpec {
@@ -37,7 +38,7 @@ class SessionizeSpec extends SparkSpec {
   }
 
   test("streaming flatMapGroupsWithState emits every closed session") {
-    val dir = "/root/repo/target/scratch/session_stream"
+    val dir = s"${Sinks.scratchRoot}/session_stream"
     val events = Seq(
       (1L, ts("2024-01-01 10:00:00")),
       (1L, ts("2024-01-01 10:05:00")),

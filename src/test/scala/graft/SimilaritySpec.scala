@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorExpressions
+import graft.io.Sinks
 import graft.similarity.SimilarityOps
 
 class SimilaritySpec extends SparkSpec {
@@ -178,7 +179,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("saved IVF index round-trips: loaded top-k identical, probe " +
        "scan pruned to the probed list directories") {
-    val path = "/root/repo/target/scratch/ivf_index"
+    val path = s"${Sinks.scratchRoot}/ivf_index"
     val cents = SimilarityOps.ivfTrain(emb, "vec_id", "embedding",
                                        nlist = 4, iters = 2)
     val assigned = SimilarityOps.ivfAssignTo(emb, "vec_id", "embedding",
@@ -211,7 +212,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("appendIndex: append-then-serve equals rebuild-then-serve for " +
        "the same frozen codebook") {
-    val path = "/root/repo/target/scratch/ivf_index_append"
+    val path = s"${Sinks.scratchRoot}/ivf_index_append"
     val old = emb.filter($"vec_id" < 400)
     val fresh = emb.filter($"vec_id" >= 400)
     val cents = SimilarityOps.ivfTrain(old, "vec_id", "embedding",
@@ -246,7 +247,7 @@ class SimilaritySpec extends SparkSpec {
   test("reindex: retrain-and-swap preserves the corpus exactly, serves " +
        "brute-force-equal at nprobe = nlist, cleans its swap dirs, and " +
        "is rerun-stable") {
-    val path = "/root/repo/target/scratch/ivf_reindex"
+    val path = s"${Sinks.scratchRoot}/ivf_reindex"
     val base = emb.filter($"vec_id" % 2 === 0)
     val batch = emb.filter($"vec_id" % 2 === 1)
     val cents = SimilarityOps.seedCentroids(base, "vec_id", "embedding", 4)
@@ -609,7 +610,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("semanticDecontaminate is stateless stream-static: stream ≡ batch") {
-    val dir = "/root/repo/target/scratch/semdecon_stream"
+    val dir = s"${Sinks.scratchRoot}/semdecon_stream"
     val corpus = Seq(100L -> Array(2f, 0f), 102L -> Array(-1f, -1f))
       .toDF("vec_id", "embedding")
     corpus.write.mode("overwrite").parquet(dir)

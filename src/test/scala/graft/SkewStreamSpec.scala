@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.io.Sinks
 import graft.ops.SkewOps
 import graft.streaming.StreamingOps
 
@@ -54,7 +55,7 @@ class SkewStreamSpec extends SparkSpec {
   }
 
   test("streaming dedup within watermark drops duplicate keys") {
-    val dir = "/root/repo/target/scratch/dedup_stream"
+    val dir = s"${Sinks.scratchRoot}/dedup_stream"
     val events = Seq(
       (1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), "a"),
       (1L, java.sql.Timestamp.valueOf("2024-01-01 10:01:00"), "a-dup"),

@@ -6,6 +6,7 @@ import scala.util.Random
 
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.io.Sinks
 import graft.streaming.StreamingOps
 
 /** Randomized checkpoint kill-points for the restart path (r10 verdict
@@ -45,7 +46,7 @@ class StreamRestartFuzzSpec extends SparkSpec {
   test("dedup state + exactly-once sink survive random kill schedules") {
     for (seed <- Seq(901L, 902L, 903L, 904L)) {
       val r = new Random(seed)
-      val root = s"/root/repo/target/scratch/stream_restart_fuzz/s$seed"
+      val root = s"${Sinks.scratchRoot}/stream_restart_fuzz/s$seed"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val (inDir, outDir, ckpt) = (s"$root/in", s"$root/out", s"$root/ckpt")
       // the file source requires the input dir to exist at stream start

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 
+import graft.io.Sinks
 import graft.streaming.StreamingOps
 
 /** Checkpoint-recovery semantics: stop a streaming query, add more input,
@@ -16,7 +17,7 @@ class StreamRestartSpec extends SparkSpec {
   import spark.implicits._
 
   test("dedup state and file sink survive a query restart exactly-once") {
-    val root = "/root/repo/target/scratch/stream_restart"
+    val root = s"${Sinks.scratchRoot}/stream_restart"
     val inDir = s"$root/in"
     val outDir = s"$root/out"
     val ckpt = s"$root/ckpt"

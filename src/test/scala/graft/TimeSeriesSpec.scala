@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 
+import graft.io.Sinks
 import graft.ops.TimeSeries
 import graft.streaming.StreamingOps
 
@@ -31,7 +32,7 @@ class TimeSeriesSpec extends SparkSpec {
   test("streaming hopping rollup equals the batch rollup") {
     val events = Tables.load(spark, sfDir, "events")
       .select($"ts", $"event_type", $"value")
-    val dir = "/root/repo/target/scratch/hop_stream_in"
+    val dir = s"${Sinks.scratchRoot}/hop_stream_in"
     events.write.mode("overwrite").parquet(dir)
     val batch = StreamingOps.hoppingRollup(events)
       .orderBy($"win_start", $"event_type")

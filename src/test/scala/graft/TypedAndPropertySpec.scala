@@ -95,7 +95,7 @@ class TypedAndPropertySpec extends SparkSpec {
   }
 
   test("CSV re-read coerces unparseable timestamps to null (S3 semantics)") {
-    val path = "/root/repo/target/scratch/test_csv_coerce"
+    val path = s"${Sinks.scratchRoot}/test_csv_coerce"
     Seq(("1", "2024-01-01 10:00:00"), ("2", "not-a-timestamp"),
         ("3", "2024-02-29 23:59:59"))
       .toDF("id", "ts").coalesce(1)
