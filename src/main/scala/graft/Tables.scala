@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -56,21 +56,7 @@ object Tables {
                            path: String): Option[StructType] = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    // Spark's listing filter (HadoopFSUtils.shouldFilterOutPathName):
-    // `_`/`.` names are hidden unless they hold `=` or are summaries
-    def summary(n: String) =
-      n.startsWith("_metadata") || n.startsWith("_common_metadata")
-    def hidden(n: String) =
-      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
-        n.endsWith("._COPYING_")) && !summary(n)
-    def leaves(st: FileStatus): Seq[FileStatus] =
-      if (!st.isDirectory) Seq(st)
-      else fs.listStatus(st.getPath).toSeq
-        .filterNot(c => hidden(c.getPath.getName)).flatMap(leaves)
-    val files =
-      try leaves(fs.getFileStatus(root))
-      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val files = leafFiles(root.getFileSystem(conf), root)
     if (files.exists(f => summary(f.getPath.getName))) None
     else files.minByOption(_.getPath.toString).map { f =>
       val footer = ParquetFooterReader.readFooter(
@@ -78,6 +64,30 @@ object Tables {
       ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
         new ParquetToSparkSchemaConverter(spark.sessionState.conf))
     }
+  }
+
+  /** A parquet summary file (`_metadata`, `_common_metadata`): listed
+    * with the data files, but it holds no rows.
+    */
+  private[graft] def summary(name: String): Boolean =
+    name.startsWith("_metadata") || name.startsWith("_common_metadata")
+
+  /** The files a read of `root` lists, by Spark's listing rule
+    * (HadoopFSUtils.shouldFilterOutPathName): the recursive leaves under
+    * `root` with no hidden name below it — a `_`/`.` name is hidden
+    * unless it holds `=` or is a summary. Only names under `root` are
+    * judged, never its ancestors. A missing `root` lists nothing.
+    */
+  private[graft] def leafFiles(fs: FileSystem, root: Path): Seq[FileStatus] = {
+    def hidden(n: String) =
+      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")) && !summary(n)
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(leaves)
+    try leaves(fs.getFileStatus(root))
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
   }
 
   /** Load one testdata table.

@@ -373,8 +373,8 @@ object Analytics {
       Some("""SELECT event_type, count(DISTINCT user_id) AS n_users
         |FROM events GROUP BY event_type""".stripMargin)),
 
-    // Gap-based sessionization (batch form; streaming twin in
-    // graft.streaming.Sessionize, spec-verified)
+    // Gap-based sessionization (batch form; the streaming form is
+    // StreamingOps.sessionWindowRollup, q_session_window)
     Case("q_sessionize", (s, dir) =>
       graft.streaming.Sessionize.batch(t(s, dir, "events"), 30),
       Some(sessionizeOracleGen(30))),

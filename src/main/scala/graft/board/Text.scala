@@ -378,21 +378,12 @@ object Text {
         |GROUP BY 1""".stripMargin)),
 
     // Distilled quality classifier (the fastText / FineWeb-Edu filter
-    // shape): weak labels from the heuristic score, hashed-BoW logistic
-    // regression trained by deterministic full-batch GD (weights fold
-    // into each pass as ONE array literal — no weight-table join), the
-    // whole corpus scored by the trained model. Rows-only (iterative-GD
-    // internals, the k-means precedent), but the output carries the
-    // trained model's CHECKSUM as a constant column: the GD is RNG-free,
-    // and QualityClassifierSpec pins this exact query path's checksum
-    // against an independent scalar reimplementation of the loop — the
-    // board row is verified, not just counted.
-    // Distilled quality classifier: heuristic labels → 8 rounds of
-    // full-batch GD (portable md5-bucket features, per-iteration
-    // 1e-9-grid weights) → corpus scores. HASH-EXACT against an
-    // unrolled-CTE oracle that re-trains the model in DuckDB — every
-    // coefficient is verified end-to-end through the served scores
-    // (strictly stronger than r7's driver-side model fingerprint).
+    // shape): heuristic labels → 8 rounds of deterministic full-batch GD
+    // of a hashed-BoW logistic regression (portable md5-bucket features,
+    // per-iteration 1e-9-grid weights, folded into each pass as ONE
+    // array literal — no weight-table join) → corpus scores. HASH-EXACT
+    // against an unrolled-CTE oracle that re-trains the model in DuckDB —
+    // every coefficient is verified end-to-end through the served scores.
     Case("q_quality_classifier", (s, dir) => {
       val docs = t(s, dir, "documents")
       val labels = docs.select(col("doc_id"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{SetExpressions, ShingleExpressions}
+import graft.functions.ShingleExpressions
 import graft.text.TextOps
 
 /** Deduplication operators for training-data curation (north-star scope):
@@ -455,18 +455,14 @@ object DedupOps {
     * semi-join-reduced to the probe set's grams. All bounds lossless —
     * q_containment_join is oracle-exact against the plain quadratic SQL.
     *
-    * Output: (id_a contained, id_b container, containment round 6).
-    * CACHE OWNERSHIP: as elsewhere (CacheScope).
-    */
-  def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int = 12, tau: Double = 0.9): DataFrame =
-    containmentPairsFromSets(hashedSets(docs, idCol, textCol, n), tau)
-
-  /** `containmentPairs` over a pre-built (id, hs, sz) sets frame — the
-    * share-one-materialization entry point (`removeContained` reuses
-    * the sets for pair search AND size lookup; the jaccard twin is
+    * Input: a pre-built (id, hs, sz) sets frame from `hashedSets` — one
+    * materialization can be shared (`removeContained` reuses the sets
+    * for pair search AND size lookup; the jaccard twin is
     * `ngramJaccardPairsFromSets`). `sets` should be persisted by the
     * caller (hashedSets does).
+    *
+    * Output: (id_a contained, id_b container, containment round 6).
+    * CACHE OWNERSHIP: as elsewhere (CacheScope).
     */
   def containmentPairsFromSets(sets: DataFrame, tau: Double): DataFrame =
     containmentPairsImpl(sets, tau, col("a.id") =!= col("b.id"))
@@ -500,8 +496,9 @@ object DedupOps {
     * verbatim-ish inclusion inside corpus documents (B) at gram
     * granularity, where `contamination` counts raw shared grams and
     * `sharedSpansBetween` demands positional adjacency. Same machinery
-    * as `containmentPairs`; the global df order is computed over A ∪ B
-    * so both sides rank consistently (any ONE total order is lossless).
+    * as `containmentPairsFromSets`; the global df order is computed
+    * over A ∪ B so both sides rank consistently (any ONE total order is
+    * lossless).
     * Contract: disjoint id domains, inputs from `hashedSets`.
     */
   def containmentJoin(setsA: DataFrame, setsB: DataFrame,
@@ -538,8 +535,9 @@ object DedupOps {
     * each has a strictly larger container — and keeps C). Returns the
     * surviving docs frame (all original columns).
     *
-    * Scale shape: `containmentPairs` bounds the pair search (prefix +
-    * semi-join-reduce); the removal set is a narrow id anti-join.
+    * Scale shape: `containmentPairsFromSets` bounds the pair search
+    * (prefix + semi-join-reduce); the removal set is a narrow id
+    * anti-join.
     *
     * Measured at sf0.1 (q_containment_join's corpus: documents plus
     * re-keyed snippets), so the next optimization attempt does not
@@ -645,61 +643,6 @@ object DedupOps {
       .filter(col("shared") >= minShared)
   }
 
-  /** Corpus-vs-corpus decontamination with a BLOOM SCREEN — the shape
-    * `contamination` takes when the reference side is itself too big
-    * for a precise broadcast (another corpus, a web-scale blocklist:
-    * 10⁹ grams = 8 GB of sorted hashes vs ~1.2 GB of Bloom bits at
-    * k=7, 10 bits/gram ≈ 1% fpp). Two phases:
-    *
-    *  1. SCREEN (zero corpus shuffle): the reference gram set OR-folds
-    *     into one Bloom bitset row (distributed build — map-side
-    *     partial bitsets merge by OR, the elements never collect
-    *     anywhere), broadcast; each corpus doc counts its gram hits
-    *     against the bits in one codegen'd pass. No false negatives,
-    *     so docs below `minShared` hits are PROVABLY clean and exit
-    *     here — at real contamination rates that is 99%+ of the corpus.
-    *  2. VERIFY (exact, candidates only): surviving docs re-join their
-    *     grams against the true reference gram set — a shuffle join
-    *     bounded by candidate volume, NOT corpus volume — removing the
-    *     screen's false positives.
-    *
-    * Result ≡ `contamination(corpus, reference, ...)` exactly; the
-    * Bloom parameters trade only intermediate candidate volume. The
-    * filter is sized from a one-number count action (`bitsPerGram` ×
-    * distinct grams, rounded up to words); fpp ≈ (1−e^(−k/bits))^k ≈
-    * 0.8% at the defaults.
-    *
-    * Ceiling: each bitset serializes as ONE Int-sized ByteBuffer
-    * (`Bloom.MaxWords` ≈ 2.7e8 words ⇒ ~1.7e10 bits), which at the
-    * default 10 bits/gram bounds an UNSHARDED filter at ~1.7e9
-    * distinct grams — `BloomFilterAgg` throws at construction past
-    * that. Past the bound, pass `shards = S`: elements partition by
-    * pmod(hash, S) into S independently-bounded sub-filters
-    * (bloomFold), probed by the sharded native expression in the same
-    * zero-shuffle pass — capacity S × 1.7e9 grams at unchanged fpp
-    * (~10¹¹ at S=64). Alternatively lower `bitsPerGram` (more
-    * verify-join traffic, same exact result — fpp at 5 bits/gram, k=3
-    * is ~10%).
-    */
-  /** Reference gram set (persisted — it feeds the sizing count, the
-    * bitset build, and possibly an exact verify) plus its one-row Bloom
-    * bitset, shared by the batch and streaming screens so the layout
-    * and sizing can never drift between them.
-    */
-  private def refGramsAndBloom(reference: DataFrame, textCol: String,
-                               n: Int, bitsPerGram: Int, k: Int,
-                               shards: Int = 1): (DataFrame, DataFrame) = {
-    val refGrams = reference
-      .select(explode(ShingleExpressions.shingleHashes(col(textCol), n))
-        .as("sh"))
-      .distinct()
-      .transform(graft.CacheScope.pin)
-    // one scalar action sizes the filter; the gram set is persisted for
-    // its other consumers
-    val m = math.max(refGrams.count(), 1L)
-    (refGrams, bloomFold(refGrams, "sh", m, bitsPerGram, k, shards))
-  }
-
   /** OR-fold a column of long hashes into ONE broadcastable Bloom row.
     * `shards = 1` (default): a single bitset (col __bloom:
     * array<bigint>, probe with bloom_hit_count). `shards = S > 1`:
@@ -742,13 +685,57 @@ object DedupOps {
     }
   }
 
+  /** Corpus-vs-corpus decontamination with a BLOOM SCREEN — the shape
+    * `contamination` takes when the reference side is itself too big
+    * for a precise broadcast (another corpus, a web-scale blocklist:
+    * 10⁹ grams = 8 GB of sorted hashes vs ~1.2 GB of Bloom bits at
+    * k=7, 10 bits/gram ≈ 1% fpp). Two phases:
+    *
+    *  1. SCREEN (zero corpus shuffle): the reference gram set OR-folds
+    *     into one Bloom bitset row (distributed build — map-side
+    *     partial bitsets merge by OR, the elements never collect
+    *     anywhere), broadcast; each corpus doc counts its gram hits
+    *     against the bits in one codegen'd pass. No false negatives,
+    *     so docs below `minShared` hits are PROVABLY clean and exit
+    *     here — at real contamination rates that is 99%+ of the corpus.
+    *  2. VERIFY (exact, candidates only): surviving docs re-join their
+    *     grams against the true reference gram set — a shuffle join
+    *     bounded by candidate volume, NOT corpus volume — removing the
+    *     screen's false positives.
+    *
+    * Result ≡ `contamination(corpus, reference, ...)` exactly; the
+    * Bloom parameters trade only intermediate candidate volume. The
+    * filter is sized from a one-number count action (`bitsPerGram` ×
+    * distinct grams, rounded up to words); fpp ≈ (1−e^(−k/bits))^k ≈
+    * 0.8% at the defaults.
+    *
+    * Ceiling: each bitset serializes as ONE Int-sized ByteBuffer
+    * (`Bloom.MaxWords` ≈ 2.7e8 words ⇒ ~1.7e10 bits), which at the
+    * default 10 bits/gram bounds an UNSHARDED filter at ~1.7e9
+    * distinct grams — `BloomFilterAgg` throws at construction past
+    * that. Past the bound, pass `shards = S`: elements partition by
+    * pmod(hash, S) into S independently-bounded sub-filters
+    * (bloomFold), probed by the sharded native expression in the same
+    * zero-shuffle pass — capacity S × 1.7e9 grams at unchanged fpp
+    * (~10¹¹ at S=64). Alternatively lower `bitsPerGram` (more
+    * verify-join traffic, same exact result — fpp at 5 bits/gram, k=3
+    * is ~10%).
+    */
   def contaminationScreened(corpus: DataFrame, reference: DataFrame,
                             idCol: String, textCol: String, n: Int,
                             minShared: Long = 1L, bitsPerGram: Int = 10,
                             k: Int = 7, shards: Int = 1): DataFrame = {
     import graft.functions.BloomExpressions
-    val (refGrams, bloom) =
-      refGramsAndBloom(reference, textCol, n, bitsPerGram, k, shards)
+    // the reference gram set is persisted: it feeds the sizing count,
+    // the bitset build and the exact verify
+    val refGrams = reference
+      .select(explode(ShingleExpressions.shingleHashes(col(textCol), n))
+        .as("sh"))
+      .distinct()
+      .transform(graft.CacheScope.pin)
+    // one scalar action sizes the filter
+    val m = math.max(refGrams.count(), 1L)
+    val bloom = bloomFold(refGrams, "sh", m, bitsPerGram, k, shards)
     val gramHashes = ShingleExpressions.shingleHashes(col(textCol), n)
     val hits =
       if (shards == 1)
@@ -767,39 +754,6 @@ object DedupOps {
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
-  }
-
-  /** Streaming twin of the BLOOM screen — flag candidates ON INGEST.
-    * Stateless stream-static shape (the contaminationStream pattern):
-    * the reference's Bloom bitset broadcasts as ONE row of BITS
-    * (~bitsPerGram per gram vs 64 for the precise sorted-array fold —
-    * the only option when the reference is corpus-sized), and each
-    * arriving doc counts its gram hits in one codegen'd pass. No
-    * state, no watermark, no stream-side shuffle.
-    *
-    * Contract: SCREEN, not verdict. No false negatives (a clean
-    * verdict here is final); emitted candidates can include sketch
-    * false positives — route them to the batch exact verify
-    * (`contaminationScreened`'s second phase), since a stream has no
-    * stateless way to run the exact join. Works identically on a batch
-    * frame (spec pins the candidate set ⊇ the exact contamination
-    * flags).
-    */
-  def contaminationStreamBloom(docs: DataFrame, reference: DataFrame,
-                               idCol: String, textCol: String, n: Int,
-                               minShared: Long = 1L, bitsPerGram: Int = 10,
-                               k: Int = 7): DataFrame = {
-    import graft.functions.BloomExpressions
-    // static side: the sizing action and persisted gram set are shared
-    // with the batch screen's builder (one explode+distinct, not two)
-    val (_, bloom) = refGramsAndBloom(reference, textCol, n, bitsPerGram, k)
-    docs
-      .crossJoin(broadcast(bloom))
-      .select(col(idCol),
-              BloomExpressions.bloomHitCount(
-                ShingleExpressions.shingleHashes(col(textCol), n),
-                col("__bloom"), k).cast("long").as("hits"))
-      .filter(col("hits") >= minShared)
   }
 
   /** WITHIN-document duplicate-line removal — the intra-doc twin of
@@ -893,13 +847,6 @@ object DedupOps {
       .agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf)
   }
-
-  /** MinHash signature over STRING shingles: k hash slots from one base
-    * xxhash64 per shingle, slot i = min over the set of (h·A_i + B_i) —
-    * see graft.functions.MinHashSig (native, codegen'd, single pass).
-    */
-  def minhashSignature(shingleSet: Column, k: Int): Column =
-    SetExpressions.minhashSig(shingleSet, k)
 
   /** MinHash+LSH near-dup pairs: band the signature (b bands × r rows),
     * bucket-join on (band, hash(band slice)), then exact-Jaccard verify.

@@ -34,11 +34,6 @@ object KmvExpressions {
     Bridge.toColumn(KmvAgg(Bridge.toExpression(hashes), k)
       .toAggregateExpression())
 
-  /** Union previously-built sketches (k smallest of the set union). */
-  def kmvMerge(sketches: Column, k: Int): Column =
-    Bridge.toColumn(KmvMergeAgg(Bridge.toExpression(sketches), k)
-      .toAggregateExpression())
-
   /** Distinct-count estimate (exact below saturation). */
   def kmvCount(sketch: Column, k: Int): Column =
     Bridge.toColumn(KmvCount(Bridge.toExpression(sketch), k))
@@ -46,11 +41,6 @@ object KmvExpressions {
   /** |A ∩ B| estimate (exact when |A ∪ B| < k). */
   def kmvIntersect(a: Column, b: Column, k: Int): Column =
     Bridge.toColumn(KmvIntersect(
-      Bridge.toExpression(a), Bridge.toExpression(b), k))
-
-  /** Jaccard(A, B) estimate (exact when |A ∪ B| < k). */
-  def kmvJaccard(a: Column, b: Column, k: Int): Column =
-    Bridge.toColumn(KmvJaccard(
       Bridge.toExpression(a), Bridge.toExpression(b), k))
 }
 

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Set/sketch expressions for the dedup hot path.
@@ -15,18 +13,11 @@ import org.apache.spark.sql.types._
   * hundreds of thousands of candidate pairs with ~400-element shingle sets
   * that is the difference between a verify stage that keeps up with the
   * join and one that dominates the query.
-  *
-  * `MinHashSig` computes the whole k-slot signature in ONE pass: each
-  * element is xxhash64'd once, then the k slot values derive from affine
-  * mixes (h·A_i + B_i) of that base hash — the classic "one hash, k
-  * permutations" construction — instead of k independent string hashes
-  * (64× less byte hashing than the higher-order-function formulation).
   */
 object SetExpressions {
-  def minhashSig(shingles: Column, k: Int): Column =
-    Bridge.toColumn(MinHashSig(Bridge.toExpression(shingles), k))
-
-  /** SplitMix64 finalizer — the mix for slot constants. */
+  /** SplitMix64 finalizer — the mix for MinHash slot constants
+    * (`MinHashSigFromHashes`).
+    */
   def splitmix64(z0: Long): Long = {
     var z = z0 + 0x9e3779b97f4a7c15L
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
@@ -100,76 +91,4 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): SortedIntersectCount = copy(l, r)
-}
-
-/** k-slot MinHash signature of a string array, one base hash per element. */
-case class MinHashSig(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-  override def checkInputDataTypes() =
-    TextExpressions.requireType(child, prettyName, "array<string>") {
-      case ArrayType(StringType, _) => true; case _ => false
-    }
-
-  // Affine mix constants per slot, fixed by the seed. A_i forced odd so the
-  // multiply is a bijection on Z/2^64.
-  private lazy val as: Array[Long] =
-    Array.tabulate(k)(i => SetExpressions.splitmix64(2L * i + 1) | 1L)
-  private lazy val bs: Array[Long] =
-    Array.tabulate(k)(i => SetExpressions.splitmix64(2L * i + 2))
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val mins = Array.fill(k)(Long.MaxValue)
-    var e = 0
-    while (e < arr.numElements()) {
-      if (!arr.isNullAt(e)) {
-        val s = arr.getUTF8String(e)
-        val h = XXH64.hashUnsafeBytes(
-          s.getBaseObject, s.getBaseOffset, s.numBytes, TextExpressions.Seed)
-        var i = 0
-        while (i < k) {
-          val v = h * as(i) + bs(i)
-          if (v < mins(i)) mins(i) = v
-          i += 1
-        }
-      }
-      e += 1
-    }
-    new GenericArrayData(mins)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val aConst = ctx.addReferenceObj("minhashA", as, "long[]")
-      val bConst = ctx.addReferenceObj("minhashB", bs, "long[]")
-      val mins = ctx.freshName("mins")
-      val e = ctx.freshName("e"); val i = ctx.freshName("i")
-      val h = ctx.freshName("h"); val v = ctx.freshName("v")
-      val s = ctx.freshName("s")
-      s"""
-         |long[] $mins = new long[$k];
-         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |for (int $e = 0; $e < $arr.numElements(); $e++) {
-         |  if (!$arr.isNullAt($e)) {
-         |    UTF8String $s = $arr.getUTF8String($e);
-         |    long $h = org.apache.spark.sql.catalyst.expressions.XXH64
-         |      .hashUnsafeBytes($s.getBaseObject(), $s.getBaseOffset(),
-         |                       $s.numBytes(), ${TextExpressions.Seed}L);
-         |    for (int $i = 0; $i < $k; $i++) {
-         |      long $v = $h * $aConst[$i] + $bConst[$i];
-         |      if ($v < $mins[$i]) $mins[$i] = $v;
-         |    }
-         |  }
-         |}
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression): MinHashSig =
-    copy(child = c)
 }

@@ -246,7 +246,8 @@ case class SortedLongIntersectCount(left: Expression, right: Expression)
 }
 
 /** MinHash signature from pre-hashed shingles: slot i = min of
-  * (h·A_i + B_i) over the hash set — no byte hashing at all.
+  * (h·A_i + B_i) over the hash set — the "one hash, k permutations"
+  * construction, with no byte hashing at all.
   */
 case class MinHashSigFromHashes(child: Expression, k: Int)
     extends UnaryExpression {
@@ -275,8 +276,8 @@ case class MinHashSigFromHashes(child: Expression, k: Int)
     var e = 0
     val ne = arr.numElements()
     while (e < ne) {
-      // a null slot is not hash 0 — skipping matches the string twin
-      // (MinHashSig), which ignores null elements
+      // a null slot is not hash 0: it is skipped, as SQL set functions
+      // skip null elements
       if (!arr.isNullAt(e)) {
         val h = arr.getLong(e)
         var i = 0

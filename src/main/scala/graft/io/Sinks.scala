@@ -116,9 +116,6 @@ object Sinks {
       .sortWithinPartitions(col(partCol), col(sortCol))
       .write.mode("overwrite").partitionBy(partCol).parquet(path)
 
-  /** S13 — console sink (`df.show()`, spark-apps/test_spark.py:13). */
-  def console(df: DataFrame, rows: Int = 20): Unit = df.show(rows, false)
-
   /** The reference's "Incremental Loading Mechanism" (README.md:220-222)
     * done right at scale: idempotent month loads via DYNAMIC partition
     * overwrite — re-running a month replaces exactly that month's
@@ -447,8 +444,9 @@ object Sinks {
     * `smallBytes` (the small-files problem `compact`'s scaladoc
     * describes). Driver-side listing is O(files) metadata — the same
     * planning cost Delta's OPTIMIZE pays — and the report is
-    * files-sized, not data-sized; hidden/marker files (`_SUCCESS`,
-    * `_COMMITTED`, checksums) are excluded. Nested multi-level
+    * files-sized, not data-sized. It counts the files a read lists
+    * (`Tables.leafFiles`), less parquet summaries: hidden/marker files
+    * (`_SUCCESS`, `_COMMITTED`, checksums) are excluded. Nested multi-level
     * partitioning reports at the FIRST level (the compaction unit
     * `upsertPartition` replaces).
     */
@@ -458,35 +456,13 @@ object Sinks {
     val fs = fsFor(spark, path)
     val root = new org.apache.hadoop.fs.Path(path)
     require(fs.exists(root), s"layoutStats: no table at $path")
-    def dataFiles(p: org.apache.hadoop.fs.Path): Seq[Long] = {
-      val it = fs.listFiles(p, true)
-      val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-      // hidden-ness applies to EVERY path component under the census
-      // root, not just the leaf: a streaming sink's _spark_metadata/
-      // holds batch files named "0", "9.compact" whose leaf names look
-      // like data — counting them fakes the compaction signal.
-      // The walk stops at the QUALIFIED census root: listFiles returns
-      // fully-qualified FileStatus paths, so comparing ancestors
-      // against a caller's RELATIVE `p` never terminated and the walk
-      // ascended past the table root — a dot/underscore-named ancestor
-      // directory (a table under /x/.cache/) then marked every file
-      // hidden and the census reported an empty table
-      val stop = fs.makeQualified(p).toUri.getPath
-      def hidden(f: org.apache.hadoop.fs.Path): Boolean = {
-        var cur = f
-        while (cur != null && cur.toUri.getPath != stop) {
-          val n = cur.getName
-          if (n.startsWith("_") || n.startsWith(".")) return true
-          cur = cur.getParent
-        }
-        false
-      }
-      while (it.hasNext) {
-        val st = it.next()
-        if (!hidden(st.getPath)) out += st.getLen
-      }
-      out.toSeq
-    }
+    // a streaming sink's _spark_metadata/ holds batch files named "0",
+    // "9.compact" whose leaf names look like data: counting them would
+    // fake the compaction signal
+    def dataFiles(p: org.apache.hadoop.fs.Path): Seq[Long] =
+      graft.Tables.leafFiles(fs, p)
+        .filterNot(st => graft.Tables.summary(st.getPath.getName))
+        .map(_.getLen)
     val parts = fs.listStatus(root).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.contains("="))
     val groups =

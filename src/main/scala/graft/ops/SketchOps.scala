@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.DdExpressions.{ddAgg, ddMerge, ddQuantile}
 import graft.functions.HllExpressions.{hllAgg, hllCount, hllMerge}
-import graft.functions.KmvExpressions.{kmvAgg, kmvCount, kmvIntersect, kmvJaccard}
+import graft.functions.KmvExpressions.{kmvAgg, kmvCount, kmvIntersect}
 
 /** Persistable-sketch operators: turn "distinct over an ever-growing
   * history" from a rescan problem into a merge problem.
@@ -96,12 +96,6 @@ object SketchOps {
                 col("exact_to_date") * rtol).as("cum_est_ok"))
   }
 
-  /** Merge a set of sketch rows to one union estimate (e.g. a rolling
-    * window or an ad-hoc slice union): one scalar from kilobytes.
-    */
-  def unionEstimate(sketches: DataFrame, p: Int = 12): DataFrame =
-    sketches.agg(hllCount(hllMerge(col("sketch"), p), p).as("distinct_est"))
-
   /** Day-2 maintenance: fold a new batch of events into the PERSISTED
     * daily sketch table at `path`. Days already present MERGE by
     * register max — so late-arriving events extend their day and
@@ -179,23 +173,6 @@ object SketchOps {
         round(col("returned").cast("double") / col("dau"), 6))
   }
 
-  /** Pairwise overlap matrix between arbitrary sketched cohorts:
-    * |cohorts|² sketch pairs, each answered in O(k) — audience-overlap
-    * analytics from kilobytes.
-    */
-  def overlapMatrix(sketches: DataFrame, dimCol: String,
-                    k: Int = 512): DataFrame = {
-    val a = sketches.select(col(dimCol).as("cohort_a"),
-                            col("sketch").as("__sa"))
-    val b = sketches.select(col(dimCol).as("cohort_b"),
-                            col("sketch").as("__sb"))
-    a.join(b, col("cohort_a") < col("cohort_b"))
-      .select(col("cohort_a"), col("cohort_b"),
-              kmvIntersect(col("__sa"), col("__sb"), k).as("overlap"),
-              round(kmvJaccard(col("__sa"), col("__sb"), k), 6)
-                .as("jaccard"))
-  }
-
   /** Per-(day, key) DDSketch table of a value column — the QUANTILE
     * member of the persistable family (HLL = distinct, KMV = set
     * algebra, CMS = frequency, Bloom = membership): one map-side-
@@ -225,10 +202,7 @@ object SketchOps {
     *
     * The ledger name must not start with `_` or `.`: Spark treats such
     * paths as hidden, so a read of one warns "All paths were ignored"
-    * and succeeds only by Spark's fallback. A table written under the
-    * old name (`<path>/_applied`) still reads its ledger from there,
-    * and its next swap writes only `applied` — the migration rides the
-    * same atomic swap as the data.
+    * and succeeds only by Spark's fallback.
     */
   def appendDailyValueSketches(spark: org.apache.spark.sql.SparkSession,
                                path: String, batch: DataFrame,
@@ -243,12 +217,8 @@ object SketchOps {
     val exists = fs.exists(new Path(path))
     val applied: Set[String] =
       if (!exists) Set.empty
-      else {
-        val ledger = Seq(s"$path/applied", s"$path/_applied")
-          .find(d => fs.exists(new Path(d))).getOrElse(s"$path/applied")
-        Tables.read(spark, ledger)
-          .select(col("batch_id")).collect().map(_.getString(0)).toSet
-      }
+      else Tables.read(spark, s"$path/applied")
+        .select(col("batch_id")).collect().map(_.getString(0)).toSet
     if (applied.contains(batchId)) return // re-delivery: exact no-op
     val fresh = dailyValueSketches(batch, keyCol, tsCol, valueCol, alpha)
     val merged =

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Bounded top-k as a mergeable aggregate.
@@ -13,7 +13,8 @@ import org.apache.spark.sql.expressions.Aggregator
   * (partition, group): the same partial/final shape as a sum.
   *
   * Usage (typed):
-  *   ds.groupByKey(_.group).agg(TopK.topK[Row](k)(ord).toColumn)
+  *   ds.groupByKey(_._1).mapValues(r => (r._2, r._3, r._4))
+  *     .agg(TopK.topKTriplesOpt(k).toColumn)
   */
 class TopKAggregator[A](k: Int, ord: Ordering[A],
                         enc: Encoder[A], seqEnc: Encoder[Seq[A]])
@@ -80,19 +81,6 @@ class TopKCountAggregator[A](k: Int, ord: Ordering[A],
 }
 
 object TopK {
-  /** Top-k of (sortKey, payload) pairs, descending by key then ascending
-    * payload for deterministic ties.
-    */
-  def topKPairs(k: Int): TopKAggregator[(Double, Long)] = {
-    implicit val tupleEnc: Encoder[(Double, Long)] =
-      Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong)
-    val ord = Ordering.by[(Double, Long), (Double, Long)] {
-      case (s, id) => (s, -id)
-    }
-    new TopKAggregator[(Double, Long)](k, ord, tupleEnc,
-      org.apache.spark.sql.Encoders.kryo[Seq[(Double, Long)]])
-  }
-
   /** Smallest-k of (score, id) pairs — score ASCENDING, id ascending on
     * ties — plus the group's total row count (distance ranks: pqEval's
     * ADC top-k + candidate-volume accounting in one pass).
@@ -118,25 +106,12 @@ object TopK {
       org.apache.spark.sql.Encoders.kryo[(Long, Seq[(Double, Long)])])
   }
 
-  /** Top-k of (score, key1, key2) rows: score descending, then key1/key2
-    * ascending — the exact tie discipline of the window top-k
-    * (q_topk_per_group), so both strategies share one oracle.
-    */
-  def topKTriples(k: Int): TopKAggregator[(Double, Long, Int)] = {
-    implicit val tripleEnc: Encoder[(Double, Long, Int)] =
-      Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong,
-                     Encoders.scalaInt)
-    val ord = Ordering.by[(Double, Long, Int), (Double, Long, Int)] {
-      case (s, k1, k2) => (s, -k1, -k2)
-    }
-    new TopKAggregator[(Double, Long, Int)](k, ord, tripleEnc,
-      org.apache.spark.sql.Encoders.kryo[Seq[(Double, Long, Int)]])
-  }
-
-  /** `topKTriples` over a NULLABLE score: None ranks below every real
-    * score (desc-nulls-last — exactly where `ORDER BY s DESC` puts null
-    * rows in both Spark and the SQL twin), ties by key1/key2 ascending.
-    * The primitive-Double form NPEs at encode time on a null score
+  /** Top-k of (score, key1, key2) rows over a NULLABLE score: score
+    * descending, None below every real score (desc-nulls-last — exactly
+    * where `ORDER BY s DESC` puts null rows in both Spark and the SQL
+    * twin), then key1/key2 ascending — the exact tie discipline of the
+    * window top-k (q_topk_per_group), so both strategies share one
+    * oracle. A primitive-Double score NPEs at encode time on a null
     * (r9 perturbation-fuzz finding: the window strategy serves
     * null-score rows at the bottom of a short group, the typed
     * Aggregator strategy crashed on the same input — "two physical

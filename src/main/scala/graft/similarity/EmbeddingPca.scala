@@ -45,7 +45,7 @@ object EmbeddingPca {
   /** Fit mean/covariance distributed (one aggregate, see object doc),
     * eigendecompose on the driver, keep the top `k` components.
     * Vectors whose length differs from the first-seen dimension (and
-    * null/empty ones) are excluded — the pqEncode encodability contract.
+    * null/empty ones) are excluded — the PQ encodability contract.
     * `whiten = true` additionally scales each projected coordinate by
     * 1/√λ so the projected data has unit variance per component
     * (eigenvalues below `1e-12` are left unscaled rather than exploding

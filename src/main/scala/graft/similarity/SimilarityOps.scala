@@ -868,28 +868,11 @@ object SimilarityOps {
     */
   val PqDriverTrainGate: Long = 4L << 20
 
-  /** Driver-side Lloyd for `pqTrain`'s at-or-below-gate regime — the
-    * SAME algorithm bit-for-bit (seed = first `codes` subvectors by id
-    * ascending; assignment = strict-< argmin of ‖c‖² − 2⟨sv,c⟩ in code
-    * order, `nearestCode`'s exact contract; empty codes keep their
-    * previous centroid), just without a cluster round-trip per Lloyd
-    * iteration: ONE sorted collect replaces ~12 scheduled jobs of
-    * window-seed + broadcast-assign + vector_sum per round (measured:
-    * q_pq_topk 3.8 → ~1.5 s at sf0.1, where the corpus is 2k rows and
-    * the wall is pure scheduling). Returns a LOCAL codebook relation —
-    * zero jobs to re-read, broadcast-ready, nothing to pin.
-    */
-  private def pqTrainDriver(emb: DataFrame, idCol: String, vecCol: String,
-                            nsub: Int, codes: Int, iters: Int,
-                            d: Int, dsub: Int): DataFrame =
-    pqLloydDriver(emb.sparkSession, collectTrainVecs(emb, idCol, vecCol, d),
-                  nsub, codes, iters, dsub)
-
   /** The driver regime's one cluster round-trip: id-sorted training
     * vectors as local arrays (the collect is gated by PqDriverTrainGate
-    * elements = 32 MB of doubles). Split out of `pqTrainDriver` so a
-    * grid of codebook configs over the SAME corpus (`pqTrainGrid`)
-    * collects once instead of once per config.
+    * elements = 32 MB of doubles). A grid of codebook configs over the
+    * SAME corpus (`pqTrainGrid`) collects once instead of once per
+    * config.
     */
   private def collectTrainVecs(emb: DataFrame, idCol: String,
                                vecCol: String, d: Int): Array[Array[Double]] =
@@ -902,9 +885,17 @@ object SimilarityOps {
       .collect()
       .map(_.getSeq[Double](1).toArray)
 
-  /** Driver-side Lloyd over pre-collected vectors — the algorithm body
-    * of `pqTrainDriver`, byte-identical contracts (first-`codes`-by-id
-    * seeds, argmin assignment, empty codes keep their centroid).
+  /** Driver-side Lloyd for `pqTrain`'s at-or-below-gate regime, over
+    * pre-collected vectors — the SAME algorithm bit-for-bit as the
+    * distributed regime (seed = first `codes` subvectors by id
+    * ascending; assignment = strict-< argmin of ‖c‖² − 2⟨sv,c⟩ in code
+    * order, `nearestCode`'s exact contract; empty codes keep their
+    * previous centroid), just without a cluster round-trip per Lloyd
+    * iteration: ONE sorted collect replaces ~12 scheduled jobs of
+    * window-seed + broadcast-assign + vector_sum per round (measured:
+    * q_pq_topk 3.8 → ~1.5 s at sf0.1, where the corpus is 2k rows and
+    * the wall is pure scheduling). Returns a LOCAL codebook relation —
+    * zero jobs to re-read, broadcast-ready, nothing to pin.
     */
   private def pqLloydDriver(spark: org.apache.spark.sql.SparkSession,
                             vecs: Array[Array[Double]],
@@ -984,7 +975,7 @@ object SimilarityOps {
     *
     * TWO REGIMES (the GraphOps adaptive/pinned precedent): training
     * sets at or below `PqDriverTrainGate` elements collect once and
-    * Lloyd runs on the driver (`pqTrainDriver` — same algorithm, same
+    * Lloyd runs on the driver (`pqLloydDriver` — same algorithm, same
     * seed/argmin/empty-code contracts, zero per-round jobs); larger
     * sets run the distributed path below. Codebooks train on bounded
     * samples at any corpus scale (the faiss discipline), so the driver
@@ -1096,21 +1087,6 @@ object SimilarityOps {
     cb
   }
 
-  /** Encode every vector as its nsub PQ codes — the 4·d-bytes → nsub-bytes
-    * compression pass, one scan, zero exchanges (per-row argmin against
-    * the folded broadcast codebook). Rows whose vector length doesn't
-    * match the codebook's nsub·dsub are excluded (not encodable).
-    */
-  def pqEncode(emb: DataFrame, idCol: String, vecCol: String,
-               cb: DataFrame): DataFrame = {
-    val (nsub, dsub) = pqShape(cb)
-    emb.filter(size(col(vecCol)) === nsub * dsub)
-      .crossJoin(broadcast(foldPqCodebook(cb)))
-      .select(col(idCol),
-              pqCodesExpr(transform(col(vecCol), x => x.cast("double")),
-                          col("__pqcb"), nsub, dsub).as("pq_codes"))
-  }
-
   private def pqShape(cb: DataFrame): (Int, Int) = {
     val r = cb.agg(countDistinct(col("sub_id")),
                    max(size(col("cvec")))).head()
@@ -1177,8 +1153,9 @@ object SimilarityOps {
       emb.filter(col(idCol) === probeId)
         .select(transform(col(vecCol), x => x.cast("double")).as("__pv")))
     val foldedTable = adcFoldedTable(cb, probe, dsub)
-    // inline encode against ONE folded broadcast (pqEncode would re-fold
-    // and re-probe the codebook shape — two extra driver jobs).
+    // inline encode against ONE folded broadcast (a separate encode pass
+    // would re-fold and re-probe the codebook shape — two extra driver
+    // jobs).
     // spreadSmallScan: the corpus-side encode+ADC is the query's compute;
     // don't let it ride a single-row-group scan on one core (gated no-op
     // on any real multi-split corpus)
@@ -1464,7 +1441,7 @@ object SimilarityOps {
     * per vector, not 4·d floats.
     *
     * Returns (id, list_id, pq_codes); vectors whose length mismatches
-    * the PQ codebook are excluded (not encodable — the pqEncode
+    * the PQ codebook are excluded (not encodable — the PQ encode
     * contract).
     */
   def ivfPqBuild(emb: DataFrame, idCol: String, vecCol: String,

@@ -1,24 +1,17 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Sessionization — the canonical custom-state operator (extension scope;
-  * the reference has no streaming, SURVEY §2.9).
+/** Gap sessionization (extension scope; the reference has no streaming,
+  * SURVEY §2.9).
   *
-  * Batch form: gap-based sessions via lag/cumsum windows — declarative,
+  * Gap-based sessions via lag/cumsum windows — declarative,
   * oracle-checkable. All timestamps are truncated to milliseconds first so
   * the ns-precision parquet source and Spark's µs runtime agree bit-for-bit
-  * with the SQL oracle (floor-to-ms is precision-independent).
-  *
-  * Streaming form: `mapGroupsWithState` keeps one running session per key
-  * with a processing-time timeout — state is per-key O(1), the shape that
-  * holds up on an unbounded 100 TB/day stream (no window buffering of raw
-  * events).
+  * with the SQL oracle (floor-to-ms is precision-independent). The
+  * streaming form is `StreamingOps.sessionWindowRollup`.
   */
 object Sessionize {
 
@@ -31,9 +24,7 @@ object Sessionize {
     * windows sort nulls FIRST while SQL engines default NULLS LAST, so
     * an unguarded null either opened a phantom session or silently
     * merged into the key's last one depending on the engine (r9
-    * perturbation-fuzz finding). The streaming twin's SessionEvent
-    * carries non-nullable (key, ts) — this guard is also what keeps
-    * batch ≡ stream on dirty input.
+    * perturbation-fuzz finding).
     */
   def batch(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("tsm"))
@@ -54,89 +45,5 @@ object Sessionize {
            count(lit(1)).as("n_events"))
       .select(col("user_id"), col("session_seq"), col("session_start_ms"),
               col("session_end_ms"), col("n_events"))
-  }
-
-  case class SessionEvent(user_id: Long, ts: Timestamp)
-  case class SessionState(start: Long, end: Long, n: Long)
-  case class SessionUpdate(user_id: Long, session_start_ms: Long,
-                           session_end_ms: Long, n_events: Long,
-                           closed: Boolean)
-
-  /** Streaming sessionization over a keyed stream. Each key holds one open
-    * session; an event past the gap closes it (emitted with closed=true)
-    * and opens a new one — EVERY session closed within a micro-batch is
-    * emitted (flatMap, not map: a key can cross the gap several times in
-    * one batch), plus one closed=false update for the still-open session.
-    * With `idleTimeout=true`, idle keys are closed by a processing-time
-    * timeout — note that an armed timeout keeps the micro-batch loop
-    * ticking, so `processAllAvailable()`-style synchronous demos should
-    * leave it off.
-    */
-  def streaming(spark: SparkSession, events: Dataset[SessionEvent],
-                gapMinutes: Int = 30,
-                idleTimeout: Boolean = false): Dataset[SessionUpdate] = {
-    import spark.implicits._
-    val gapMs = gapMinutes * 60L * 1000L
-
-    def update(userId: Long, rows: Iterator[SessionEvent],
-               state: GroupState[SessionState]): Iterator[SessionUpdate] = {
-      if (state.hasTimedOut) {
-        val s = state.get
-        state.remove()
-        return Iterator(SessionUpdate(userId, s.start, s.end, s.n,
-                                      closed = true))
-      }
-      // null timestamps are skipped, not dereferenced — one bad row must
-      // not kill the whole streaming query (the batch form lets a null
-      // tsm flow through its window harmlessly)
-      val times = rows.collect {
-        case e if e.ts != null => e.ts.getTime
-      }.toSeq.sorted
-      if (times.isEmpty) {
-        // GroupState resets the timeout on EVERY invocation — an
-        // all-null batch for a key with an open session must re-arm it
-        // or the session is never closed and its state leaks
-        if (idleTimeout && state.exists) state.setTimeoutDuration(gapMs)
-        return Iterator.empty
-      }
-      var s = state.getOption.getOrElse(
-        SessionState(times.head, times.head, 0L))
-      val closed = Seq.newBuilder[SessionState]
-      times.foreach { t =>
-        s = if (t - s.end > gapMs) {
-          closed += s; SessionState(t, t, 1L)
-        } else
-          // a LATE in-gap event can precede the stored start (cross-batch
-          // arrival): widen both bounds, matching the batch min/max —
-          // without the min the emitted start diverges from the oracle
-          s.copy(start = math.min(s.start, t),
-                 end = math.max(s.end, t), n = s.n + 1)
-      }
-      state.update(s)
-      if (idleTimeout) state.setTimeoutDuration(gapMs)
-      closed.result().iterator.map(c =>
-        SessionUpdate(userId, c.start, c.end, c.n, closed = true)) ++
-        Iterator(SessionUpdate(userId, s.start, s.end, s.n, closed = false))
-    }
-
-    val timeoutConf =
-      if (idleTimeout) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, timeoutConf)(update)
-  }
-
-  /** Convenience: run the streaming form against a stream and collect via
-    * the memory sink (used by tests and demos).
-    */
-  def runStreamingDemo(spark: SparkSession, stream: DataFrame,
-                       gapMinutes: Int, queryName: String): Unit = {
-    import spark.implicits._
-    val typed = stream.select(col("user_id"), col("ts"))
-      .as[SessionEvent]
-    val q = streaming(spark, typed, gapMinutes)
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable() finally q.stop()
   }
 }

@@ -115,10 +115,9 @@ object StreamingOps {
   }
 
   /** Gap sessionization via Spark's NATIVE `session_window` aggregate —
-    * the engine-managed twin of `Sessionize` (which implements the same
-    * semantics by hand, as lag/cumsum windows in batch and
-    * flatMapGroupsWithState on streams). One definition serves both
-    * modes: on a stream the watermark bounds the session state and
+    * the engine-managed twin of `Sessionize.batch` (which implements
+    * the same semantics by hand, as lag/cumsum windows). One definition
+    * serves both modes: on a stream the watermark bounds the session state and
     * windows emit on close; on a batch frame it is a plain two-phase
     * aggregate (partial session-merge map-side, final merge after one
     * shuffle on the user key — no per-user sort, which is what the

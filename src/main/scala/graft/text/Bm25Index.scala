@@ -274,22 +274,6 @@ object Bm25Index {
     }
   }
 
-  /** Streaming maintenance: every micro-batch appends as one epoch.
-    * Exactly-once under foreachBatch's at-least-once replay window for
-    * free: a replayed batch anti-joins to nothing and writes no epoch,
-    * and a crash mid-epoch leaves an uncommitted orphan no probe sees.
-    */
-  def appendStream(stream: DataFrame, root: String,
-                   checkpoint: String): org.apache.spark.sql.streaming
-      .StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        append(batch, root)
-      }
-      .start()
-
   /** Top-k BM25 over the standing index WITHOUT touching corpus text:
     * reads the probed terms' bucket directories of committed epochs
     * (two partition filters — epoch and tb — prune at planning time),

@@ -202,26 +202,6 @@ object QualityClassifier {
     w
   }
 
-  /** Deterministic fingerprint of a trained model: a 64-bit fold of
-    * the weights on a 1e-6 grid (the same grid `score` rounds to).
-    * Full-batch GD is RNG-free, so the same data trains the same model
-    * and the same checksum — the board query carries it as a constant
-    * column, and QualityClassifierSpec pins it against an independent
-    * scalar reimplementation of the GD loop, so the fingerprint ties
-    * the served scores to VERIFIED coefficients rather than "some
-    * iterative internals". (The grid absorbs aggregation-order ulps;
-    * bit-level determinism within a session is separately spec-pinned.)
-    */
-  def checksum(model: Array[Double]): Long = {
-    var h = 0x9E3779B97F4A7C15L ^ model.length.toLong
-    model.foreach { v =>
-      val q = math.rint(v * 1e6).toLong
-      h = java.lang.Long.rotateLeft(
-        h ^ (q * 0xC2B2AE3D27D4EB4FL), 31) * 0x9E3779B97F4A7C15L
-    }
-    h
-  }
-
   /** Score every document: p = σ(w·x + bias), rounded to 1e-6. The
     * model folds in as one array literal (no join); documents with no
     * tokens have no features and drop out — the lmScore contract.

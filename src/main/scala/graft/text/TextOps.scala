@@ -414,7 +414,6 @@ object TextOps {
   def tfidfTopTerms(df: DataFrame, idCol: String = "doc_id",
                     textCol: String = "text", k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel
     val tok = df
       .repartition(df.sparkSession.sparkContext.defaultParallelism,
                    col(idCol)) // single-file inputs: spread the explode
@@ -1126,7 +1125,6 @@ object TextOps {
                         bitsPerTerm: Int = 10, k: Int = 7,
                         shards: Int = 1): DataFrame = {
     import graft.functions.BloomExpressions
-    import org.apache.spark.storage.StorageLevel
     val termCol = blocklist.columns.head
     val terms = blocklist
       .select(lower(trim(col(termCol))).as("__term")).distinct()

@@ -11,7 +11,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{Bench, Session, SparkEntry, Tables, Verify}
+import graft.{Bench, Session, Tables, Verify}
 import graft.board.{Analytics, Ann, Dedup, Parity, Text}
 import graft.dedup.DedupOps
 import graft.similarity.SimilarityOps
@@ -89,18 +89,16 @@ object Fuzz {
       case (v, _) => v.toString
     }.mkString("(", ", ", ")")).mkString(", ")
 
-    /** The rows as a Spark frame; timestamp text is cast in the session
-      * time zone, so the union widens a fixture NTZ column (lineitem,
-      * orders) to TimestampType exactly as the recorded sweeps did.
+    /** The rows as a Spark frame of exactly `schema`: timestamp text is
+      * cast to its column's own type, so the union with the fixture
+      * table keeps every column's type.
       */
     def frame(s: SparkSession): DataFrame = {
       def isTs(t: DataType) = t == TimestampType || t == TimestampNTZType
       val asText = StructType(schema.map(f =>
         if (isTs(f.dataType)) f.copy(dataType = StringType) else f))
-      s.createDataFrame(rows.map(Row.fromSeq).asJava, asText).select(
-        schema.map(f =>
-          if (isTs(f.dataType)) col(f.name).cast(TimestampType)
-          else col(f.name)): _*)
+      s.createDataFrame(rows.map(Row.fromSeq).asJava, asText)
+        .select(schema.map(f => col(f.name).cast(f.dataType)): _*)
     }
   }
 

@@ -90,8 +90,6 @@ object TpchGen {
     s"CAST(round(CAST(CAST(($e) AS VARCHAR) AS DECIMAL(38,19)), " +
       s"$scale) AS DOUBLE)"
 
-  private def rev(li: DataFrame): Column =
-    li("l_extendedprice") * (lit(1.0) - li("l_discount"))
   private val revC: Column =
     cents(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
   private val revSql = "l_extendedprice * (1.0 - l_discount)"

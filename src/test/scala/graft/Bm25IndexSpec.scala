@@ -128,29 +128,6 @@ class Bm25IndexSpec extends SparkSpec {
                docs.filter($"doc_id" =!= 5), terms, k = 5)))
   }
 
-  test("appendStream: micro-batch epochs serve like the batch build") {
-    val root = s"${Sinks.scratchRoot}/spec_bm25idx_stream"
-    Sinks.dropTable(spark, root)
-    val idx = s"$root/idx"; val inDir = s"$root/in"
-    val ckpt = s"$root/ckpt"
-    Bm25Index.build(docs.filter($"doc_id" <= 2), idx, buckets = 4)
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(docs.schema).parquet(inDir)
-      val q = Bm25Index.appendStream(stream, idx, ckpt)
-      try q.processAllAvailable() finally q.stop()
-    }
-    docs.filter($"doc_id" > 2 && $"doc_id" <= 5)
-      .coalesce(1).write.mode("append").parquet(inDir); runOnce()
-    docs.filter($"doc_id" > 5)
-      .coalesce(1).write.mode("append").parquet(inDir); runOnce()
-    assert(asPairs(Bm25Index.probe(spark, idx, terms, k = 5))
-             === asPairs(TextOps.bm25TopK(docs, terms, k = 5)))
-    // replay window: re-appending an already-drained batch is a no-op
-    val n = spark.read.parquet(s"$idx/postings").count()
-    Bm25Index.append(docs.filter($"doc_id" > 5), idx)
-    assert(spark.read.parquet(s"$idx/postings").count() === n)
-  }
-
   test("batchProbe: per-query results ≡ one probe per query, " +
        "tombstones respected") {
     val root = s"${Sinks.scratchRoot}/spec_bm25idx_batch"

@@ -77,45 +77,6 @@ class CurationOpsSpec extends SparkSpec {
     assert(got(1L) >= 1L)
   }
 
-  test("contaminationStreamBloom: candidates superset the exact flags; " +
-       "a clean verdict is final on a real stream") {
-    val docs = Tables.load(spark, sfDir, "documents")
-    val corpus = docs.filter($"source" =!= "src0")
-    val bench = docs.filter($"source" === "src0")
-    val exact = DedupOps.contamination(corpus, bench, "doc_id", "text",
-                                       n = 30)
-      .select($"doc_id").as[Long].collect().toSet
-    val screen = DedupOps
-      .contaminationStreamBloom(corpus, bench, "doc_id", "text", n = 30)
-      .select($"doc_id").as[Long].collect().toSet
-    assert(exact.subsetOf(screen)) // no false negatives, ever
-    assert(exact.nonEmpty)
-
-    // stream shape: quoting doc flagged, clean doc passes silently
-    val dir = s"${Sinks.scratchRoot}/contam_bloom_stream"
-    val sdocs = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog tonight"),
-      (2L, "completely unrelated content with no overlap at all here")
-    ).toDF("doc_id", "text")
-    sdocs.write.mode("overwrite").parquet(dir)
-    val sbench = Seq(
-      (9L, "xx the quick brown fox jumps over the lazy dog xx"))
-      .toDF("doc_id", "text")
-    val stream = spark.readStream.schema(sdocs.schema).parquet(dir)
-    val q = DedupOps
-      .contaminationStreamBloom(stream, sbench, "doc_id", "text", n = 20)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("contam_bloom_test").start()
-    try q.processAllAvailable() finally q.stop()
-    val got = spark.table("contam_bloom_test")
-      .as[(Long, Long)].collect().toMap
-    assert(got.contains(1L) && got(1L) >= 1L)
-    // doc 2 shares no 20-gram; at 10 bits/gram its ~37 grams each have
-    // <1% fpp — a false ALL-K-BITS hit is possible in principle but the
-    // planted-clean assertion is deterministic for this fixed data/seed
-    assert(!got.contains(2L))
-  }
-
   test("quantizeInt8: codes in [-127,127], reconstruction bounded, " +
        "degenerate vectors null") {
     val emb = Seq(

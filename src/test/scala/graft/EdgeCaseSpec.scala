@@ -22,6 +22,10 @@ class EdgeCaseSpec extends SparkSpec {
 
   private val emptyDocs = docs()
 
+  private def containment(d: org.apache.spark.sql.DataFrame, tau: Double) =
+    DedupOps.containmentPairsFromSets(
+      DedupOps.hashedSets(d, "doc_id", "text", 12), tau)
+
   test("corpus curate: empty input → empty output, correct schema") {
     val out = CorpusPipeline.curate(emptyDocs)
     assert(out.count() === 0)
@@ -71,14 +75,11 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("containment joins and removeContained: empty / single / " +
        "too-short-to-shingle inputs flow through") {
-    assert(DedupOps.containmentPairs(emptyDocs, "doc_id", "text",
-                                     n = 12, tau = 0.9).count() === 0)
+    assert(containment(emptyDocs, 0.9).count() === 0)
     val single = docs((1L, "a reasonable english sentence here", "en"))
-    assert(DedupOps.containmentPairs(single, "doc_id", "text",
-                                     n = 12, tau = 0.9).count() === 0)
+    assert(containment(single, 0.9).count() === 0)
     val short = docs((1L, "tiny", "en"), (2L, "also tiny", "en"))
-    assert(DedupOps.containmentPairs(short, "doc_id", "text",
-                                     n = 12, tau = 0.5).count() === 0)
+    assert(containment(short, 0.5).count() === 0)
     // the ACTION keeps every doc when nothing pairs — including the
     // un-shingleable ones
     assert(DedupOps.removeContained(short, "doc_id", "text",

@@ -39,8 +39,7 @@ class EntrySpec extends SparkSpec {
     // verified forms for the HLL distincts) ONLY two classes remain:
     // xxhash64-derived values (no DuckDB identity) and LAPACK
     // eigendecompositions, plus the iterative leftmost-greedy BPE merge
-    // state, the encoding-dependent file census, and the GD classifier
-    // (whose model is checksum-pinned in-query instead)
+    // state and the encoding-dependent file census
     val expected = Set(
       // xxhash64 / simhash / MinHash banding internals
       "q_simhash_pairs", "q_fingerprints", "q_ann_topk",

@@ -21,7 +21,7 @@ class KmvSpec extends SparkSpec {
       kmvCount(col("a"), K).as("ca"),
       kmvCount(col("b"), K).as("cb"),
       kmvIntersect(col("a"), col("b"), K).as("inter"),
-      kmvJaccard(col("a"), col("b"), K).as("jac"))
+      expr(s"kmv_jaccard(a, b, $K)").as("jac"))
     val r = df.head()
     assert(r.getAs[Long]("ca") === 100L)
     assert(r.getAs[Long]("cb") === 100L)
@@ -43,7 +43,7 @@ class KmvSpec extends SparkSpec {
     val a = sketchOf(0L until 20000L, 1024)
     val b = sketchOf(10000L until 30000L, 1024)
     val j = Seq((a, b)).toDF("a", "b")
-      .select(kmvJaccard(col("a"), col("b"), 1024)).head().getDouble(0)
+      .select(expr("kmv_jaccard(a, b, 1024)")).head().getDouble(0)
     assert(math.abs(j - 1.0 / 3.0) < 0.08, s"jaccard $j")
     val inter = Seq((a, b)).toDF("a", "b")
       .select(kmvIntersect(col("a"), col("b"), 1024)).head().getLong(0)
@@ -58,7 +58,7 @@ class KmvSpec extends SparkSpec {
                     sketchOf(3500L until 5000L, 256))
     def mergeOf(xs: Seq[Array[Long]]): Seq[Long] =
       xs.map(Tuple1(_)).toDF("s")
-        .agg(kmvMerge(col("s"), 256)).head()
+        .agg(expr("kmv_merge(s, 256)")).head()
         .getAs[scala.collection.Seq[Long]](0).toSeq
     assert(mergeOf(parts) === oneShot)
     assert(mergeOf(parts.reverse) === oneShot)
@@ -115,11 +115,17 @@ class KmvSpec extends SparkSpec {
                        ("b", sketchOf(26L to 75L)),
                        ("c", sketchOf(1000L to 1050L)))
       .toDF("cohort", "sketch")
-    val rows = SketchOps.overlapMatrix(sketches, "cohort", K).collect()
+    sketches.createOrReplaceTempView("kmv_cohorts")
+    val rows = spark.sql(
+      s"""SELECT a.cohort AS cohort_a, b.cohort AS cohort_b,
+         |       kmv_intersect(a.sketch, b.sketch, $K) AS overlap,
+         |       round(kmv_jaccard(a.sketch, b.sketch, $K), 6) AS jaccard
+         |FROM kmv_cohorts a JOIN kmv_cohorts b ON a.cohort < b.cohort
+         |""".stripMargin).collect()
     assert(rows.length === 3) // ab, ac, bc — each unordered pair once
     val ab = rows.find(r => r.getString(0) == "a" && r.getString(1) == "b").get
     assert(ab.getAs[Long]("overlap") === 25L)
-    // the op rounds to 6 decimals (the oracle-portability convention)
+    // rounded to 6 decimals (the oracle-portability convention)
     assert(ab.getAs[Double]("jaccard") === 0.333333)
     val ac = rows.find(r => r.getString(0) == "a" && r.getString(1) == "c").get
     assert(ac.getAs[Long]("overlap") === 0L)

@@ -135,8 +135,8 @@ class NgramPropertySpec extends SparkSpec {
   for ((seed, tau) <- Seq((42, 0.7), (7, 0.5), (2026, 0.9))) {
     test(s"containment self-join ≡ brute force (seed=$seed, tau=$tau)") {
       val docs = corpus(seed, nDocs = 120, nTemplates = 8)
-      val got = DedupOps.containmentPairs(
-          docs.toDF("doc_id", "text"), "doc_id", "text", n = 8, tau = tau)
+      val got = DedupOps.containmentPairsFromSets(DedupOps.hashedSets(
+          docs.toDF("doc_id", "text"), "doc_id", "text", 8), tau)
         .as[(Long, Long, Double)].collect().toSet
       val want = bruteContainment(docs, n = 8, tau = tau)
       val missed = want.map(t => (t._1, t._2)) -- got.map(t => (t._1, t._2))
@@ -156,8 +156,8 @@ class NgramPropertySpec extends SparkSpec {
       "alpha2", "bravo2", "charlie2", "delta2", "echo2").mkString(" ")
     val short = long.split(" ").slice(2, 6).mkString(" ")
     val docs = Seq(0L -> long, 1L -> short)
-    val cont = DedupOps.containmentPairs(
-        docs.toDF("doc_id", "text"), "doc_id", "text", n = 8, tau = 0.9)
+    val cont = DedupOps.containmentPairsFromSets(DedupOps.hashedSets(
+        docs.toDF("doc_id", "text"), "doc_id", "text", 8), 0.9)
       .as[(Long, Long, Double)].collect().toSet
     assert(cont === Set((1L, 0L, 1.0)),
       s"expected exactly the directed quotee pair, got $cont")

@@ -225,19 +225,6 @@ class TextDedupSpec extends SparkSpec {
     assert(got(1) === 1)
   }
 
-  test("string-shingle minhash equals hashed-shingle minhash") {
-    import graft.functions.ShingleExpressions
-    val df = Seq("the quick brown fox jumps over the lazy dog").toDF("text")
-    val viaStrings = df.select(
-      DedupOps.minhashSignature(DedupOps.shingles($"text", 5), 16))
-      .as[Seq[Long]].head()
-    val viaHashes = df.select(
-      ShingleExpressions.minhashSigFromHashes(
-        ShingleExpressions.shingleHashes($"text", 5), 16))
-      .as[Seq[Long]].head()
-    assert(viaStrings === viaHashes)
-  }
-
   test("chunkDocs: overlapping windows cover every token") {
     val doc = (1 to 95).map(i => s"t$i").mkString(" ")
     val got = TextOps.chunkDocs(Seq((1L, doc)).toDF("doc_id", "text"),

@@ -6,7 +6,6 @@ import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.io.Sinks
-import graft.model.TypedTables
 import graft.ops.{CoreOps, TopK}
 
 class TypedAndPropertySpec extends SparkSpec {
@@ -18,32 +17,24 @@ class TypedAndPropertySpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
-  test("typed veneer: Dataset[Event]/[Document]/[Embedding] round-trip") {
-    val ev = TypedTables.events(spark, sfDir)
-    assert(ev.head().event_type.nonEmpty)
-    assert(TypedTables.documents(spark, sfDir).head().text.nonEmpty)
-    assert(TypedTables.embeddings(spark, sfDir).head().embedding.length === 64)
-    // typed aggregation compiles & runs
-    val perType = ev.groupByKey(_.event_type).count().collect().toMap
-    assert(perType.values.sum === ev.count())
-  }
-
   test("topK aggregator equals window top-k (scalable top-k path)") {
     val li = Tables.load(spark, sfDir, "lineitem")
     val w = Window.partitionBy($"l_returnflag")
-      .orderBy($"l_extendedprice".desc, $"l_orderkey".asc)
+      .orderBy($"l_extendedprice".desc, $"l_orderkey".asc,
+               $"l_linenumber".asc)
     val viaWindow = li.withColumn("rn", row_number().over(w))
       .filter($"rn" <= 5)
-      .select($"l_returnflag", $"l_orderkey")
-      .as[(String, Long)].collect().toSet
+      .select($"l_returnflag", $"l_orderkey", $"l_linenumber")
+      .as[(String, Long, Int)].collect().toSet
 
-    val agg = TopK.topKPairs(5)
-    val viaAgg = li.select($"l_returnflag", $"l_extendedprice", $"l_orderkey")
-      .as[(String, Double, Long)]
+    val agg = TopK.topKTriplesOpt(5)
+    val viaAgg = li.select($"l_returnflag", $"l_extendedprice",
+                           $"l_orderkey", $"l_linenumber")
+      .as[(String, Option[Double], Long, Int)]
       .groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
+      .mapValues(r => (r._2, r._3, r._4))
       .agg(agg.toColumn.name("top"))
-      .flatMap { case (rf, top) => top.map(t => (rf, t._2)) }
+      .flatMap { case (rf, top) => top.map(t => (rf, t._2, t._3)) }
       .collect().toSet
     assert(viaAgg === viaWindow)
   }
